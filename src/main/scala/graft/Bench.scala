@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: times every SparkEntry query on SPARK_GRAFT_SF_DIR and
   * prints the per-query JSON line followed by a compact totals-only summary
@@ -65,30 +64,21 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      // r16 note: a global 64 KB AQE coalescing floor was tried here for
-      // the explode-heavy stages (wedge/pair expansions hide CPU work
-      // behind byte-small exchanges) and REJECTED by measurement: it
-      // helped those (g_triangles 10.1->8.6 s) but doubled every
-      // tiny-frame iterative loop (g_temporal_reach 8.2->16.3 s,
-      // six-query loop set 43.9->63.3 s) — the floor multiplies task
-      // count on KB-sized round frames. Expansion parallelism is now
-      // fixed inside the operators themselves (GraphAlgos.spreadCut).
-      // events.parquet carries INT64 TIMESTAMP(NANOS); see graft.catalog.Q.t
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    // r16 note: a global 64 KB AQE coalescing floor was tried on this
+    // session for the explode-heavy stages (wedge/pair expansions hide CPU
+    // work behind byte-small exchanges) and REJECTED by measurement: it
+    // helped those (g_triangles 10.1->8.6 s) but doubled every
+    // tiny-frame iterative loop (g_temporal_reach 8.2->16.3 s,
+    // six-query loop set 43.9->63.3 s) — the floor multiplies task
+    // count on KB-sized round frames. Expansion parallelism is now
+    // fixed inside the operators themselves (GraphAlgos.spreadCut).
+    //
     // Experiment hook: SPARK_GRAFT_CONF="k=v;k=v" overlays session confs.
     // The driver never sets it, so the recorded artifact always reflects
-    // the shipped defaults above.
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.contains("="))
-      .foreach { kv => val Array(k, v) = kv.split("=", 2); builder.config(k, v) })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the shipped defaults of Graft.session.
+    val spark = Graft.session(sys.env.get("SPARK_GRAFT_CONF").toSeq
+      .flatMap(_.split(";").filter(_.contains("=")))
+      .map { kv => val Array(k, v) = kv.split("=", 2); k -> v })
     // Warm the session (codegen, parquet footers, page cache) so the first
     // timed query doesn't absorb one-time startup cost.
     Seq("lineitem", "orders", "customer", "events", "documents", "embeddings")
@@ -214,7 +204,7 @@ object Bench {
       .sorted
     val spreadMedian = if (spreads.isEmpty) 1.0 else spreads(spreads.size / 2)
     val contended =
-      spreadMedian > 2.0 || loadSamples.exists(_ > 1.5 * cpus.toDouble)
+      spreadMedian > 2.0 || loadSamples.exists(_ > 1.5 * Graft.cpus)
     val loads = loadSamples.map(f3).mkString("[", ",", "]")
     // Round-7 verdict #1: the driver's artifact capture keeps only the TAIL
     // of stdout, and the per-round blob (rounds x |catalog| floats) pushed

@@ -1,14 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit utility: prints `explain("formatted")` for selected catalog
   * queries so scan pruning (PushedFilters/ReadSchema), join strategies
   * (BroadcastHashJoin vs SortMergeJoin) and WholeStageCodegen spans can be
   * inspected and recorded in SCALE.md.
   *
   * Usage: `runMain graft.Explain [queryName ...]` (default: a spread of
-  * representative shapes) with SPARK_GRAFT_SF_DIR (default sf0.01).
+  * representative shapes) with SPARK_GRAFT_SF_DIR (default sf0.01). Plans
+  * come from [[Graft.session]], the conf `Bench` times.
   */
 object Explain {
   def main(args: Array[String]): Unit = {
@@ -16,15 +15,7 @@ object Explain {
     val names = if (args.nonEmpty) args.toSeq
       else Seq("s1_scan_prune", "j2_broadcast_dim", "j1_orders_per_nation",
         "o2_topk_customers", "q1_pricing_summary", "v_lsh_ann")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Graft.session()
     // SPARK_GRAFT_PLAN_DIR: also write each plan to <dir>/<name><suffix>.txt
     // (suffix from SPARK_GRAFT_PLAN_SUFFIX, e.g. "_after") so the committed
     // plans/r16/ evidence files are produced by the same harness that

@@ -1,31 +1,22 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Measurement harness (optimization guide §1): runs named catalog queries
   * once warm (sf0.001 sibling) and once timed, with a SparkListener that
   * attributes wall time to jobs vs driver-side gaps (planning, AQE
   * re-optimization, checkpoint bookkeeping). Per query prints:
-  *   total_s, n_jobs, n_stages, n_tasks, job_s (sum of job wall), gap_s
-  *   (wall not covered by any job = driver work), top 5 jobs by duration.
+  *   total_s, n_jobs, n_stages, n_tasks, job_s (wall covered by at least
+  *   one job), gap_s (wall not covered by any job = driver work), top 5
+  *   jobs by duration.
   *
   * Usage: `runMain graft.Profile q1 q2 ...` with SPARK_GRAFT_SF_DIR
-  * (default sf0.1) and SPARK_GRAFT_CPUS (default 32).
+  * (default sf0.1) and SPARK_GRAFT_CPUS (default: every core).
   */
 object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.session()
     val warmDir = {
       val p = java.nio.file.Paths.get(sfDir)
       Option(p.getParent).map(_.resolve("sf0.001").toString)
@@ -81,22 +72,26 @@ object Profile {
       collecting = false
       val js = jobs.values().toArray(Array.empty[JobRec]).sortBy(_.start)
       val done = js.filter(_.end > 0)
-      val jobS = done.map(j => (j.end - j.start) / 1e3).sum
-      // gap: wall time not inside any job interval, including before the
-      // first job and after the last (driver work: planning, AQE, collect)
-      var gapMs = 0.0
+      // job time is the UNION of job intervals inside the wall: AQE runs
+      // independent query stages as concurrent jobs, so summing their
+      // durations can exceed the wall. gap is the rest of the wall,
+      // including before the first job and after the last (driver work:
+      // planning, AQE, collect), so job_s + gap_s = wall.
+      var jobMs = 0L
       var prevEnd = w0
       done.foreach { j =>
-        if (j.start > prevEnd) gapMs += (j.start - prevEnd)
+        val from = math.max(j.start, prevEnd)
+        val to = math.min(j.end, w1)
+        if (to > from) jobMs += to - from
         prevEnd = math.max(prevEnd, j.end)
       }
-      if (w1 > prevEnd) gapMs += (w1 - prevEnd)
+      val gapMs = (w1 - w0) - jobMs
       val top = done.sortBy(j => -(j.end - j.start)).take(5)
         .map(j => f"job${j.id}%d:${(j.end - j.start) / 1e3}%.2fs/${j.stages}%dst/${j.tasks}%dtk")
         .mkString(" ")
       println(f"PROFILE $name%-28s total=${totalS}%6.2fs jobs=${done.length}%3d " +
         f"stages=${done.map(_.stages).sum}%4d tasks=${done.map(_.tasks).sum}%5d " +
-        f"job_s=${jobS}%6.2f gap_s=${gapMs / 1e3}%6.2f | $top")
+        f"job_s=${jobMs / 1e3}%6.2f gap_s=${gapMs / 1e3}%6.2f | $top")
     }
     spark.stop()
   }

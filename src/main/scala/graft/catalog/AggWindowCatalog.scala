@@ -6744,7 +6744,6 @@ object AggWindowCatalog {
       // the Spark-computed flag and the row goes red. The exact
       // quantile columns keep the row non-vacuous on their own.
       (s, d) => {
-        graft.functions.GkQuantileAgg.register(s)
         def est(r: String) =
           s"""element_at(ts, try_element_at(filter(
                sequence(1, size(ts)), i ->

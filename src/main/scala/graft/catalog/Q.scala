@@ -21,19 +21,6 @@ final case class Q(
     oracle: Option[String])
 
 object Q {
-  /** Read one of the driver-generated tables (see TESTDATA.md).
-    *
-    * `events.ts` has shipped under two physical types across driver data
-    * generations, so normalize it to a session-zoned TimestampType here and
-    * let every catalog query assume that one shape:
-    *  - INT64 TIMESTAMP(NANOS): Spark's parquet reader rejects it outright
-    *    (PARQUET_TYPE_ILLEGAL); read it as a long via the legacy nanosAsLong
-    *    conf and convert with exact integer arithmetic (`div`, not `/` — ns
-    *    since epoch exceeds the 2^53 double-exact range);
-    *  - TIMESTAMP(MICROS) without isAdjustedToUTC: arrives as
-    *    TIMESTAMP_NTZ; cast to TimestampType (the UTC session zone keeps the
-    *    wall clock identical to DuckDB's naive rendering of the same file).
-    */
   /** Deterministic scratch root for catalog queries that exercise the
     * on-disk state machinery (VersionedStore / Compaction): keyed by
     * (query, data dir) so concurrent Verify runs over different SFs
@@ -88,7 +75,24 @@ object Q {
     try body finally s.conf.set(k, prev)
   }
 
+  /** Read one of the driver-generated tables (see TESTDATA.md).
+    *
+    * `events.ts` has shipped under two physical types across driver data
+    * generations, so normalize it to a session-zoned TimestampType here and
+    * let every catalog query assume that one shape:
+    *  - INT64 TIMESTAMP(NANOS): Spark's parquet reader rejects it outright
+    *    (PARQUET_TYPE_ILLEGAL); read it as a long via the legacy nanosAsLong
+    *    conf and convert with exact integer arithmetic (`div`, not `/` — ns
+    *    since epoch exceeds the 2^53 double-exact range);
+    *  - TIMESTAMP(MICROS) without isAdjustedToUTC: arrives as
+    *    TIMESTAMP_NTZ; cast to TimestampType (the UTC session zone keeps the
+    *    wall clock identical to DuckDB's naive rendering of the same file).
+    *
+    * Every catalog query reads through here, so this is also where the
+    * session gets the native functions and strategy ([[graft.Graft.install]]).
+    */
   def t(s: SparkSession, dir: String, name: String): DataFrame = {
+    graft.Graft.install(s)
     val df = {
       if (name == "events")
         s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -192,7 +192,7 @@ object RelationalCatalog {
       // still applies the exact predicate (pruning is file-level) and
       // the oracle filters the RAW table: green = prune ∘ filter ≡
       // filter over the clustered rewrite. Files-skipped evidence at
-      // scale: graft.ZOrderScale / ZSCALE artifacts.
+      // scale: SCALE.md §2b-xiii / `ZOSCALE_r11_*.json`.
       (s, d) => {
         import graft.sources.ZoneMap
         val root = Q.scratch(s, d, "z2")

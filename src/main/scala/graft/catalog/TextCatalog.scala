@@ -168,7 +168,6 @@ object TextCatalog {
   private def minhashBase(s: org.apache.spark.sql.SparkSession, d: String)
       : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) =
     minhashPins.computeIfAbsent(s.sparkContext.applicationId + ":" + d, _ => {
-      graft.functions.CharNGrams.register(s)
       val docs = spread(t(s, d, "documents")).withColumn("norm", expr(sparkNorm))
       val shingles = docs
         .select(col("doc_id"), explode(expr("char_ngrams(norm, 5)")).as("sh"))
@@ -206,7 +205,6 @@ object TextCatalog {
     * headroom argument. */
   private def charlmDocScores(
       s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame = {
-    graft.functions.CharNGrams.register(s)
     val docs = spread(t(s, d, "documents"))
       .withColumn("norm", expr(sparkNorm))
       .filter(expr("length(norm) >= 2"))
@@ -401,7 +399,6 @@ object TextCatalog {
       // (codegen'd fused loop); for documents >= 5 chars it matches the
       // declarative sequence+substring form the oracle uses.
       (s, d) => {
-        graft.functions.CharNGrams.register(s)
         t(s, d, "documents")
           .withColumn("norm", expr(sparkNorm))
           .select(col("doc_id"),
@@ -1047,7 +1044,6 @@ object TextCatalog {
       // list_reduce Horner steps — identical values, so the parity also
       // proves the rolling recurrence against the direct definition.
       (s, d) => {
-        graft.functions.RollingHash.register(s)
         t(s, d, "documents")
           .withColumn("a", expr(s"regexp_replace($sparkNorm, '[^\\\\x00-\\\\x7f]', '')"))
           .withColumn("hs", expr("rolling_hash(a, 8)"))
@@ -1079,7 +1075,6 @@ object TextCatalog {
       // suppressing only consecutive repeats — a superset of the classic
       // selection with the same guarantee.)
       (s, d) => {
-        graft.functions.RollingHash.register(s)
         t(s, d, "documents")
           .withColumn("a", expr(s"regexp_replace($sparkNorm, '[^\\\\x00-\\\\x7f]', '')"))
           .withColumn("hs", expr("rolling_hash(a, 8)"))
@@ -1127,7 +1122,6 @@ object TextCatalog {
       // corpus size; the oracle recomputes every window hash O(n*k)
       // from the direct Horner definition.
       (s, d) => {
-        graft.functions.RollingHash.register(s)
         t(s, d, "documents")
           .withColumn("a", expr(s"regexp_replace($sparkNorm, '[^\\\\x00-\\\\x7f]', '')"))
           .withColumn("hs", expr("rolling_hash(a, 8)"))
@@ -4259,7 +4253,6 @@ object TextCatalog {
       // back). At 100 TB this is THE frequent-items plan: the exact
       // groupBy the oracle runs is the thing that stops scaling.
       (s, d) => {
-        graft.functions.MisraGriesAgg.register(s)
         val toks = spread(t(s, d, "documents"))
           .select(explode(split(expr(sparkNorm), " ")).as("w"))
           .filter(length(col("w")) > 0)
@@ -4309,7 +4302,6 @@ object TextCatalog {
       // superset guarantee is machine-checked by the green row, exactly
       // as in x_heavy_hitters.
       (s, d) => {
-        graft.functions.MisraGriesAgg.register(s)
         val toks = spread(t(s, d, "documents"))
           .select(pmod(col("doc_id"), lit(2)).as("win"),
             explode(split(expr(sparkNorm), " ")).as("w"))
@@ -4681,7 +4673,6 @@ object TextCatalog {
       // single-pass byte automaton against the k-pass definition.
       // Published per (source, needle): docs hit + total occurrences.
       (s, d) => {
-        graft.functions.MultiMatch.register(s)
         val ndl = acNeedles.map(n => s"'$n'").mkString(", ")
         t(s, d, "documents")
           .withColumn("counts", expr(s"multi_match($sparkNorm, $ndl)"))
@@ -4963,7 +4954,6 @@ object TextCatalog {
       // Published per source with the diversity ratio in exact ppm of
       // the n(n+1)/2 possible slices.
       (s, d) => {
-        graft.functions.SuffixDistinct.register(s)
         spread(t(s, d, "documents"))
           .withColumn("a", expr("substring(regexp_replace(" +
             s"$sparkNorm, '[^\\\\x00-\\\\x7f]', ''), 1, 64)"))
@@ -5022,7 +5012,6 @@ object TextCatalog {
       // break lexicographically (span unique within a length, so the
       // order is total).
       (s, d) => {
-        graft.functions.SuffixSpans.register(s)
         val base = spread(t(s, d, "documents"))
           .withColumn("a", expr("substring(regexp_replace(" +
             s"$sparkNorm, '[^\\\\x00-\\\\x7f]', ''), 1, 200)"))
@@ -5084,7 +5073,6 @@ object TextCatalog {
       // and a summed md5-prefix fingerprint of the rewritten text —
       // byte-level equality of every rewrite, not just counts.
       (s, d) => {
-        graft.functions.MultiReplace.register(s)
         val ndl = mrNeedles.map(n => s"'$n'").mkString(", ")
         spread(t(s, d, "documents"))
           .withColumn("mr", expr(s"multi_replace($sparkNorm, '_', $ndl)"))
@@ -5410,7 +5398,6 @@ object TextCatalog {
       // length — so green proves the automaton walk against the
       // slice-set semantics (the x_distinct_substrings recipe, squared).
       (s, d) => {
-        graft.functions.SuffixLcs.register(s)
         val docs = spread(t(s, d, "documents"))
           .withColumn("a", expr("substring(regexp_replace(" +
             s"$sparkNorm, '[^\\\\x00-\\\\x7f]', ''), 1, 32)"))

@@ -65,7 +65,6 @@ object VectorCatalog {
 
     Q("v_cosine_topk",
       (s, d) => {
-        graft.functions.DotProduct.register(s)
         val e = t(s, d, "embeddings")
           .select(col("vec_id"), col("embedding").as("v"),
             expr("sqrt(dot_product(embedding, embedding))").as("nrm"))
@@ -102,7 +101,6 @@ object VectorCatalog {
 
     Q("v_lsh_ann",
       (s, d) => {
-        graft.functions.DotProduct.register(s)
         val e = t(s, d, "embeddings")
           .select(col("vec_id"), col("embedding").as("v"),
             expr("sqrt(dot_product(embedding, embedding))").as("nrm"),
@@ -134,7 +132,6 @@ object VectorCatalog {
 
     Q("v_knn_label",
       (s, d) => {
-        graft.functions.DotProduct.register(s)
         val e = t(s, d, "embeddings")
           .select(col("vec_id"), col("label"), col("embedding").as("v"),
             expr("sqrt(dot_product(embedding, embedding))").as("nrm"))
@@ -191,7 +188,6 @@ object VectorCatalog {
       // At 100 TB the plan is Q x n (linear in the corpus, Q fixed
       // eval points), never the quadratic the naive definition hides.
       (s, d) => {
-        graft.functions.DotProduct.register(s)
         val k = 5
         val e = t(s, d, "embeddings")
           .select(col("vec_id"), col("label"), col("embedding").as("v"),
@@ -655,7 +651,6 @@ object VectorCatalog {
       // vectors are random (measured max cosine 0.51 at sf0.01), so the
       // threshold sits at the observed tail to keep the flag exercised.
       (s, d) => {
-        graft.functions.DotProduct.register(s)
         val e = t(s, d, "embeddings")
           .select(col("vec_id"), col("embedding").as("v"),
             expr("sqrt(dot_product(embedding, embedding))").as("nrm"),
@@ -696,7 +691,6 @@ object VectorCatalog {
       // all-pairs: the bucket join is the blocking key, exactly the
       // batch near-dup shape.
       (s, d) => {
-        graft.functions.DotProduct.register(s)
         val e = t(s, d, "embeddings")
           .select(col("vec_id"), col("embedding").as("v"),
             expr("sqrt(dot_product(embedding, embedding))").as("nrm"),
@@ -747,7 +741,6 @@ object VectorCatalog {
       // as every IVF query; one broadcast-centroid pass + a 8-row
       // aggregate.
       (s, d) => {
-        graft.functions.DotProduct.register(s)
         val e = t(s, d, "embeddings")
           .select(col("vec_id"), col("embedding").as("v"),
             expr("sqrt(dot_product(embedding, embedding))").as("nrm"))
@@ -802,7 +795,6 @@ object VectorCatalog {
       // guaranteed-3-rows-per-query output proves away. Same
       // deterministic ranking discipline as every v_* query.
       (s, d) => {
-        graft.functions.DotProduct.register(s)
         val e = t(s, d, "embeddings")
           .select(col("vec_id"), col("label"), col("embedding").as("v"),
             expr("sqrt(dot_product(embedding, embedding))").as("nrm"))
@@ -854,7 +846,6 @@ object VectorCatalog {
       // operating point. Counts are integers; cosine-vs-literal
       // compares see identical doubles on both engines.
       (s, d) => {
-        graft.functions.DotProduct.register(s)
         val e = t(s, d, "embeddings")
           .select(col("vec_id"), col("embedding").as("v"),
             expr("sqrt(dot_product(embedding, embedding))").as("nrm"),
@@ -921,7 +912,6 @@ object VectorCatalog {
       // The cell id is the partition key of every downstream join — the
       // layout that scales to billions of vectors.
       (s, d) => {
-        graft.functions.DotProduct.register(s)
         val e = t(s, d, "embeddings")
           .select(col("vec_id"), col("embedding").as("v"),
             expr("sqrt(dot_product(embedding, embedding))").as("nrm"))
@@ -992,7 +982,6 @@ object VectorCatalog {
       // corpus², and it is the only honest way to measure what the
       // nprobe/ncells trade-off forfeits.
       (s, d) => {
-        graft.functions.DotProduct.register(s)
         val e = t(s, d, "embeddings")
           .select(col("vec_id"), col("embedding").as("v"),
             expr("sqrt(dot_product(embedding, embedding))").as("nrm"))
@@ -1093,7 +1082,6 @@ object VectorCatalog {
       // top-3 differs. Hits and recall are integers (ppm), immune to
       // float-sum order on both engines.
       (s, d) => {
-        graft.functions.DotProduct.register(s)
         val e = t(s, d, "embeddings")
           .select(col("vec_id"), col("embedding").as("v"),
             expr("sqrt(dot_product(embedding, embedding))").as("nrm"))
@@ -2071,7 +2059,6 @@ object VectorCatalog {
       // are integers; the rerank reuses the dot_product kernel whose
       // left-to-right fold matches list_dot_product to the ulp.
       (s, d) => {
-        graft.functions.DotProduct.register(s)
         val cand = hammingCandidates(s, d)
         exactRerank(s, d, cand, Seq("hamming"))
       },
@@ -2124,7 +2111,6 @@ object VectorCatalog {
       // list_dot_product), so scores are bit-identical; the coarse rank
       // is carried as the integer prn.
       (s, d) => {
-        graft.functions.DotProduct.register(s)
         val cand = prefixCandidates(s, d)
         exactRerank(s, d, cand, Seq("prn"))
       },
@@ -2167,7 +2153,6 @@ object VectorCatalog {
       // v_hamming_ann / v_mrl_prefix_ann), the fusion is a (q, c)-keyed
       // full outer join of two 32-row-per-query lists.
       (s, d) => {
-        graft.functions.DotProduct.register(s)
         val h = hammingCandidates(s, d)
           .withColumn("r_ham", row_number().over(
             Window.partitionBy("q_id").orderBy(col("hamming").asc, col("c_id").asc)))
@@ -2261,7 +2246,6 @@ object VectorCatalog {
       // dot_product kernel — the VectorCatalog ulp contract), ties by
       // neighbor id everywhere.
       (s, d) => {
-        graft.functions.DotProduct.register(s)
         val K = 10; val R = 4; val QN = 30
         val e0 = t(s, d, "embeddings")
           .select(col("vec_id").as("id"), col("embedding").as("v"),
@@ -2396,7 +2380,6 @@ object VectorCatalog {
       // runs on the bounded top-N frame (retrieval already happened),
       // k constant rounds of bounded joins; the corpus never appears.
       (s, d) => {
-        graft.functions.DotProduct.register(s)
         val e = t(s, d, "embeddings")
           .select(col("vec_id"), col("embedding").as("v"),
             expr("sqrt(dot_product(embedding, embedding))").as("nrm"))
@@ -2442,7 +2425,6 @@ object VectorCatalog {
       // the classic bound. Scale: k linear passes, each one 1-row
       // broadcast + argmax aggregate; no pairwise matrix anywhere.
       (s, d) => {
-        graft.functions.DotProduct.register(s)
         val pts = t(s, d, "embeddings")
           .select(col("vec_id").as("id"), col("embedding").as("v"),
             expr("sqrt(dot_product(embedding, embedding))").as("nrm"))

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -62,20 +61,4 @@ case class CharNGrams(child: Expression, n: Int) extends UnaryExpression {
 
   override protected def withNewChildInternal(newChild: Expression): CharNGrams =
     copy(child = newChild)
-}
-
-object CharNGrams {
-  /** Register `char_ngrams(str, n)` for SQL/expr use (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "char_ngrams",
-      exprs => {
-        require(exprs.length == 2, "char_ngrams(str, n) takes two arguments")
-        val n = exprs(1) match {
-          case Literal(v: Int, IntegerType) => v
-          case other => other.eval().asInstanceOf[Int]
-        }
-        CharNGrams(exprs.head, n)
-      },
-      "built-in")
 }

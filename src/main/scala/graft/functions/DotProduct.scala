@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -96,16 +95,4 @@ case class DotProduct(left: Expression, right: Expression) extends BinaryExpress
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): DotProduct =
     copy(left = newLeft, right = newRight)
-}
-
-object DotProduct {
-  /** Register `dot_product(a, b)` for SQL/expr use (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_product",
-      exprs => {
-        require(exprs.length == 2, "dot_product(a, b) takes two arguments")
-        DotProduct(exprs.head, exprs(1))
-      },
-      "built-in")
 }

@@ -4,7 +4,6 @@ import java.nio.ByteBuffer
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -285,14 +284,4 @@ object GkQuantileAgg {
     out += pend
     out.toArray
   }
-
-  /** Register `gk_quantile(x, eps_denom)` for SQL/expr use (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "gk_quantile",
-      exprs => {
-        require(exprs.length == 2, "gk_quantile(x, eps_denom) takes two arguments")
-        GkQuantileAgg(exprs(0), exprs(1))
-      },
-      "built-in")
 }

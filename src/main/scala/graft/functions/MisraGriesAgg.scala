@@ -5,7 +5,6 @@ import java.nio.charset.StandardCharsets
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -165,16 +164,4 @@ case class MisraGriesAgg(
       newChildren: IndexedSeq[Expression]): MisraGriesAgg =
     copy(child = newChildren(0), kExpr = newChildren(1))
   override def prettyName: String = "mg_topk"
-}
-
-object MisraGriesAgg {
-  /** Register `mg_topk(item, k)` for SQL/expr use (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "mg_topk",
-      exprs => {
-        require(exprs.length == 2, "mg_topk(item, k) takes two arguments")
-        MisraGriesAgg(exprs(0), exprs(1))
-      },
-      "built-in")
 }

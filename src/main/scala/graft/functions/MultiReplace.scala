@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -231,9 +230,4 @@ object MultiReplace {
     }
     MultiReplace(exprs.head, consts.head, consts.tail)
   }
-
-  /** Register `multi_replace(str, repl, needles...)` (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "multi_replace", build, "built-in")
 }

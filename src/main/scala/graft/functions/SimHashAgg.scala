@@ -2,7 +2,6 @@ package graft.functions
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -103,17 +102,4 @@ case class SimHashAgg(
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): SimHashAgg = copy(child = newChildren.head)
   override def prettyName: String = "simhash_agg"
-}
-
-object SimHashAgg {
-  /** Register `simhash_agg(md5hex)` for SQL/expr use (idempotent); the
-    * analyzer wraps the raw AggregateFunction in an AggregateExpression. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash_agg",
-      exprs => {
-        require(exprs.length == 1, "simhash_agg(md5hex) takes one argument")
-        SimHashAgg(exprs.head)
-      },
-      "built-in")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.types._
@@ -107,9 +106,4 @@ object SuffixDistinct {
     require(exprs.length == 1, "suffix_distinct(str) takes one argument")
     SuffixDistinct(exprs.head)
   }
-
-  /** Register `suffix_distinct(str)` for SQL/expr use (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "suffix_distinct", build, "built-in")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.types._
@@ -116,9 +115,4 @@ object SuffixLcs {
     require(exprs.length == 2, "suffix_lcs(a, b) takes two arguments")
     SuffixLcs(exprs(0), exprs(1))
   }
-
-  /** Register `suffix_lcs(a, b)` for SQL/expr use (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "suffix_lcs", build, "built-in")
 }

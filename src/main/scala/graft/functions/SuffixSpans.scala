@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -154,9 +153,4 @@ object SuffixSpans {
     require(v != null, "suffix_spans: NULL span length")
     SuffixSpans(exprs.head, v.asInstanceOf[Int])
   }
-
-  /** Register `suffix_spans(str, len)` for SQL/expr use (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "suffix_spans", build, "built-in")
 }

@@ -43,7 +43,7 @@ object Curation {
     * doc's distinct tokens, computed by the native `simhash_agg`
     * TypedImperativeAggregate (map-side partial, no 63x explode). */
   def simhashTable(docs: DataFrame): DataFrame = {
-    graft.functions.SimHashAgg.register(docs.sparkSession)
+    graft.Graft.install(docs.sparkSession)
     docs
       .withColumn("norm", expr(NormSql))
       .select(col("doc_id"), col("source"),

@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   *   shuffle_salted  — a side's hottest key carries ≥ `skewFactor`× the
   *                     mean per-key load, so a plain hash join would
   *                     straggle on one task (the planted-skew regime
-  *                     SkewScale measures; salting/AQE-skew is the fix);
+  *                     SCALE.md §2g measured; salting/AQE-skew is the fix);
   *   shuffle         — otherwise: plain hash-partitioned join.
   *
   * Every profile is aggregation-only (groupBy key → 1-row fold): two

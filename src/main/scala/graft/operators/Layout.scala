@@ -100,8 +100,8 @@ object Layout {
     * ([[graft.sources.ZoneMap]]) is tight on BOTH columns at once and
     * an interval predicate on either (or both, conjunctively) prunes
     * most of the file list. This is the measurable claim Delta's
-    * ZORDER BY / Iceberg's sort-order rewrite make; evidence harness:
-    * `graft.ZOrderScale`.
+    * ZORDER BY / Iceberg's sort-order rewrite make; evidence: SCALE.md
+    * §2b-xiii and `ZOSCALE_r11_*.json`.
     *
     * Nulls bucket to 0 (co-located with the column's minimum — they
     * cannot be range-pruned anyway, the sidecar's null contract covers

@@ -31,7 +31,7 @@ object Similarity {
   /** Exact cosine top-k of `queries` against `candidates` (both
     * (id, embedding) shaped); returns (q_id, rn, neighbor_id, cosine). */
   def bruteForceTopK(candidates: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    graft.functions.DotProduct.register(queries.sparkSession)
+    graft.Graft.install(queries.sparkSession)
     val q = queries.select(col("vec_id").as("q_id"), col("embedding").as("qv"),
       expr("sqrt(dot_product(embedding, embedding))").as("qn"))
     val c = candidates.select(col("vec_id").as("c_id"), col("embedding").as("cv"),
@@ -51,7 +51,7 @@ object Similarity {
     * closest to it. */
   def ivfTopK(embeddings: DataFrame, queryIds: Seq[Long], k: Int,
       nCells: Int = 8, nProbe: Int = 2): DataFrame = {
-    graft.functions.DotProduct.register(embeddings.sparkSession)
+    graft.Graft.install(embeddings.sparkSession)
     val withVec = embeddings
       .withColumn("v", array_to_vector(expr("transform(embedding, x -> CAST(x AS double))")))
     val model = new KMeans().setK(nCells).setSeed(42L)
@@ -97,7 +97,7 @@ object Similarity {
   def minHashCandidatePairs(documents: DataFrame, maxDistance: Double,
       numHashTables: Int = 8): DataFrame = {
     val spark = documents.sparkSession
-    graft.functions.CharNGrams.register(spark)
+    graft.Graft.install(spark)
     val shingled = documents
       .withColumn("norm", expr("regexp_replace(lower(trim(text)), '\\\\s+', ' ')"))
       .withColumn("shingles", expr("array_distinct(char_ngrams(norm, 5))"))

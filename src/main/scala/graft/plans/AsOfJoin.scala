@@ -11,8 +11,8 @@ import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
 /** AS-OF JOIN as a first-class operator — the full custom-operator
   * ladder (SURVEY.md §7.3 mechanism (c)): a logical plan node, a
   * planner [[SparkStrategy]], and a physical [[AsOfJoinExec]], wired
-  * into a session either via [[GraftExtensions]] or
-  * `spark.experimental.extraStrategies`.
+  * into a session either via [[GraftExtensions]] or by
+  * [[graft.Graft.install]] (which [[AsOf.join]] calls).
   *
   * Semantics: for every left row, append the right row with the same
   * key and the greatest timestamp STRICTLY BEFORE the left timestamp
@@ -153,9 +153,7 @@ object AsOf {
   def join(left: DataFrame, right: DataFrame, key: String, ts: String,
       rightPrefix: String = "r_"): DataFrame = {
     val spark = left.sparkSession
-    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfJoinStrategy
+    graft.Graft.install(spark)
     val r = right.toDF(right.columns.map(rightPrefix + _): _*)
     def attr(df: DataFrame, name: String): Attribute =
       df.queryExecution.analyzed.output.find(_.name == name).getOrElse(

@@ -1,14 +1,9 @@
 package graft.plans
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.types.IntegerType
-
-import graft.functions.{CharNGrams, DotProduct, MultiMatch, RollingHash, SimHashAgg, SuffixDistinct}
 
 /** Optimizer rule guarding the near-dup self-join pathology (SURVEY.md
   * §7.3 mechanism (c): a `Rule[LogicalPlan]` injected via
@@ -161,52 +156,16 @@ object AdvisedJoinHints extends Rule[LogicalPlan] {
     }
 }
 
-/** Session extension bundle: the self-join guard rule plus permanent
-  * registrations of the native functions (`char_ngrams`, `simhash_agg`),
-  * so `spark.sql(...)` sees them without per-query register() calls.
-  * Activate with `--conf spark.sql.extensions=graft.plans.GraftExtensions`
-  * or `SparkSession.builder().withExtensions(new GraftExtensions)`. */
+/** Session extension bundle: the self-join guard and advised-join rules,
+  * the as-of join strategy and every native function of
+  * [[graft.Graft.functions]], so `spark.sql(...)` sees them from the first
+  * query. Activate with `--conf spark.sql.extensions=graft.plans.GraftExtensions`
+  * or `withExtensions(new GraftExtensions)` on a session builder. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(_ => SelfJoinMergeHint)
     ext.injectOptimizerRule(_ => AdvisedJoinHints)
     ext.injectPlannerStrategy(_ => AsOfJoinStrategy)
-    ext.injectFunction((
-      new FunctionIdentifier("char_ngrams"),
-      new ExpressionInfo(classOf[CharNGrams].getName, "char_ngrams"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 2, "char_ngrams(str, n) takes two arguments")
-        val n = exprs(1) match {
-          case Literal(v: Int, IntegerType) => v
-          case other => other.eval().asInstanceOf[Int]
-        }
-        CharNGrams(exprs.head, n)
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("simhash_agg"),
-      new ExpressionInfo(classOf[SimHashAgg].getName, "simhash_agg"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 1, "simhash_agg(md5hex) takes one argument")
-        SimHashAgg(exprs.head)
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("dot_product"),
-      new ExpressionInfo(classOf[DotProduct].getName, "dot_product"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 2, "dot_product(a, b) takes two arguments")
-        DotProduct(exprs.head, exprs(1))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("rolling_hash"),
-      new ExpressionInfo(classOf[RollingHash].getName, "rolling_hash"),
-      (exprs: Seq[Expression]) => RollingHash.build(exprs)))
-    ext.injectFunction((
-      new FunctionIdentifier("multi_match"),
-      new ExpressionInfo(classOf[MultiMatch].getName, "multi_match"),
-      (exprs: Seq[Expression]) => MultiMatch.build(exprs)))
-    ext.injectFunction((
-      new FunctionIdentifier("suffix_distinct"),
-      new ExpressionInfo(classOf[SuffixDistinct].getName, "suffix_distinct"),
-      (exprs: Seq[Expression]) => SuffixDistinct.build(exprs)))
+    graft.Graft.functions.foreach(ext.injectFunction)
   }
 }

@@ -372,7 +372,7 @@ object IncrementalPipeline {
     * part that must be continuous, the verify is cheap because the
     * candidate set is <= k-1 rows. */
   def streamingHeavyHitterCandidates(words: DataFrame, k: Int): DataFrame = {
-    graft.functions.MisraGriesAgg.register(words.sparkSession)
+    graft.Graft.install(words.sparkSession)
     words.agg(expr(s"mg_topk(w, $k)").as("candidates"))
   }
 
@@ -387,7 +387,7 @@ object IncrementalPipeline {
     * watermark merge into their window's counters before it seals. */
   def windowedHeavyHitterCandidates(words: DataFrame, k: Int,
       window: String = "1 hour", watermark: String = "1 hour"): DataFrame = {
-    graft.functions.MisraGriesAgg.register(words.sparkSession)
+    graft.Graft.install(words.sparkSession)
     words.withWatermark("ts", watermark)
       .groupBy(org.apache.spark.sql.functions.window(col("ts"), window))
       .agg(expr(s"mg_topk(w, $k)").as("candidates"))

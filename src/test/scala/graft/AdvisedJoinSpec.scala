@@ -77,7 +77,7 @@ class AdvisedJoinSpec extends AnyFunSuite {
 
   test("planted skew: advisor says shuffle_salted, rule pins the AQE-splittable merge join") {
     withRule {
-      // side A: one hot key carrying half the rows (the SkewScale
+      // side A: one hot key carrying half the rows (the SCALE.md §2g
       // regime); side B: large-but-uniform — NO side is broadcastable
       // under the advisor's config, and a plain pick would straggle on
       // the hot key's one task

@@ -2,7 +2,6 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.functions.CharNGrams
 
 /** The native CharNGrams expression: equivalence with the declarative
   * sequence+substring form, codegen path, and edge cases. */
@@ -11,7 +10,7 @@ class CharNGramsSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("matches the declarative transform(sequence) form on real documents") {
-    CharNGrams.register(spark)
+    Graft.install(spark)
     val docs = graft.catalog.Q.t(spark, "/root/testdata/sf0.001", "documents")
       .select(col("doc_id"), lower(col("text")).as("s"))
     val mismatches = docs
@@ -24,7 +23,7 @@ class CharNGramsSpec extends AnyFunSuite {
   }
 
   test("unicode counts chars not bytes; short/null inputs") {
-    CharNGrams.register(spark)
+    Graft.install(spark)
     val got = Seq(("ab", 1), ("日本語テスト", 2), (null, 3))
       .toDF("s", "id")
       .select(col("id"), expr("char_ngrams(s, 3)").as("g"))
@@ -35,7 +34,7 @@ class CharNGramsSpec extends AnyFunSuite {
   }
 
   test("survives wholestage codegen in an aggregation pipeline") {
-    CharNGrams.register(spark)
+    Graft.install(spark)
     val n = graft.catalog.Q.t(spark, "/root/testdata/sf0.001", "documents")
       .select(explode(expr("char_ngrams(text, 4)")).as("g"))
       .groupBy("g").count().count()

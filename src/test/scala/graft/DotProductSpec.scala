@@ -17,7 +17,7 @@ class DotProductSpec extends AnyFunSuite {
     expr(s"aggregate(zip_with($a, $b, (p, q) -> p * q), 0D, (acc, v) -> acc + v)")
 
   test("bit-identical to the declarative fold on real embeddings") {
-    DotProduct.register(spark)
+    Graft.install(spark)
     val e = graft.catalog.Q.t(spark, "/root/testdata/sf0.001", "embeddings")
       .select(col("vec_id"), col("embedding"),
         expr("transform(embedding, x -> CAST(x AS double))").as("dv"))
@@ -39,7 +39,7 @@ class DotProductSpec extends AnyFunSuite {
   }
 
   test("null array, null element, and length mismatch all yield NULL") {
-    DotProduct.register(spark)
+    Graft.install(spark)
     val rows = Seq(
       (1, Seq[java.lang.Double](1d, 2d), Seq[java.lang.Double](3d, 4d)),   // 11.0
       (2, null, Seq[java.lang.Double](3d, 4d)),                            // null array
@@ -57,7 +57,7 @@ class DotProductSpec extends AnyFunSuite {
   }
 
   test("interpreted eval equals codegen result") {
-    DotProduct.register(spark)
+    Graft.install(spark)
     val df = Seq((Seq(1.5d, -2d, 0.25d), Seq(4d, 0.5d, 8d))).toDF("a", "b")
     val viaCodegen = df.select(expr("dot_product(a, b)")).head.getDouble(0)
     val interpreted = DotProduct(
@@ -73,7 +73,7 @@ class DotProductSpec extends AnyFunSuite {
 
   test("property: random double arrays agree with the fold bit-for-bit") {
     import org.scalacheck.Gen
-    DotProduct.register(spark)
+    Graft.install(spark)
     // magnitudes spanning subnormal-adjacent to large, mixed signs —
     // accumulation-order bugs or a float detour would show here
     val v = Gen.chooseNum(-1e12, 1e12).flatMap(m => Gen.oneOf(m, m * 1e-9))
@@ -91,7 +91,7 @@ class DotProductSpec extends AnyFunSuite {
   }
 
   test("non-array input is rejected at analysis") {
-    DotProduct.register(spark)
+    Graft.install(spark)
     val err = intercept[Exception] {
       Seq((1, 2)).toDF("a", "b").select(expr("dot_product(a, b)")).collect()
     }

@@ -3,12 +3,13 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.catalyst.plans.logical.{Join, JoinHint, SHUFFLE_MERGE}
-import graft.plans.{GraftExtensions, SelfJoinMergeHint}
+import graft.plans.{AsOfJoinStrategy, GraftExtensions, SelfJoinMergeHint}
 
-/** GraftExtensions: the SelfJoinMergeHint optimizer rule and the injected
-  * function builders (SURVEY.md §7.3 mechanism (c)). The rule is applied
-  * directly to optimized plans here; session-level activation is
-  * `--conf spark.sql.extensions=graft.plans.GraftExtensions`. */
+/** The SelfJoinMergeHint optimizer rule (SURVEY.md §7.3 mechanism (c)),
+  * applied directly to optimized plans here, and the native functions
+  * and as-of strategy that `Graft.install` gives a session (the same
+  * table `--conf spark.sql.extensions=graft.plans.GraftExtensions`
+  * injects). */
 class ExtensionsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -57,12 +58,40 @@ class ExtensionsSpec extends AnyFunSuite {
     // session-level path can't be exercised here: a default session
     // already exists and getOrCreate will not re-run extensions)
     new GraftExtensions().apply(new org.apache.spark.sql.SparkSessionExtensions)
-    // builders registered per-session resolve and evaluate through SQL
-    graft.functions.CharNGrams.register(spark)
-    graft.functions.SimHashAgg.register(spark)
+    // the builders the bundle injects are the ones Graft.install registers
+    Graft.install(spark)
     val out = spark.sql(
       "SELECT simhash_agg(md5(t)) AS sig, size(char_ngrams('abcdef', 3)) AS n " +
         "FROM VALUES ('x'), ('y') AS v(t)").collect()(0)
     assert(out.getLong(0) >= 0L && out.getInt(1) == 4)
+  }
+
+  test("Graft.install gives a fresh session every native function and the as-of strategy once") {
+    val fresh = spark.newSession()
+    val dot = "SELECT dot_product(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS r"
+    val missing = intercept[org.apache.spark.sql.AnalysisException](fresh.sql(dot))
+    assert(missing.getMessage.contains("dot_product"), missing.getMessage)
+    Graft.install(fresh)
+    Graft.install(fresh)
+    // one call per table entry, each resolved and run through spark.sql
+    val calls = Map(
+      "char_ngrams" -> "size(char_ngrams('abcdef', 3))",
+      "dot_product" -> "dot_product(array(1.0D, 2.0D), array(3.0D, 4.0D))",
+      "gk_quantile" -> "gk_quantile(n, 16)",
+      "mg_topk" -> "mg_topk(t, 2)",
+      "simhash_agg" -> "simhash_agg(md5(t))",
+      "multi_match" -> "multi_match(t, 'x')",
+      "multi_replace" -> "multi_replace(t, '_', 'x')",
+      "rolling_hash" -> "rolling_hash('abcdefghij', 8)",
+      "suffix_distinct" -> "suffix_distinct(t)",
+      "suffix_lcs" -> "suffix_lcs(t, 'xy')",
+      "suffix_spans" -> "suffix_spans(t, 1)")
+    assert(calls.size == 11 && calls.keySet == Graft.functions.map(_._1.funcName).toSet)
+    calls.values.foreach { call =>
+      assert(fresh.sql(s"SELECT $call AS r FROM VALUES ('x', 1L), ('y', 2L) AS v(t, n)")
+        .collect().nonEmpty, call)
+    }
+    assert(fresh.sql(dot).collect()(0).getDouble(0) == 11.0)
+    assert(fresh.experimental.extraStrategies.count(_ == AsOfJoinStrategy) == 1)
   }
 }

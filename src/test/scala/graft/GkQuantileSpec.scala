@@ -111,7 +111,7 @@ class GkQuantileSpec extends AnyFunSuite {
   }
 
   test("dataframe path: grouped summaries respect the band per group") {
-    GkQuantileAgg.register(spark)
+    Graft.install(spark)
     val rnd = new Random(42)
     val rows = (1 to 12000).map(i => (i % 7, rnd.nextLong() % 10000))
     val df = rows.toDF("k", "x").repartition(13)
@@ -137,7 +137,7 @@ class GkQuantileSpec extends AnyFunSuite {
   }
 
   test("null values ignored; bad eps rejected") {
-    GkQuantileAgg.register(spark)
+    Graft.install(spark)
     val got = Seq[(Int, Option[Long])]((1, Some(5L)), (1, None), (1, Some(9L)))
       .toDF("k", "x")
       .groupBy("k").agg(expr("gk_quantile(x, 16)").as("gk"))

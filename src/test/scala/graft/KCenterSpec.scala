@@ -13,7 +13,7 @@ class KCenterSpec extends AnyFunSuite {
   // planar unit vectors at the given angle (degrees): cosine distance
   // between two = 1 - cos(angle delta), monotone in the delta
   private def ring(idAngles: (Long, Double)*) = {
-    graft.functions.DotProduct.register(spark)
+    Graft.install(spark)
     idAngles.map { case (id, deg) =>
       val rad = math.toRadians(deg)
       (id, Seq(math.cos(rad).toFloat, math.sin(rad).toFloat))

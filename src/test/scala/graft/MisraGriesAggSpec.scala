@@ -2,7 +2,6 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.functions.MisraGriesAgg
 
 /** MisraGriesAgg (`mg_topk`) — the contract is the SUPERSET guarantee:
   * every item with true frequency > n/k appears in the candidate array,
@@ -20,7 +19,7 @@ class MisraGriesAggSpec extends AnyFunSuite {
     (1 to n).flatMap(i => Seq.fill(n / i)(s"item_$i"))
 
   private def candidates(df: org.apache.spark.sql.DataFrame, k: Int): Set[String] = {
-    MisraGriesAgg.register(spark)
+    Graft.install(spark)
     df.agg(expr(s"mg_topk(w, $k)").as("cs"))
       .select(explode(col("cs")).as("w"))
       .collect().map(_.getString(0)).toSet
@@ -63,7 +62,7 @@ class MisraGriesAggSpec extends AnyFunSuite {
     val df = items.toDF("w").repartition(11)
     val k = 25
     val n = items.size
-    MisraGriesAgg.register(spark)
+    Graft.install(spark)
     val cands = df.agg(expr(s"mg_topk(w, $k)").as("cs"))
       .select(explode(col("cs")).as("w"))
     val got = df.join(broadcast(cands), Seq("w"))
@@ -84,7 +83,7 @@ class MisraGriesAggSpec extends AnyFunSuite {
   }
 
   test("nulls are ignored, k < 2 and non-literal k refuse") {
-    MisraGriesAgg.register(spark)
+    Graft.install(spark)
     val df = Seq(Some("a"), None, Some("a"), Some("b")).toDF("w")
     val cand = df.agg(expr("mg_topk(w, 5)").as("cs"))
       .select(explode(col("cs")).as("w"))

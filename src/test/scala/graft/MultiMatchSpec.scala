@@ -20,7 +20,7 @@ class MultiMatchSpec extends AnyFunSuite {
     else (0 to s.length - nd.length).count(i => s.startsWith(nd, i)).toLong
 
   test("dictionary suffix links: one 'scan' reports scan, can, an") {
-    MultiMatch.register(spark)
+    Graft.install(spark)
     val row = Seq("scan").toDF("s")
       .select(expr(s"multi_match(s, ${needles.map("'" + _ + "'").mkString(", ")})").as("c"))
       .collect()(0).getSeq[Long](0)
@@ -30,7 +30,7 @@ class MultiMatchSpec extends AnyFunSuite {
   }
 
   test("overlapping occurrences counted: 'a a a' has two 'a a'") {
-    MultiMatch.register(spark)
+    Graft.install(spark)
     val row = Seq("a a a").toDF("s")
       .select(expr("multi_match(s, 'a a')").as("c"))
       .collect()(0).getSeq[Long](0)
@@ -38,7 +38,7 @@ class MultiMatchSpec extends AnyFunSuite {
   }
 
   test("single pass equals the naive per-needle count on real docs (codegen path)") {
-    MultiMatch.register(spark)
+    Graft.install(spark)
     val ndl = needles.map("'" + _ + "'").mkString(", ")
     val docs = graft.catalog.Q.t(spark, "/root/testdata/sf0.001", "documents")
       .select(expr(graft.operators.Curation.NormSql).as("s"))
@@ -71,7 +71,7 @@ class MultiMatchSpec extends AnyFunSuite {
   }
 
   test("ASCII needles never match across multi-byte characters") {
-    MultiMatch.register(spark)
+    Graft.install(spark)
     // 'é' is 0xC3 0xA9 in UTF-8 — neither byte is ASCII 'a'/'n', but the
     // point is structural: a match of 'an' must not assemble from a
     // continuation byte plus 'n'.
@@ -82,7 +82,7 @@ class MultiMatchSpec extends AnyFunSuite {
   }
 
   test("null in -> null out; bad vocabularies rejected at build") {
-    MultiMatch.register(spark)
+    Graft.install(spark)
     val got = Seq[(String, Int)]((null, 1)).toDF("s", "id")
       .select(expr("multi_match(s, 'x')").as("c")).collect()(0)
     assert(got.isNullAt(0))

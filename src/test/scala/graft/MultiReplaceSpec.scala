@@ -33,7 +33,7 @@ class MultiReplaceSpec extends AnyFunSuite {
   private val needles = Seq("the", "the ", "and ", "with ", "from ")
 
   test("longest wins at a shared start; leftmost wins overall") {
-    MultiReplace.register(spark)
+    Graft.install(spark)
     val rows = Seq("the theory and the end", "thethe the", "with from the ")
       .toDF("s")
       .select(expr(s"multi_replace(s, '_', ${needles.map("'" + _ + "'").mkString(", ")})").as("r"))
@@ -48,7 +48,7 @@ class MultiReplaceSpec extends AnyFunSuite {
   }
 
   test("codegen path equals the naive rewrite on real docs") {
-    MultiReplace.register(spark)
+    Graft.install(spark)
     val ndl = needles.map("'" + _ + "'").mkString(", ")
     val rows = graft.catalog.Q.t(spark, "/root/testdata/sf0.001", "documents")
       .select(expr(graft.operators.Curation.NormSql).as("s"))
@@ -81,7 +81,7 @@ class MultiReplaceSpec extends AnyFunSuite {
   }
 
   test("multi-byte characters copy through untouched") {
-    MultiReplace.register(spark)
+    Graft.install(spark)
     val st = Seq("héllo the wörld the ").toDF("s")
       .select(expr("multi_replace(s, '*', 'the ')").as("r"))
       .collect()(0).getStruct(0)
@@ -90,7 +90,7 @@ class MultiReplaceSpec extends AnyFunSuite {
   }
 
   test("replacement longer than the needle grows the buffer safely") {
-    MultiReplace.register(spark)
+    Graft.install(spark)
     val st = Seq("aaaa").toDF("s")
       .select(expr("multi_replace(s, 'LONGREPL', 'a')").as("r"))
       .collect()(0).getStruct(0)
@@ -99,7 +99,7 @@ class MultiReplaceSpec extends AnyFunSuite {
   }
 
   test("null in -> null out; bad vocabularies rejected at build") {
-    MultiReplace.register(spark)
+    Graft.install(spark)
     val got = Seq[(String, Int)]((null, 1)).toDF("s", "id")
       .select(expr("multi_replace(s, '_', 'x')").as("r")).collect()(0)
     assert(got.isNullAt(0))

@@ -34,7 +34,7 @@ class NnDescentSpec extends AnyFunSuite {
       .toDF("src", "dst")
 
   test("planted clusters recovered from a hostile ring seed") {
-    graft.functions.DotProduct.register(spark)
+    Graft.install(spark)
     val g = NnDescent.knnGraph(planted, ringInit(40), k = 9, rounds = 4)
     val got = g.select("src", "dst").collect()
       .map(r => r.getLong(0) -> r.getLong(1))
@@ -47,7 +47,7 @@ class NnDescentSpec extends AnyFunSuite {
   }
 
   test("neighbor lists are capped at k with contiguous ranks") {
-    graft.functions.DotProduct.register(spark)
+    Graft.install(spark)
     val g = NnDescent.knnGraph(planted, ringInit(40), k = 3, rounds = 2)
     val byNode = g.select("src", "rn").collect()
       .map(r => (r.getLong(0), r.getInt(1))).groupBy(_._1)
@@ -58,7 +58,7 @@ class NnDescentSpec extends AnyFunSuite {
   }
 
   test("identical vectors tie-break by neighbor id") {
-    graft.functions.DotProduct.register(spark)
+    Graft.install(spark)
     val same = (0L until 6L).map(i => (i, Seq.fill(4)(1.0f)))
       .toDF("id", "v")
       .withColumn("v", col("v").cast("array<float>"))
@@ -73,7 +73,7 @@ class NnDescentSpec extends AnyFunSuite {
   }
 
   test("more rounds never lose recall on the planted corpus") {
-    graft.functions.DotProduct.register(spark)
+    Graft.install(spark)
     def recall(rounds: Int): Double = {
       val g = NnDescent.knnGraph(planted, ringInit(40), k = 9, rounds = rounds)
       val hits = g.select("src", "dst").collect().count { r =>

@@ -2,7 +2,6 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.functions.RollingHash
 
 /** The native RollingHash expression: the O(n) rolling recurrence must
   * equal the direct per-window Horner definition, survive codegen, and
@@ -20,7 +19,7 @@ class RollingHashSpec extends AnyFunSuite {
                     0L, (acc, c) -> (acc * 257 + c) % 1000000007))""")
 
   test("rolling recurrence matches the direct Horner definition on real docs") {
-    RollingHash.register(spark)
+    Graft.install(spark)
     val docs = graft.catalog.Q.t(spark, "/root/testdata/sf0.001", "documents")
       .select(regexp_replace(lower(col("text")), "[^\\x00-\\x7f]", "").as("s"))
     val mismatches = docs
@@ -32,7 +31,7 @@ class RollingHashSpec extends AnyFunSuite {
   }
 
   test("short, empty and null inputs") {
-    RollingHash.register(spark)
+    Graft.install(spark)
     val got = Seq(("abcdefgh", 1), ("abc", 2), ("", 3), (null, 4))
       .toDF("s", "id")
       .select(col("id"), expr("rolling_hash(s, 8)").as("h"))
@@ -45,7 +44,7 @@ class RollingHashSpec extends AnyFunSuite {
   }
 
   test("k widens from any integer literal type; non-constant k fails clearly") {
-    RollingHash.register(spark)
+    Graft.install(spark)
     // BIGINT / SMALLINT literals fold and widen to Int
     val viaLong = spark.sql(
       "SELECT rolling_hash('abcdefgh', CAST(8 AS BIGINT)) AS h").collect()(0).getSeq[Long](0)
@@ -66,7 +65,7 @@ class RollingHashSpec extends AnyFunSuite {
   }
 
   test("survives wholestage codegen in an aggregation pipeline") {
-    RollingHash.register(spark)
+    Graft.install(spark)
     val n = graft.catalog.Q.t(spark, "/root/testdata/sf0.001", "documents")
       .select(regexp_replace(lower(col("text")), "[^\\x00-\\x7f]", "").as("s"))
       .select(explode(expr("rolling_hash(s, 8)")).as("h"))
@@ -89,7 +88,7 @@ class RollingHashSpec extends AnyFunSuite {
 
   test("CDC boundaries resynchronize after a prefix edit (the contract " +
     "fixed-size chunking cannot meet)") {
-    RollingHash.register(spark)
+    Graft.install(spark)
     // 40 real docs; perturb each by PREPENDING one char — every
     // fixed-offset chunk would change, but content-defined cuts must
     // realign: tail cuts (expressed as distance from doc END) may lose

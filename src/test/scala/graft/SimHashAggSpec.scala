@@ -2,7 +2,6 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.functions.SimHashAgg
 
 /** SimHashAgg (native TypedImperativeAggregate) semantics:
   *  - bit-for-bit equal to the declarative 63-sum majority formulation
@@ -39,7 +38,7 @@ class SimHashAggSpec extends AnyFunSuite {
     explode(expr("array_distinct(split(text, ' '))")).as("tok"))
 
   test("matches the declarative 63-sum majority formulation") {
-    SimHashAgg.register(spark)
+    Graft.install(spark)
     val got = toks.withColumn("h", md5(col("tok")))
       .groupBy("doc_id").agg(expr("simhash_agg(h)").as("simhash"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -49,7 +48,7 @@ class SimHashAggSpec extends AnyFunSuite {
   }
 
   test("merge path: repartitioned input gives the same signatures") {
-    SimHashAgg.register(spark)
+    Graft.install(spark)
     def run(df: org.apache.spark.sql.DataFrame) =
       df.withColumn("h", md5(col("tok")))
         .groupBy("doc_id").agg(expr("simhash_agg(h)").as("simhash"))
@@ -58,7 +57,7 @@ class SimHashAggSpec extends AnyFunSuite {
   }
 
   test("malformed input fails with a descriptive error, not an index crash") {
-    SimHashAgg.register(spark)
+    Graft.install(spark)
     def runOn(tok: String) =
       Seq(("x", tok)).toDF("doc_id", "h")
         .groupBy("doc_id").agg(expr("simhash_agg(h)")).collect()
@@ -76,7 +75,7 @@ class SimHashAggSpec extends AnyFunSuite {
   }
 
   test("signature geometry: dup identical, near-dup close, unrelated far") {
-    SimHashAgg.register(spark)
+    Graft.install(spark)
     val sig = toks.withColumn("h", md5(col("tok")))
       .groupBy("doc_id").agg(expr("simhash_agg(h)").as("simhash"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap

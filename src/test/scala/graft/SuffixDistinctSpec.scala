@@ -2,7 +2,6 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.functions.SuffixDistinct
 
 /** The native suffix-automaton expression: the O(n) state count must
   * equal the naive all-slices distinct count on real docs and on
@@ -16,7 +15,7 @@ class SuffixDistinctSpec extends AnyFunSuite {
       yield s.substring(i, j)).distinct.size.toLong
 
   test("adversarial strings: unary, periodic, distinct, clone-heavy") {
-    SuffixDistinct.register(spark)
+    Graft.install(spark)
     val cases = Seq("aaaa", "abab", "abcd", "abcabcabc", "banana",
       "aabbaabb", "a", "zyxzyxz")
     val got = cases.toDF("s")
@@ -28,7 +27,7 @@ class SuffixDistinctSpec extends AnyFunSuite {
   }
 
   test("automaton equals the naive distinct-slice count on real docs") {
-    SuffixDistinct.register(spark)
+    Graft.install(spark)
     val rows = graft.catalog.Q.t(spark, "/root/testdata/sf0.001", "documents")
       .select(expr("substring(regexp_replace(lower(trim(text)), " +
         "'[^\\\\x00-\\\\x7f]', ''), 1, 64)").as("s"))
@@ -42,7 +41,7 @@ class SuffixDistinctSpec extends AnyFunSuite {
   }
 
   test("empty and null") {
-    SuffixDistinct.register(spark)
+    Graft.install(spark)
     val got = Seq(("", 1), (null, 2)).toDF("s", "id")
       .select(col("id"), expr("suffix_distinct(s)").as("d"))
       .collect().map(r => r.getInt(0) -> (if (r.isNullAt(1)) None else Some(r.getLong(1)))).toMap

@@ -40,7 +40,7 @@ class SuffixLcsSpec extends AnyFunSuite {
   }
 
   test("dataframe path equals the naive intersection on real doc pairs") {
-    SuffixLcs.register(spark)
+    Graft.install(spark)
     val rows = graft.catalog.Q.t(spark, "/root/testdata/sf0.001", "documents")
       .select(expr("substring(regexp_replace(" +
         graft.operators.Curation.NormSql +
@@ -59,7 +59,7 @@ class SuffixLcsSpec extends AnyFunSuite {
   }
 
   test("null propagates") {
-    SuffixLcs.register(spark)
+    Graft.install(spark)
     val got = Seq[(String, String)]((null, "x")).toDF("a", "b")
       .select(expr("suffix_lcs(a, b)")).collect()(0)
     assert(got.isNullAt(0))

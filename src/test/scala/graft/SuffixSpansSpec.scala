@@ -45,7 +45,7 @@ class SuffixSpansSpec extends AnyFunSuite {
   }
 
   test("dataframe path equals the naive count on real docs") {
-    SuffixSpans.register(spark)
+    Graft.install(spark)
     val rows = graft.catalog.Q.t(spark, "/root/testdata/sf0.001", "documents")
       .select(expr("substring(regexp_replace(" +
         graft.operators.Curation.NormSql +
@@ -63,7 +63,7 @@ class SuffixSpansSpec extends AnyFunSuite {
   }
 
   test("non-constant or null length rejected at build") {
-    SuffixSpans.register(spark)
+    Graft.install(spark)
     val e1 = intercept[Exception] {
       spark.sql("SELECT suffix_spans('ab', id) FROM VALUES (1) AS v(id)").collect()
     }
