@@ -213,8 +213,7 @@ object GraphCatalog {
     // full pass over the edge frame at scale), so both engines pick
     // the same node with zero driver round-trips.
     Q("g_ppr_trade",
-      (s, d) => GraphAlgos.personalizedPageRankMinSource(
-          tradeEdges(s, d).cutLineage(),
+      (s, d) => GraphAlgos.personalizedPageRankMinSource(tradeEdges(s, d),
           iters = prIters, damping = damping.toDouble)
         .select(col("node"),
           floor(col("rank") * lit(1000000) + lit(0.5)).cast("long").as("rank_ppm"))

@@ -53,7 +53,7 @@ object Components {
     */
   def connectedComponents(edges: DataFrame, src: String, dst: String,
       maxIter: Int = 25, checkEvery: Int = 2,
-      localThreshold: Long = 1L << 20): DataFrame = {
+      localThreshold: Long = LocalGate.DefaultRows): DataFrame = {
     // Symmetrize once: propagation below is directional along (s -> d).
     val sym = edges.select(col(src).as("s"), col(dst).as("d"))
       .union(edges.select(col(dst).as("s"), col(src).as("d")))
@@ -65,7 +65,7 @@ object Components {
            org.apache.spark.sql.types.IntegerType => true
       case _ => false
     })
-    if (localThreshold > 0 && integralIds && sym.count() <= localThreshold)
+    if (LocalGate.admits(sym, localThreshold, integralIds))
       return localUnionFind(sym, sym.schema(0).dataType)
     var labels = sym.select(col("s").as("node")).distinct()
       .withColumn("comp", col("node"))

@@ -3,7 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.operators.Lineage.{CutOps, spreadCut}
-import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
+import org.apache.spark.sql.types._
+import scala.jdk.CollectionConverters._
 
 /** Distributed graph analytics over DataFrame edge lists.
   *
@@ -20,10 +21,10 @@ import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
   * otherwise), and node rows never reach the driver outside the
   * explicitly size-gated small-graph paths.
   *
-  * Size gates, like [[Components]]' union-find gate and the broadcast
-  * gates in EdgeBuilder: an iterative distributed loop costs a fixed
-  * number of Spark jobs per round, which dominates wall-clock when the
-  * graph itself is small. Aggregated ENTITY graphs (nations, companies,
+  * Size gates ([[LocalGate]], the one gate of every driver twin, like
+  * the broadcast gates in EdgeBuilder): an iterative distributed loop
+  * costs a fixed number of Spark jobs per round, which dominates
+  * wall-clock when the graph itself is small. Aggregated ENTITY graphs (nations, companies,
   * owners) stay small even when the fact data deriving them is 100 TB —
   * the heavy part is the derivation join, which remains fully
   * distributed; only the iteration collapses to the driver, and only
@@ -55,12 +56,15 @@ object GraphAlgos {
     * + one groupBy(dst), plus (only when the graph HAS dangling nodes —
     * resolved once, up front) a 1-row mass aggregate. Ranks are a
     * node-keyed frame, never driver-side. Lineage is cut every
-    * iteration. Below `localThreshold` edges the iteration runs on the
-    * driver over primitive arrays instead (10 Spark jobs -> 1 collect +
-    * 1 parallelize); the arithmetic is identical.
+    * iteration. The gate comes first: the edge frame is cut and counted,
+    * and at or under `localThreshold` rows ([[LocalGate]]) one collect
+    * hands it to the driver, where node set, out-weights, teleport and
+    * iteration all run over primitive arrays; the arithmetic is
+    * identical. A gated graph costs one cut, one count and one collect.
     *
     * @param edges   directed edges with columns (src, dst, weight);
-    *                weight must be > 0 (use lit(1.0) for unweighted)
+    *                weight must be > 0 (use lit(1.0) for unweighted);
+    *                integral weights are exact on both paths
     * @param iters   fixed iteration count (fixed, not convergence-based,
     *                so results are deterministic and oracle-matchable)
     * @param damping damping factor d, conventionally 0.85
@@ -68,7 +72,7 @@ object GraphAlgos {
     *                count is at most this (0 disables the local path)
     */
   def pageRank(edges: DataFrame, iters: Int = 10, damping: Double = 0.85,
-      localThreshold: Long = 1L << 20): DataFrame =
+      localThreshold: Long = LocalGate.DefaultRows): DataFrame =
     rankWithTeleport(edges, None, iters, damping, localThreshold)
 
   /** Personalized PageRank: the teleport distribution concentrates on
@@ -79,7 +83,7 @@ object GraphAlgos {
     * correction, so ranks always sum to 1. Same iteration and size-gate
     * machinery as [[pageRank]]. */
   def personalizedPageRank(edges: DataFrame, source: Any, iters: Int = 10,
-      damping: Double = 0.85, localThreshold: Long = 1L << 20): DataFrame =
+      damping: Double = 0.85, localThreshold: Long = LocalGate.DefaultRows): DataFrame =
     rankWithTeleport(edges, Some(Some(source)), iters, damping, localThreshold)
 
   /** [[personalizedPageRank]] with the source derived IN the plan as
@@ -90,7 +94,7 @@ object GraphAlgos {
     * the edge frame). Row-identical to
     * `personalizedPageRank(edges, <min node>)`. */
   def personalizedPageRankMinSource(edges: DataFrame, iters: Int = 10,
-      damping: Double = 0.85, localThreshold: Long = 1L << 20): DataFrame =
+      damping: Double = 0.85, localThreshold: Long = LocalGate.DefaultRows): DataFrame =
     rankWithTeleport(edges, Some(None), iters, damping, localThreshold)
 
   /** Shared rank core over a teleport vector t (uniform 1/N, or a point
@@ -105,6 +109,21 @@ object GraphAlgos {
     *        minimum node id, derived in-plan (no driver round-trip) */
   private def rankWithTeleport(edges: DataFrame, source: Option[Option[Any]],
       iters: Int, damping: Double, localThreshold: Long): DataFrame = {
+    val e = edges.select(col("src"), col("dst"), col("weight")).cutLineage()
+    val twinnable = e.schema("src").dataType == e.schema("dst").dataType &&
+      LocalGate.hashableId(e.schema("src").dataType) &&
+      (e.schema("weight").dataType match {
+        case ByteType | ShortType | IntegerType | LongType | FloatType | DoubleType => true
+        case _ => false // decimal shares divide as decimals on the distributed path
+      })
+    if (LocalGate.admits(e, localThreshold, twinnable))
+      localPageRank(e, source, iters, damping)
+    else distributedRank(e, source, iters, damping)
+  }
+
+  /** The distributed rank loop over the cut edge frame `edges`. */
+  private def distributedRank(edges: DataFrame, source: Option[Option[Any]],
+      iters: Int, damping: Double): DataFrame = {
     val nodes0 = edges.select(col("src").as("node"))
       .union(edges.select(col("dst").as("node")))
       .distinct()
@@ -134,8 +153,6 @@ object GraphAlgos {
     val outNorm = edges.join(outW, "src")
       .select(col("src"), col("dst"), (col("weight") / col("out_w")).as("share"))
       .cutLineage()
-    if (localThreshold > 0 && outNorm.count() <= localThreshold)
-      return localPageRank(outNorm, nodes, iters, damping)
     // Dangling nodes (no out-edges) are a property of the GRAPH, not the
     // iteration: resolve the set once; when it's empty (common for
     // aggregated entity graphs) every per-iteration mass probe — a
@@ -177,39 +194,66 @@ object GraphAlgos {
     ranks
   }
 
-  /** Driver-side rank iteration over a size-gated edge set: the
-    * distributed loop's teleport arithmetic on primitive arrays. Node
-    * ids stay opaque (any type) — they are interned to dense indices
-    * and restored on the way out, so the output schema matches the
-    * distributed path exactly.
-    *
-    * @param nodes (node, tele) — the teleport vector resolved per node */
-  private def localPageRank(outNorm: DataFrame, nodes: DataFrame,
+  /** Driver twin of [[distributedRank]] over the gated edge frame
+    * `(src, dst, weight)`: one collect, then the node set, out-weights,
+    * teleport vector and iteration on primitive arrays, with the
+    * distributed update's association
+    * `(1-d) * t + d * (in_mass + dangling_mass * t)`. Only the order of
+    * the per-node sums differs from Spark's, so ranks agree to
+    * float-noise precision. Null endpoints and weights follow the SQL
+    * joins: a null node is a dangling node that receives no in-mass.
+    * Node ids stay opaque — interned to dense indices and restored on
+    * the way out, under the distributed path's schema. */
+  private def localPageRank(e: DataFrame, source: Option[Option[Any]],
       iters: Int, damping: Double): DataFrame = {
-    val spark = outNorm.sparkSession
-    val nodeRows = nodes.collect()
-    val nodeIds: Array[Any] = nodeRows.map(_.get(0))
-    val tele: Array[Double] = nodeRows.map(_.getDouble(1))
-    val idx = nodeIds.zipWithIndex.toMap
-    val n = nodeIds.length
-    val es = outNorm.collect().map(r => (idx(r.get(0)), idx(r.get(1)), r.getDouble(2)))
+    val spark = e.sparkSession
+    val nodeField = e.select(col("src").as("node"))
+      .union(e.select(col("dst").as("node"))).schema.head
+    val idType = nodeField.dataType
+    val rows = e.select(col("src"), col("dst"), col("weight").cast(DoubleType)).collect()
+    val idx = scala.collection.mutable.HashMap.empty[Any, Int]
+    val ids = scala.collection.mutable.ArrayBuffer.empty[Any]
+    def intern(v: Any): Int = idx.getOrElseUpdate(v, { ids += v; ids.length - 1 })
+    rows.foreach { r => intern(r.get(0)); intern(r.get(1)) }
+    val n = ids.length
+    require(n > 0, "pageRank: empty graph")
+    def pointMass(i: Int): Array[Double] = Array.tabulate(n)(j => if (j == i) 1.0 else 0.0)
+    val tele: Array[Double] = source match {
+      case None => Array.fill(n)(1.0 / n)
+      case Some(Some(s)) =>
+        val key = LocalGate.literalNode(spark, s, idType).collect()(0).get(0)
+        require(key != null && idx.contains(key),
+          s"personalizedPageRank: source $s has no edges in the graph")
+        pointMass(idx(key))
+      case Some(None) =>
+        LocalGate.sparkMin(ids, idType).fold(new Array[Double](n))(m => pointMass(idx(m)))
+    }
+    // out-weights per non-null source (the SQL groupBy ignores null
+    // weights); edges whose share is null on the SQL path carry nothing
     val hasOut = new Array[Boolean](n)
-    es.foreach(e => hasOut(e._1) = true)
+    val outW = new Array[Double](n)
+    rows.foreach { r =>
+      if (!r.isNullAt(0)) {
+        val s = idx(r.get(0))
+        hasOut(s) = true
+        if (!r.isNullAt(2)) outW(s) += r.getDouble(2)
+      }
+    }
+    val es = rows.filter(r => !r.isNullAt(0) && !r.isNullAt(1) && !r.isNullAt(2) &&
+        outW(idx(r.get(0))) != 0.0)
+      .map(r => (idx(r.get(0)), idx(r.get(1)), r.getDouble(2) / outW(idx(r.get(0)))))
     var ranks = tele.clone()
     for (_ <- 1 to iters) {
       var dangling = 0.0
       var i = 0
       while (i < n) { if (!hasOut(i)) dangling += ranks(i); i += 1 }
-      val next = Array.tabulate(n)(i =>
-        (1 - damping) * tele(i) + damping * dangling * tele(i))
-      es.foreach { case (s, d, share) => next(d) += damping * ranks(s) * share }
-      ranks = next
+      val inMass = new Array[Double](n)
+      es.foreach { case (s, d, share) => inMass(d) += ranks(s) * share }
+      ranks = Array.tabulate(n)(i =>
+        (1 - damping) * tele(i) + damping * (inMass(i) + dangling * tele(i)))
     }
-    val rows = nodeIds.indices.map(i => Row(nodeIds(i), ranks(i)))
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, math.max(1, n / 500000)),
-      StructType(Seq(nodes.schema.fields.head.copy(name = "node"),
-        StructField("rank", DoubleType, nullable = false))))
+    spark.createDataFrame(ids.indices.map(i => Row(ids(i), ranks(i))).asJava,
+      StructType(Seq(nodeField, StructField("rank", DoubleType, nullable = false))))
   }
 
   /** Per-node triangle count over an undirected edge list.
@@ -476,15 +520,17 @@ object GraphAlgos {
     * is one expansion join (frontier broadcast while it fits), one
     * per-node min, one improvement check against the settled distances,
     * and one min-merge — all node-keyed frames, lineage cut per round.
-    * Symmetrize the edge list first for undirected semantics. */
+    * Symmetrize the edge list first for undirected semantics.
+    *
+    * At or under `localThreshold` edges ([[LocalGate]]) the same rounds
+    * run on the driver over a hash adjacency: one collect of the edges,
+    * and none for a literal `source`. */
   def shortestPaths(edges: DataFrame, source: Any, maxHops: Int = 6,
-      broadcastFrontierLimit: Long = 4L << 20): DataFrame = {
-    val e = edges.select(col("s"), col("d"), col("w"))
+      broadcastFrontierLimit: Long = 4L << 20,
+      localThreshold: Long = LocalGate.DefaultRows): DataFrame =
     shortestPathsFrom(edges,
-      e.sparkSession.range(1).select(
-        lit(source).cast(e.schema("s").dataType).as("node")),
-      maxHops, broadcastFrontierLimit)
-  }
+      LocalGate.literalNode(edges.sparkSession, source, edges.schema("s").dataType),
+      maxHops, broadcastFrontierLimit, localThreshold)
 
   /** [[shortestPaths]] seeded by a DataFrame of source nodes (single
     * column, any name) instead of a driver-side literal — lets the
@@ -492,8 +538,13 @@ object GraphAlgos {
     * job runs before the relaxation starts; round-7 verdict #3), and
     * generalizes to multi-source relaxation (dist = min over seeds). */
   def shortestPathsFrom(edges: DataFrame, sourceNodes: DataFrame,
-      maxHops: Int = 6, broadcastFrontierLimit: Long = 4L << 20): DataFrame = {
+      maxHops: Int = 6, broadcastFrontierLimit: Long = 4L << 20,
+      localThreshold: Long = LocalGate.DefaultRows): DataFrame = {
     val e = edges.select(col("s"), col("d"), col("w")).cutLineage()
+    val twinnable = e.schema("s").dataType == e.schema("d").dataType &&
+      LocalGate.hashableId(e.schema("s").dataType)
+    if (LocalGate.admits(e, localThreshold, twinnable))
+      return localShortestPaths(e, sourceNodes, maxHops)
     // Seeds are DEDUPED (round-8 advice: a duplicated seed row would
     // otherwise surface as repeated dist-0 rows whenever no relaxation
     // round fires) — cheap, the seed set is small by construction. A
@@ -531,6 +582,50 @@ object GraphAlgos {
     dist
   }
 
+  /** Driver twin of [[shortestPathsFrom]] over the gated edge frame
+    * `(s, d, w)`. Jacobi rounds, as on the distributed path: round k
+    * relaxes only from round k-1's improved set, with the distances that
+    * set had then (relaxing in place would let paths longer than
+    * `maxHops` in). The candidate is `dist(u) + w` in doubles (Spark's
+    * own cast of `w`), the min over candidates wins, and a node improves
+    * only on strict `<` — the same double sequence, so the distances are
+    * bit-identical. Same seed contract; an edge with a null source
+    * never relaxes, as in the SQL join. Weights are non-null (the
+    * contract: positive). */
+  private def localShortestPaths(e: DataFrame, sourceNodes: DataFrame,
+      maxHops: Int): DataFrame = {
+    import scala.collection.mutable
+    val idType = e.schema("s").dataType
+    val seedFrame = sourceNodes.select(col(sourceNodes.columns.head).cast(idType).as("node"))
+    val adj = mutable.HashMap.empty[Any, mutable.ArrayBuffer[(Any, Double)]]
+    e.select(col("s"), col("d"), col("w").cast(DoubleType)).collect().foreach { r =>
+      if (!r.isNullAt(0) && !r.isNullAt(2))
+        adj.getOrElseUpdate(r.get(0), mutable.ArrayBuffer.empty) += ((r.get(1), r.getDouble(2)))
+    }
+    val dist = mutable.LinkedHashMap.empty[Any, Double]
+    LocalGate.seeds(seedFrame).foreach(dist(_) = 0.0)
+    var frontier: Seq[(Any, Double)] = dist.toSeq
+    var hop = 0
+    while (hop < maxHops && frontier.nonEmpty) {
+      hop += 1
+      val cand = mutable.LinkedHashMap.empty[Any, Double]
+      for ((u, du) <- frontier; (v, w) <- adj.getOrElse(u, Nil)) {
+        val c = du + w
+        if (cand.get(v).forall(c < _)) cand(v) = c
+      }
+      frontier = cand.filter { case (v, c) => dist.get(v).forall(c < _) }.toSeq
+      frontier.foreach { case (v, c) => dist(v) = c }
+    }
+    // the distributed schema: seed rows alone when no round ran, else
+    // the min-merge of seeds and relaxed rows
+    val seeded = seedFrame.distinct().withColumn("dist", lit(0.0))
+    val schema =
+      if (hop == 0) seeded.schema
+      else seeded.unionByName(e.select(col("d").as("node"), col("w").cast(DoubleType).as("dist")))
+        .groupBy("node").agg(min("dist").as("dist")).schema
+    e.sparkSession.createDataFrame(dist.map { case (v, c) => Row(v, c) }.toSeq.asJava, schema)
+  }
+
   /** Minimum hop distance from a source node over an undirected edge
     * list, bounded at `maxHops` (unreached nodes are absent from the
     * result) — the DataFrame form of Cypher's
@@ -546,15 +641,19 @@ object GraphAlgos {
     * Each round costs one expansion job and one anti-join against the
     * settled set; total work is O(edges touched), not O(rounds * nodes).
     *
+    * At or under `localThreshold` symmetric edges ([[LocalGate]]) the
+    * same rounds run on the driver over a hash adjacency: one collect of
+    * the edges, and none for a literal `source`.
+    *
     * @param edges undirected edges (s, d)
     * @param source source node id (must match the edge id type)
     */
   def bfsHops(edges: DataFrame, source: Any, maxHops: Int = 6,
-      broadcastFrontierLimit: Long = 4L << 20): DataFrame =
+      broadcastFrontierLimit: Long = 4L << 20,
+      localThreshold: Long = LocalGate.DefaultRows): DataFrame =
     bfsHopsFrom(edges,
-      edges.sparkSession.range(1).select(
-        lit(source).cast(edges.schema("s").dataType).as("node")),
-      maxHops, broadcastFrontierLimit)
+      LocalGate.literalNode(edges.sparkSession, source, edges.schema("s").dataType),
+      maxHops, broadcastFrontierLimit, localThreshold)
 
   /** [[bfsHops]] seeded by a DataFrame of source nodes (single column,
     * any name) — the source can be DERIVED in-plan (a 1-row min
@@ -562,12 +661,15 @@ object GraphAlgos {
     * multiple seed rows give multi-source BFS (hops = distance to the
     * nearest seed). */
   def bfsHopsFrom(edges: DataFrame, sourceNodes: DataFrame,
-      maxHops: Int = 6, broadcastFrontierLimit: Long = 4L << 20): DataFrame = {
+      maxHops: Int = 6, broadcastFrontierLimit: Long = 4L << 20,
+      localThreshold: Long = LocalGate.DefaultRows): DataFrame = {
     val sym = edges.select(col("s"), col("d"))
       .union(edges.select(col("d").as("s"), col("s").as("d")))
       .filter(col("s") =!= col("d"))
       .distinct()
       .cutLineage()
+    if (LocalGate.admits(sym, localThreshold, LocalGate.hashableId(sym.schema("s").dataType)))
+      return localBfs(sym, sourceNodes, maxHops)
     // Seeds deduped; absent seeds still report hops 0 (same contract as
     // [[shortestPathsFrom]] — see the note there).
     var settled = sourceNodes
@@ -599,6 +701,37 @@ object GraphAlgos {
       gc.endRound()
     }
     settled
+  }
+
+  /** Driver twin of [[bfsHopsFrom]] over the gated symmetric edge set
+    * `sym`: the same frontier rounds over a hash adjacency — round k
+    * expands only the nodes round k-1 settled, minus everything settled
+    * so far — with the same seed contract and output schema. */
+  private def localBfs(sym: DataFrame, sourceNodes: DataFrame, maxHops: Int): DataFrame = {
+    import scala.collection.mutable
+    val idType = sym.schema("s").dataType
+    val seedFrame = sourceNodes.select(col(sourceNodes.columns.head).cast(idType).as("node"))
+    val adj = mutable.HashMap.empty[Any, mutable.ArrayBuffer[Any]]
+    sym.collect().foreach(r => adj.getOrElseUpdate(r.get(0), mutable.ArrayBuffer.empty) += r.get(1))
+    val settled = mutable.LinkedHashMap.empty[Any, Int]
+    LocalGate.seeds(seedFrame).foreach(settled(_) = 0)
+    var frontier: Iterable[Any] = settled.keys.toVector
+    var hop = 0
+    while (hop < maxHops && frontier.nonEmpty) {
+      hop += 1
+      val next = mutable.LinkedHashSet.empty[Any]
+      for (u <- frontier; v <- adj.getOrElse(u, Nil) if !settled.contains(v)) next += v
+      next.foreach(settled(_) = hop)
+      frontier = next
+    }
+    // the distributed schema: seed rows alone when no round ran, else
+    // seeds unioned with expanded rows
+    val seeded = seedFrame.distinct().withColumn("hops", lit(0))
+    val schema =
+      if (hop == 0) seeded.schema
+      else seeded.unionByName(sym.select(col("d").as("node"), lit(1).as("hops"))).schema
+    sym.sparkSession.createDataFrame(
+      settled.map { case (v, h) => Row(v, h) }.toSeq.asJava, schema)
   }
 
   /** Sampled betweenness centrality (Brandes 2001 pivots, Bader et al.

@@ -45,15 +45,12 @@ object Matching {
     * ran 95 jobs totalling 1.8 s of work inside 4.5-5.5 s wall on a
     * ~300-edge graph. 0 disables the gate. */
   def greedy(edges: DataFrame, maxRounds: Int = 128,
-      localThreshold: Long = 1L << 20): DataFrame = {
+      localThreshold: Long = LocalGate.DefaultRows): DataFrame = {
     var cur = edges.filter(col("u") =!= col("v"))
       .select(least(col("u"), col("v")).as("u"),
         greatest(col("u"), col("v")).as("v"), col("w"))
       .groupBy("u", "v").agg(max("w").as("w"))
       .cutLineage()
-    var matched: DataFrame = null
-    var round = 0
-    var remaining = cur.count()
     val integral = {
       import org.apache.spark.sql.types._
       cur.schema.fields.forall(_.dataType match {
@@ -61,7 +58,7 @@ object Matching {
         case _ => false
       })
     }
-    if (integral && localThreshold > 0 && remaining <= localThreshold) {
+    if (LocalGate.admits(cur, localThreshold, integral)) {
       val rows = cur.collect().map(r => (
         r.getAs[Number](0).longValue(), r.getAs[Number](1).longValue(),
         r.getAs[Number](2).longValue()))
@@ -83,6 +80,9 @@ object Matching {
       return spark.createDataFrame(
         spark.sparkContext.parallelize(res, 1), cur.schema)
     }
+    var matched: DataFrame = null
+    var round = 0
+    var remaining = cur.count()
     while (remaining > 0) {
       round += 1
       require(round <= maxRounds,

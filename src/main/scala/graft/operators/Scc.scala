@@ -58,7 +58,7 @@ object Scc {
     * edges are dropped up front (they never change the partition). */
   def strongComponents(edges: DataFrame, src: String = "src",
       dst: String = "dst", maxOuter: Int = 8, maxProp: Int = 64,
-      trimRounds: Int = 8, localThreshold: Long = 1L << 20): DataFrame = {
+      trimRounds: Int = 8, localThreshold: Long = LocalGate.DefaultRows): DataFrame = {
     val dedup = edges.select(col(src).as("s"), col(dst).as("d"))
       .filter(col("s") =!= col("d"))
       .distinct()
@@ -68,7 +68,7 @@ object Scc {
            org.apache.spark.sql.types.IntegerType => true
       case _ => false
     })
-    if (localThreshold > 0 && integralIds && dedup.count() <= localThreshold)
+    if (LocalGate.admits(dedup, localThreshold, integralIds))
       return localTarjan(dedup, dedup.schema(0).dataType)
 
     val gc = new Lineage.RoundGc(edges.sparkSession)

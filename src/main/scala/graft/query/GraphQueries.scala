@@ -93,7 +93,11 @@ object GraphQueries {
 
   /** Entities reachable from one entity within `hops` relationship
     * steps (any direction), nearest first — Cypher's
-    * `(a)-[*..k]-(b)` neighborhood. */
+    * `(a)-[*..k]-(b)` neighborhood. A CRM entity graph sits under the
+    * [[graft.operators.LocalGate]] edge gate, so the hop rounds run
+    * as [[graft.operators.GraphAlgos.bfsHops]]' driver twin: one cut,
+    * one count and one collect of the edge set, then the sort of the
+    * answer — not a fixed number of Spark jobs per hop. */
   def neighborhood(edges: DataFrame, entityType: String, entityId: String,
       hops: Int = 2): DataFrame = {
     val e = edges.select(
@@ -110,7 +114,12 @@ object GraphQueries {
     * is 1 / (number of parallel relationships between the endpoints),
     * the same inverse-volume convention as the g_shortest_trade
     * catalog query. Undirected (edges symmetrized); `to` narrows the
-    * answer to one destination row; unreachable entities are absent. */
+    * answer to one destination row; unreachable entities are absent.
+    * Under the [[graft.operators.LocalGate]] edge gate (every CRM entity
+    * graph) the bounded relaxation runs as
+    * [[graft.operators.GraphAlgos.shortestPaths]]' driver twin — one
+    * cut, one count and one collect of the pair edges instead of a
+    * fixed number of Spark jobs per hop — with bit-identical distances. */
   def shortestPath(edges: DataFrame, fromType: String, fromId: String,
       to: Option[(String, String)] = None, maxHops: Int = 6): DataFrame = {
     val pairs = pairWeights(edges, None)

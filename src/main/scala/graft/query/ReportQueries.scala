@@ -78,24 +78,31 @@ object ReportQueries {
       .orderBy(desc_nulls_last("created_date"), col("deal_id"))
 
   /** Summary statistics for owners matching a name pattern
-    * (reporting/queries.py:96-119): the allOwnersSummary A2 shape with the
-    * owner filter pushed below the joins, plus the `active` flag. */
+    * (reporting/queries.py:96-119): the allOwnersSummary A2 counts with
+    * the owner filter pushed below the joins, plus the `active` flag.
+    * Each entity table is reduced to one distinct count per matched
+    * owner BEFORE the joins (the [[OwnershipQueries.userOwnership]]
+    * shape): chaining the three left joins first would build
+    * n_contacts x n_companies x n_deals rows per owner for
+    * `countDistinct` to fold back down. */
   def ownerSummary(g: GraphTables, needle: String): DataFrame = {
     val u = g.users.filter(ownerNameFilter(needle))
       .select(col("hubspot_id").as("owner_key"), ownerName.as("owner_name"),
         col("email").as("owner_email"), col("active"))
-    u.join(g.contacts.select(col("hubspot_id").as("c_id"), col("owner_id").as("c_own")),
-        col("c_own") === col("owner_key"), "left")
-      .join(g.companies.select(col("hubspot_id").as("co_id"), col("owner_id").as("co_own")),
-        col("co_own") === col("owner_key"), "left")
-      .join(g.deals.select(col("hubspot_id").as("d_id"), col("owner_id").as("d_own")),
-        col("d_own") === col("owner_key"), "left")
-      .groupBy("owner_key", "owner_name", "owner_email", "active")
-      .agg(countDistinct("c_id").as("contacts_owned"),
-        countDistinct("co_id").as("companies_owned"),
-        countDistinct("d_id").as("deals_owned"))
+      .distinct() // users are not deduplicated upstream; one row per owner
+    val owners = broadcast(u.select(col("owner_key")))
+    def owned(df: DataFrame, name: String): DataFrame =
+      df.join(owners, col("owner_id") === col("owner_key"), "left_semi")
+        .groupBy(col("owner_id").as("owner_key"))
+        .agg(countDistinct("hubspot_id").as(name))
+    u.join(owned(g.contacts, "contacts_owned"), Seq("owner_key"), "left")
+      .join(owned(g.companies, "companies_owned"), Seq("owner_key"), "left")
+      .join(owned(g.deals, "deals_owned"), Seq("owner_key"), "left")
       .orderBy("owner_key")
-      .drop("owner_key")
+      .select(col("owner_name"), col("owner_email"), col("active"),
+        coalesce(col("contacts_owned"), lit(0L)).as("contacts_owned"),
+        coalesce(col("companies_owned"), lit(0L)).as("companies_owned"),
+        coalesce(col("deals_owned"), lit(0L)).as("deals_owned"))
   }
 
   /** Per-owner entity counts + pipeline value — the A2 shape: three left

@@ -1,8 +1,9 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.operators.GraphAlgos
+import graft.operators.{GraphAlgos, LocalGate}
 
 /** Graph analytics on hand-checkable graphs: PageRank fixed points with
   * known closed forms, triangle counts on named shapes, BFS distances
@@ -191,11 +192,152 @@ class GraphSpec extends AnyFunSuite {
           frontier = frontier.flatMap(adj.getOrElse(_, Set.empty)) -- dist.keySet
           dist ++= frontier.map(_ -> h)
         }
-        val gotBfs = GraphAlgos.bfsHops(es.toDF("s", "d"), src, maxHops)
-          .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-        assert(gotBfs == dist, s"bfs diverged on $und from $src")
+        // both sides of the driver-twin gate
+        for (t <- Seq(LocalGate.DefaultRows, 0L)) {
+          val gotBfs = GraphAlgos.bfsHops(es.toDF("s", "d"), src, maxHops,
+              localThreshold = t)
+            .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+          assert(gotBfs == dist, s"bfs (localThreshold=$t) diverged on $und from $src")
+        }
       }
     }
+  }
+
+  /** Same rows (as a multiset) and the same schema, nullability included. */
+  private def assertSameRows(on: DataFrame, off: DataFrame, what: String): Unit = {
+    assert(on.schema == off.schema, s"$what: schema ${on.schema} vs ${off.schema}")
+    def bag(df: DataFrame) = df.collect().toSeq.groupBy(identity).view.mapValues(_.size).toMap
+    assert(bag(on) == bag(off), s"$what: rows differ")
+  }
+
+  /** PageRank sums per node in a different order on each path, so ranks
+    * agree to float noise; nodes and schema must match exactly. */
+  private def assertSameRanks(on: DataFrame, off: DataFrame, what: String): Unit = {
+    assert(on.schema == off.schema, s"$what: schema ${on.schema} vs ${off.schema}")
+    val a = on.collect().map(r => r.get(0) -> r.getDouble(1)).toMap
+    val b = off.collect().map(r => r.get(0) -> r.getDouble(1)).toMap
+    assert(a.keySet == b.keySet, s"$what: node sets differ")
+    a.foreach { case (k, v) => assert(math.abs(v - b(k)) < 1e-12, s"$what: rank of $k") }
+  }
+
+  /** Every gated operator on one weighted graph `(a, b, w)`, default gate
+    * against `localThreshold = 0` (the distributed loops). */
+  private def assertGateInvariant(weighted: DataFrame, src: Any, absent: Any,
+      what: String): Unit = {
+    val und = weighted.select(col("a").as("s"), col("b").as("d"))
+    val sp = weighted.select(col("a").as("s"), col("b").as("d"), col("w"))
+    val pr = weighted.select(col("a").as("src"), col("b").as("dst"), col("w").as("weight"))
+    // a duplicated seed and one absent from the graph
+    val seeds = Seq(src, src, absent)
+      .map(LocalGate.literalNode(spark, _, und.schema("s").dataType)).reduce(_ union _)
+    def both(name: String, run: Long => DataFrame): Unit =
+      assertSameRows(run(LocalGate.DefaultRows), run(0L), s"$what $name")
+    both("bfsHops", t => GraphAlgos.bfsHops(und, src, 3, localThreshold = t))
+    both("bfsHops maxHops=0", t => GraphAlgos.bfsHops(und, src, 0, localThreshold = t))
+    both("bfsHopsFrom", t => GraphAlgos.bfsHopsFrom(und, seeds, 2, localThreshold = t))
+    both("bfsHopsFrom min seed", t => GraphAlgos.bfsHopsFrom(und,
+      und.agg(min("s").as("node")), 3, localThreshold = t))
+    both("shortestPaths", t => GraphAlgos.shortestPaths(sp, src, 3, localThreshold = t))
+    both("shortestPaths maxHops=0", t =>
+      GraphAlgos.shortestPaths(sp, src, 0, localThreshold = t))
+    both("shortestPathsFrom", t =>
+      GraphAlgos.shortestPathsFrom(sp, seeds, 2, localThreshold = t))
+    both("shortestPathsFrom min seed", t => GraphAlgos.shortestPathsFrom(sp,
+      sp.agg(min("s").as("node")), 4, localThreshold = t))
+    def ranks(name: String, run: Long => DataFrame): Unit =
+      assertSameRanks(run(LocalGate.DefaultRows), run(0L), s"$what $name")
+    ranks("pageRank", t => GraphAlgos.pageRank(pr, iters = 5, localThreshold = t))
+    ranks("personalizedPageRank", t =>
+      GraphAlgos.personalizedPageRank(pr, src, iters = 5, localThreshold = t))
+    ranks("personalizedPageRankMinSource", t =>
+      GraphAlgos.personalizedPageRankMinSource(pr, iters = 5, localThreshold = t))
+  }
+
+  test("driver twins: gate on and gate off give the same rows and schema") {
+    // random multigraphs with self-loops, duplicates and inexact 1/k weights
+    val rnd = new scala.util.Random(7)
+    for ((es, i) <- randomGraphs(seed = 303, count = 3).zipWithIndex) {
+      val weighted = es.map { case (a, b) => (a, b, 1.0 / (1 + rnd.nextInt(5))) }
+        .toDF("a", "b", "w")
+      assertGateInvariant(weighted, es.head._1, 99L, s"random graph $i")
+    }
+    // integral (LongType) weights, as g_pagerank_trade passes them
+    val integral = Seq((1L, 2L, 3L), (2L, 3L, 1L), (3L, 1L, 2L), (3L, 4L, 5L),
+      (4L, 4L, 1L), (1L, 2L, 2L)).toDF("a", "b", "w")
+    assertGateInvariant(integral, 1L, 99L, "integral weights")
+    // nullable string ids
+    val strings = Seq(("p", "q", 0.5), ("q", "r", 0.25), ("r", "p", 2.0),
+      ("s", "q", 1.0), ("r", "t", 1.0 / 3)).toDF("a", "b", "w")
+    assertGateInvariant(strings, "q", "zz", "string ids")
+  }
+
+  test("driver twins: the min source follows Spark's ordering; absent sources fail alike") {
+    // U+FFFF sorts before U+1F600 and U+1F601 in UTF-8 bytes (Spark's
+    // order) but after both in UTF-16 code units (String.compareTo)
+    val (bmp, astral, astral2) = ("\uFFFF", "\uD83D\uDE00", "\uD83D\uDE01")
+    val edges = Seq((bmp, astral, 1.0), (astral, bmp, 2.0), (astral, astral2, 1.0))
+      .toDF("src", "dst", "weight")
+    def m(df: DataFrame): Map[Any, Double] =
+      df.collect().map(r => r.get(0) -> r.getDouble(1)).toMap
+    val explicit = m(GraphAlgos.personalizedPageRank(edges, bmp, iters = 5))
+    for (t <- Seq(LocalGate.DefaultRows, 0L)) {
+      val got = m(GraphAlgos.personalizedPageRankMinSource(edges, iters = 5,
+        localThreshold = t))
+      assert(got.keySet == explicit.keySet)
+      got.foreach { case (k, v) => assert(math.abs(v - explicit(k)) < 1e-12, s"$k at $t") }
+      val e = intercept[IllegalArgumentException](
+        GraphAlgos.personalizedPageRank(edges, "absent", iters = 5, localThreshold = t))
+      assert(e.getMessage.contains(
+        "personalizedPageRank: source absent has no edges in the graph"), e.getMessage)
+    }
+  }
+
+  test("property: hop-bounded weighted distances match brute force on both paths") {
+    // Brute force: for each exact hop count k <= maxHops, the cheapest
+    // walk of exactly k edges (summed left to right), then the min over
+    // k. No frontier, no improvement test — only the hop layering.
+    def brute(we: Seq[(Long, Long, Double)], src: Long, maxHops: Int): Map[Long, Double] = {
+      var layer = Map(src -> 0.0)
+      var best = layer
+      for (_ <- 1 to maxHops) {
+        layer = (for ((u, c) <- layer.toSeq; (a, b, w) <- we if a == u) yield b -> (c + w))
+          .groupBy(_._1).map { case (v, cs) => v -> cs.map(_._2).min }
+        layer.foreach { case (v, c) => if (best.get(v).forall(c < _)) best += v -> c }
+      }
+      best
+    }
+    def check(we: Seq[(Long, Long, Double)], src: Long, maxHops: Int): Unit = {
+      val want = brute(we, src, maxHops)
+      for (t <- Seq(LocalGate.DefaultRows, 0L)) {
+        val got = GraphAlgos.shortestPaths(we.toDF("s", "d", "w"), src, maxHops,
+            localThreshold = t)
+          .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+        assert(got == want, s"maxHops=$maxHops localThreshold=$t on $we")
+      }
+    }
+    // hand case: the cheap route 1-3-4-2 needs 3 hops, the direct edge 1
+    val chain = Seq((1L, 2L, 10.0), (1L, 3L, 1.0), (3L, 4L, 1.0), (4L, 2L, 1.0))
+    assert(brute(chain, 1L, 2)(2L) == 10.0 && brute(chain, 1L, 3)(2L) == 3.0)
+    check(chain, 1L, 2)
+    check(chain, 1L, 3)
+    // Jacobi trap: 2 and 3 both enter round 2's frontier and 2 -> 3
+    // lowers 3 within that round; relaxing in place would then carry
+    // the 3-hop 1-2-3-4 (cost 3) into a 2-hop answer. The mirrored
+    // gadget 5/6/7 lists the lowered node first, so either frontier
+    // order springs one of them.
+    val trap = Seq((1L, 2L, 1.0), (1L, 3L, 10.0), (2L, 3L, 1.0), (3L, 4L, 1.0),
+      (1L, 6L, 10.0), (1L, 5L, 1.0), (5L, 6L, 1.0), (6L, 7L, 1.0))
+    assert(brute(trap, 1L, 2)(4L) == 11.0 && brute(trap, 1L, 2)(7L) == 11.0)
+    check(trap, 1L, 2)
+    val rnd = new scala.util.Random(11)
+    var binds = 0
+    for (es <- randomGraphs(seed = 404, count = 4)) {
+      val we = es.map { case (a, b) => (a, b, 1.0 / (1 + rnd.nextInt(5))) }
+      val src = es.head._1
+      if (brute(we, src, 2) != brute(we, src, 12)) binds += 1
+      check(we, src, 2)
+    }
+    assert(binds > 0, "no random sample where the hop bound binds")
   }
 
   test("kCore: clique survives peeling, tendrils and bridges peel away") {

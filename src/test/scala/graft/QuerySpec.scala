@@ -130,6 +130,26 @@ class QuerySpec extends AnyFunSuite {
     assert(r.getLong(r.fieldIndex("deals_owned")) == 0)
   }
 
+  test("ownerSummary: an owner with several of each entity counts each once") {
+    // John Doe gains a second contact, a second company and two more
+    // deals: the counts are per table (2 / 2 / 3), never the product
+    // of the three left joins.
+    def plus(df: org.apache.spark.sql.DataFrame, from: String, ids: String*) =
+      ids.foldLeft(df)((acc, id) => acc.unionByName(
+        df.filter(col("hubspot_id") === from).withColumn("hubspot_id", lit(id))))
+    val g2 = g.copy(
+      contacts = plus(g.contacts, "c1", "c9"),
+      companies = plus(g.companies, "co1", "co9"),
+      deals = plus(g.deals, "d1", "d8", "d9"))
+    val rows = RQ.ownerSummary(g2, "Doe").collect()
+    assert(rows.length == 1)
+    val r = rows(0)
+    assert(r.getString(r.fieldIndex("owner_name")) == "John Doe")
+    assert(r.getLong(r.fieldIndex("contacts_owned")) == 2)
+    assert(r.getLong(r.fieldIndex("companies_owned")) == 2)
+    assert(r.getLong(r.fieldIndex("deals_owned")) == 3)
+  }
+
   test("recentFormSubmissions: window filter + contact join") {
     // forms are at 2024-01-15/16/17; asOf 2024-02-01 with 30d covers them
     val asOf = lit(java.sql.Timestamp.valueOf("2024-02-01 00:00:00"))
