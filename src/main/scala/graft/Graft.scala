@@ -6,11 +6,11 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
 import org.apache.spark.sql.types.IntegerType
 
 import graft.functions._
-import graft.plans.AsOfJoinStrategy
+import graft.plans.{AsOfJoinStrategy, SortLocalRelation}
 
 /** How a graft session is set up: the one local session the mains run on,
-  * and the one idempotent install of the native SQL functions and the
-  * as-of join planner strategy. */
+  * and the one idempotent install of the native SQL functions, the
+  * as-of join planner strategy and the local-sort optimizer rule. */
 object Graft {
 
   /** Local worker threads: `SPARK_GRAFT_CPUS`, else every core of the host. */
@@ -74,11 +74,12 @@ object Graft {
     fn("suffix_lcs", classOf[SuffixLcs])(SuffixLcs.build),
     fn("suffix_spans", classOf[SuffixSpans])(SuffixSpans.build))
 
-  /** Give `spark` every native function and [[AsOfJoinStrategy]], each only
-    * when the session lacks it. A session launched with
-    * [[graft.plans.GraftExtensions]] already has both, so this is a few
-    * lookups there and on every repeat call, and never replaces (or warns
-    * about) an existing registration. */
+  /** Give `spark` every native function, [[AsOfJoinStrategy]] and the
+    * [[SortLocalRelation]] optimizer rule, each only when the session
+    * lacks it. A session launched with
+    * [[graft.plans.GraftExtensions]] already has all three, so this is a
+    * few lookups there and on every repeat call, and never replaces (or
+    * warns about) an existing registration. */
   def install(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry
     registry.synchronized {
@@ -90,6 +91,9 @@ object Graft {
     exp.synchronized {
       if (!spark.sessionState.planner.strategies.contains(AsOfJoinStrategy))
         exp.extraStrategies = exp.extraStrategies :+ AsOfJoinStrategy
+      if (!exp.extraOptimizations.contains(SortLocalRelation) &&
+          !spark.sessionState.optimizer.extendedOperatorOptimizationRules.contains(SortLocalRelation))
+        exp.extraOptimizations = exp.extraOptimizations :+ SortLocalRelation
     }
   }
 }

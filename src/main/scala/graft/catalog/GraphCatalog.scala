@@ -95,8 +95,8 @@ object GraphCatalog {
     * g_neighborhood_func, g_eff_diameter and g_harmonic_hyperball each
     * rebuilt the identical register rounds — the expensive part — to
     * read a different metric off them; ~28 s of the 177 s bench was one
-    * computation paid three times). The register table (h, node,
-    * r0..r15) is built once by [[GraphAlgos.hyperballRegisters]], pinned
+    * computation paid three times). The register table (node, r0..r15,
+    * h) is built once by [[GraphAlgos.hyperballRegisters]], pinned
     * MEMORY_AND_DISK, and every readout is a row-local
     * [[GraphAlgos.hyperballEstimates]] projection over the pinned
     * frame. Keyed by (applicationId, dir): Verify runs several SFs in

@@ -55,18 +55,17 @@ object Components {
       maxIter: Int = 25, checkEvery: Int = 2,
       localThreshold: Long = LocalGate.DefaultRows): DataFrame = {
     // Symmetrize once: propagation below is directional along (s -> d).
-    val sym = edges.select(col(src).as("s"), col(dst).as("d"))
+    val symPlan = edges.select(col(src).as("s"), col(dst).as("d"))
       .union(edges.select(col(dst).as("s"), col(src).as("d")))
       .filter(col("s") =!= col("d"))
       .distinct()
-      .cutLineage()
-    val integralIds = sym.schema.fields.forall(_.dataType match {
+    val integralIds = symPlan.schema.fields.forall(_.dataType match {
       case org.apache.spark.sql.types.LongType |
            org.apache.spark.sql.types.IntegerType => true
       case _ => false
     })
-    if (LocalGate.admits(sym, localThreshold, integralIds))
-      return localUnionFind(sym, sym.schema(0).dataType)
+    val (sym, local) = LocalGate.cut(symPlan, localThreshold, integralIds)
+    if (local) return localUnionFind(sym, sym.schema(0).dataType)
     var labels = sym.select(col("s").as("node")).distinct()
       .withColumn("comp", col("node"))
       .cutLineage()

@@ -37,6 +37,15 @@ object GraphAlgos {
 
   private val logger = org.slf4j.LoggerFactory.getLogger(getClass)
 
+  /** Undirected `(s, d)` edges as the deduplicated symmetric edge set
+    * without self-loops — the frame the BFS, betweenness and HyperBall
+    * rounds probe. */
+  private def symmetric(edges: DataFrame): DataFrame =
+    edges.select(col("s"), col("d"))
+      .union(edges.select(col("d").as("s"), col("s").as("d")))
+      .filter(col("s") =!= col("d"))
+      .distinct()
+
   /** Weighted PageRank over a directed edge list.
     *
     * Semantics (matched exactly by the DuckDB oracle twin in
@@ -56,11 +65,12 @@ object GraphAlgos {
     * + one groupBy(dst), plus (only when the graph HAS dangling nodes —
     * resolved once, up front) a 1-row mass aggregate. Ranks are a
     * node-keyed frame, never driver-side. Lineage is cut every
-    * iteration. The gate comes first: the edge frame is cut and counted,
-    * and at or under `localThreshold` rows ([[LocalGate]]) one collect
-    * hands it to the driver, where node set, out-weights, teleport and
-    * iteration all run over primitive arrays; the arithmetic is
-    * identical. A gated graph costs one cut, one count and one collect.
+    * iteration. The gate comes first: the edge frame is cut and counted
+    * in one job, and at or under `localThreshold` rows ([[LocalGate]])
+    * one collect hands it to the driver, where node set, out-weights,
+    * teleport and iteration all run over primitive arrays; the
+    * arithmetic is identical. A gated graph costs the counted cut and
+    * one collect.
     *
     * @param edges   directed edges with columns (src, dst, weight);
     *                weight must be > 0 (use lit(1.0) for unweighted);
@@ -109,15 +119,16 @@ object GraphAlgos {
     *        minimum node id, derived in-plan (no driver round-trip) */
   private def rankWithTeleport(edges: DataFrame, source: Option[Option[Any]],
       iters: Int, damping: Double, localThreshold: Long): DataFrame = {
-    val e = edges.select(col("src"), col("dst"), col("weight")).cutLineage()
-    val twinnable = e.schema("src").dataType == e.schema("dst").dataType &&
-      LocalGate.hashableId(e.schema("src").dataType) &&
-      (e.schema("weight").dataType match {
+    val cutFrame = edges.select(col("src"), col("dst"), col("weight"))
+    val ts = cutFrame.schema
+    val twinnable = ts("src").dataType == ts("dst").dataType &&
+      LocalGate.hashableId(ts("src").dataType) &&
+      (ts("weight").dataType match {
         case ByteType | ShortType | IntegerType | LongType | FloatType | DoubleType => true
         case _ => false // decimal shares divide as decimals on the distributed path
       })
-    if (LocalGate.admits(e, localThreshold, twinnable))
-      localPageRank(e, source, iters, damping)
+    val (e, local) = LocalGate.cut(cutFrame, localThreshold, twinnable)
+    if (local) localPageRank(e, source, iters, damping)
     else distributedRank(e, source, iters, damping)
   }
 
@@ -194,6 +205,14 @@ object GraphAlgos {
     ranks
   }
 
+  /** Dense indices for the opaque node ids a driver twin collects, in
+    * first-seen order: `ids(i)` is the id of index `i`. */
+  private final class Interner {
+    val index = scala.collection.mutable.HashMap.empty[Any, Int]
+    val ids = scala.collection.mutable.ArrayBuffer.empty[Any]
+    def apply(v: Any): Int = index.getOrElseUpdate(v, { ids += v; ids.length - 1 })
+  }
+
   /** Driver twin of [[distributedRank]] over the gated edge frame
     * `(src, dst, weight)`: one collect, then the node set, out-weights,
     * teleport vector and iteration on primitive arrays, with the
@@ -211,10 +230,9 @@ object GraphAlgos {
       .union(e.select(col("dst").as("node"))).schema.head
     val idType = nodeField.dataType
     val rows = e.select(col("src"), col("dst"), col("weight").cast(DoubleType)).collect()
-    val idx = scala.collection.mutable.HashMap.empty[Any, Int]
-    val ids = scala.collection.mutable.ArrayBuffer.empty[Any]
-    def intern(v: Any): Int = idx.getOrElseUpdate(v, { ids += v; ids.length - 1 })
-    rows.foreach { r => intern(r.get(0)); intern(r.get(1)) }
+    val nodes = new Interner
+    rows.foreach { r => nodes(r.get(0)); nodes(r.get(1)) }
+    val (idx, ids) = (nodes.index, nodes.ids)
     val n = ids.length
     require(n > 0, "pageRank: empty graph")
     def pointMass(i: Int): Array[Double] = Array.tabulate(n)(j => if (j == i) 1.0 else 0.0)
@@ -540,11 +558,11 @@ object GraphAlgos {
   def shortestPathsFrom(edges: DataFrame, sourceNodes: DataFrame,
       maxHops: Int = 6, broadcastFrontierLimit: Long = 4L << 20,
       localThreshold: Long = LocalGate.DefaultRows): DataFrame = {
-    val e = edges.select(col("s"), col("d"), col("w")).cutLineage()
-    val twinnable = e.schema("s").dataType == e.schema("d").dataType &&
-      LocalGate.hashableId(e.schema("s").dataType)
-    if (LocalGate.admits(e, localThreshold, twinnable))
-      return localShortestPaths(e, sourceNodes, maxHops)
+    val cutFrame = edges.select(col("s"), col("d"), col("w"))
+    val twinnable = cutFrame.schema("s").dataType == cutFrame.schema("d").dataType &&
+      LocalGate.hashableId(cutFrame.schema("s").dataType)
+    val (e, local) = LocalGate.cut(cutFrame, localThreshold, twinnable)
+    if (local) return localShortestPaths(e, sourceNodes, maxHops)
     // Seeds are DEDUPED (round-8 advice: a duplicated seed row would
     // otherwise surface as repeated dist-0 rows whenever no relaxation
     // round fires) — cheap, the seed set is small by construction. A
@@ -663,13 +681,10 @@ object GraphAlgos {
   def bfsHopsFrom(edges: DataFrame, sourceNodes: DataFrame,
       maxHops: Int = 6, broadcastFrontierLimit: Long = 4L << 20,
       localThreshold: Long = LocalGate.DefaultRows): DataFrame = {
-    val sym = edges.select(col("s"), col("d"))
-      .union(edges.select(col("d").as("s"), col("s").as("d")))
-      .filter(col("s") =!= col("d"))
-      .distinct()
-      .cutLineage()
-    if (LocalGate.admits(sym, localThreshold, LocalGate.hashableId(sym.schema("s").dataType)))
-      return localBfs(sym, sourceNodes, maxHops)
+    val symPlan = symmetric(edges)
+    val (sym, local) = LocalGate.cut(symPlan, localThreshold,
+      LocalGate.hashableId(symPlan.schema("s").dataType))
+    if (local) return localBfs(sym, sourceNodes, maxHops)
     // Seeds deduped; absent seeds still report hops 0 (same contract as
     // [[shortestPathsFrom]] — see the note there).
     var settled = sourceNodes
@@ -761,11 +776,7 @@ object GraphAlgos {
   def betweennessSampled(edges: DataFrame, seeds: DataFrame,
       maxHops: Int = 3, broadcastFrontierLimit: Long = 4L << 20): DataFrame = {
     require(maxHops >= 1, s"maxHops must be >= 1, got $maxHops")
-    val sym = edges.select(col("s"), col("d"))
-      .union(edges.select(col("d").as("s"), col("s").as("d")))
-      .filter(col("s") =!= col("d"))
-      .distinct()
-      .cutLineage()
+    val sym = symmetric(edges).cutLineage()
     // frontier discipline as in [[bfsHopsPerSeed]]: the checkpointed
     // edge list is probed IN PLACE — the small (seed, node) layers
     // broadcast while they fit the gate, so no round re-shuffles |E|;
@@ -884,7 +895,7 @@ object GraphAlgos {
   def neighborhoodFunction(edges: DataFrame, hops: Int = 3): DataFrame =
     hyperballEstimates(hyperballRegisters(edges, hops))
 
-  /** The HyperBall REGISTER table alone: (h, node, r0..r15) for every
+  /** The HyperBall REGISTER table alone: (node, r0..r15, h) for every
     * radius h in 0..hops — the expensive part of
     * [[neighborhoodFunction]] (hops rounds of one |E|-row join + a
     * 16-column max-aggregation), split out so several readouts can
@@ -894,38 +905,117 @@ object GraphAlgos {
     * registers; at 100 TB nobody rebuilds a diameter sketch to read a
     * second metric off it). Callers that want several readouts pin
     * this frame (`.persist()`) and pass it to [[hyperballEstimates]]
-    * once per readout. */
-  def hyperballRegisters(edges: DataFrame, hops: Int = 3): DataFrame = {
+    * once per readout.
+    *
+    * At or under `localThreshold` rows of the cut symmetric edge frame
+    * ([[LocalGate]]; integral or UTF8_BINARY string ids of one type)
+    * the rounds run on the driver: one collect of the pairs, the
+    * initial registers from the same md5 arithmetic, and `hops`
+    * max-merge rounds over primitive arrays — row-identical to the
+    * distributed rounds, schema included. The driver also holds the
+    * answer, nodes × (hops + 1) rows, so when that exceeds
+    * `localThreshold` the collected pairs are dropped and the
+    * distributed rounds run. */
+  def hyperballRegisters(edges: DataFrame, hops: Int = 3,
+      localThreshold: Long = LocalGate.DefaultRows): DataFrame = {
     require(hops >= 0, s"hops must be >= 0, got $hops")
-    val sym = edges.select(col("s"), col("d"))
-      .union(edges.select(col("d").as("s"), col("s").as("d")))
-      .filter(col("s") =!= col("d"))
-      .distinct()
-      .cutLineage()
+    val symPlan = symmetric(edges)
+    val (sym, local) = LocalGate.cut(symPlan, localThreshold,
+      edges.schema("s").dataType == edges.schema("d").dataType &&
+        LocalGate.stringableId(symPlan.schema("s").dataType))
+    if (!local) registerRounds(sym, hops, _.cutLineage())
+    else {
+      val (ids, src, dst) = densePairs(sym)
+      if (ids.length.toLong * (hops + 1) <= localThreshold) localHyperball(sym, ids, src, dst, hops)
+      else registerRounds(sym, hops, _.cutLineage())
+    }
+  }
+
+  private val regCols = (0 until 16).map(i => s"r$i")
+
+  /** The register rounds over the symmetric edge frame `sym`, each
+    * round's state passed through `materialize` (a lineage cut on the
+    * distributed path). r_i = rho when the node's md5-derived register
+    * index is i, else 0 (0 = never hit; a present register always has
+    * rho >= 1); each round a node takes the per-register max over
+    * itself and its neighbors. */
+  private def registerRounds(sym: DataFrame, hops: Int,
+      materialize: DataFrame => DataFrame): DataFrame = {
     val h = md5(col("node").cast("string"))
-    val regCols = (0 until 16).map(i => s"r$i")
-    // r_i = rho when the node's md5-derived register index is i, else 0
-    // (0 = never hit; a present register always has rho >= 1).
-    var state = sym.select(col("s").as("node")).distinct()
+    var state = materialize(sym.select(col("s").as("node")).distinct()
       .withColumn("__i", conv(substring(h, 1, 1), 16, 10).cast("int"))
       .withColumn("__w", conv(substring(h, 2, 8), 16, 10).cast("long"))
       .withColumn("__r", expr(s"1 + ${lz32CaseSql("__w")}"))
       .select(col("node") +: (0 until 16).map(i =>
         when(col("__i") === lit(i), col("__r")).otherwise(lit(0))
-          .as(s"r$i")): _*)
-      .cutLineage()
+          .as(s"r$i")): _*))
     var out = state.withColumn("h", lit(0))
     for (hop <- 1 to hops) {
-      state = state
+      state = materialize(state
         .unionByName(sym.join(state.withColumnRenamed("node", "d"), Seq("d"))
           .select(col("s").as("node") +: regCols.map(col): _*))
         .groupBy("node")
         .agg(max(regCols.head).as(regCols.head),
-          regCols.tail.map(c => max(c).as(c)): _*)
-        .cutLineage()
+          regCols.tail.map(c => max(c).as(c)): _*))
       out = out.unionByName(state.withColumn("h", lit(hop)))
     }
     out
+  }
+
+  /** Driver twin of [[registerRounds]] over the gated symmetric edge
+    * frame. Node i's initial register comes from md5 of its id's string
+    * form, as in the SQL: first hex digit = register index, next 8 hex
+    * digits = w, rho = 1 + nlz32(w) (what [[lz32CaseSql]] computes).
+    * Rounds are Jacobi, like the aggregate: every node merges its
+    * neighbors' registers of the previous round. `(ids, src, dst)` are
+    * `sym`'s pairs over dense node indices ([[densePairs]]). The schema
+    * is the distributed path's, derived by running [[registerRounds]]
+    * over empty stand-ins for each round's state. */
+  private def localHyperball(sym: DataFrame, ids: Array[Any], src: Array[Int],
+      dst: Array[Int], hops: Int): DataFrame = {
+    val spark = sym.sparkSession
+    val n = ids.length
+    var regs = new Array[Int](n * 16)
+    for (v <- 0 until n) {
+      val hex = org.apache.commons.codec.digest.DigestUtils.md5Hex(
+        ids(v).toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      val w = java.lang.Long.parseLong(hex.substring(1, 9), 16)
+      regs(v * 16 + Character.digit(hex.charAt(0), 16)) =
+        1 + Integer.numberOfLeadingZeros(w.toInt)
+    }
+    val rows = new java.util.ArrayList[Row](n * (hops + 1))
+    def emit(h: Int): Unit = for (v <- 0 until n)
+      rows.add(Row.fromSeq(ids(v) +: (0 until 16).map(j => regs(v * 16 + j)) :+ h))
+    emit(0)
+    for (hop <- 1 to hops) {
+      val next = regs.clone()
+      var e = 0
+      while (e < src.length) {
+        val to = src(e) * 16
+        val from = dst(e) * 16
+        var j = 0
+        while (j < 16) {
+          if (regs(from + j) > next(to + j)) next(to + j) = regs(from + j)
+          j += 1
+        }
+        e += 1
+      }
+      regs = next
+      emit(hop)
+    }
+    val schema = registerRounds(sym, hops,
+      df => spark.createDataFrame(java.util.List.of[Row](), df.schema)).schema
+    spark.createDataFrame(rows, schema)
+  }
+
+  /** The `(s, d)` id pairs of a gated two-column frame over dense node
+    * indices: `(ids, src, dst)`, `ids(i)` the id of index i. */
+  private def densePairs(pairs: DataFrame): (Array[Any], Array[Int], Array[Int]) = {
+    val nodes = new Interner
+    val rows = pairs.collect()
+    val src = rows.map(r => nodes(r.get(0)))
+    val dst = rows.map(r => nodes(r.get(1)))
+    (nodes.ids.toArray, src, dst)
   }
 
   /** Row-local HLL readout of a [[hyperballRegisters]] frame:
@@ -934,7 +1024,6 @@ object GraphAlgos {
     * no join, no shuffle; safe to run any number of times over a
     * pinned register frame. */
   def hyperballEstimates(registers: DataFrame): DataFrame = {
-    val regCols = (0 until 16).map(i => s"r$i")
     val npres = regCols.map(c =>
       when(col(c) > 0, lit(1)).otherwise(lit(0))).reduce(_ + _)
     // 2^-rho as 1.0/(1L << rho): exact dyadic rationals (rho <= 33,
@@ -968,11 +1057,7 @@ object GraphAlgos {
     * Per-round cost is O(k * edges touched at that radius). */
   def bfsHopsPerSeed(edges: DataFrame, seeds: DataFrame, maxHops: Int = 6,
       broadcastFrontierLimit: Long = 4L << 20): DataFrame = {
-    val sym = edges.select(col("s"), col("d"))
-      .union(edges.select(col("d").as("s"), col("s").as("d")))
-      .filter(col("s") =!= col("d"))
-      .distinct()
-      .cutLineage()
+    val sym = symmetric(edges).cutLineage()
     var settled = seeds
       .select(col(seeds.columns.head).cast(sym.schema("s").dataType).as("seed"))
       .distinct()
@@ -1074,7 +1159,15 @@ object GraphAlgos {
     * choice at step t is content-derived — index = md5(cur, t, start)
     * mod degree over the node's rank-ordered neighbor list — so the
     * SAME walks come out on every engine and every run (true rand()
-    * would be unverifiable AND non-resumable at scale).
+    * would be unverifiable AND non-resumable at scale). Exactly: the
+    * neighbor list of `cur` holds its partner in every distinct non-loop
+    * pair (u, v) it appears in, sorted ascending (a pair given both ways
+    * lists the partner twice); step t takes the neighbor at 0-based rank
+    * `pmod(x, degree)`, x the first 12 hex digits of
+    * md5("cur:t:start") read as a 48-bit integer. One row
+    * (start, step, node) per step taken, step 0 for every distinct
+    * start (absent and null ones included); a walk stops at a node
+    * with no neighbors.
     *
     * Scale shape: the ranked adjacency (neighbor rank + degree per
     * node) is built ONCE (one window over the node-keyed edge frame);
@@ -1082,24 +1175,33 @@ object GraphAlgos {
     * `steps` node-keyed joins total, no iteration-dependent state
     * growth (the frontier stays |starts| rows).
     *
+    * At or under `localThreshold` rows of the cut ranked adjacency
+    * ([[LocalGate]]; integral or UTF8_BINARY string ids of one type)
+    * the steps run on the driver over the collected adjacency, whose
+    * ranks are Spark's own: one collect of the adjacency and one of the
+    * starts, row-identical to the joins, schema included.
+    *
     * @param edges  undirected (u, v) pairs
     * @param starts 1-column frame of walk start nodes
     * @param steps  walk length in edges */
   def deterministicWalks(edges: DataFrame, starts: DataFrame,
-      steps: Int = 4): DataFrame = {
+      steps: Int = 4, localThreshold: Long = LocalGate.DefaultRows): DataFrame = {
     require(steps >= 1, s"steps must be >= 1, got $steps")
     val e = edges.filter(col("u") =!= col("v")).select("u", "v").distinct()
     val sym = e.select(col("u").as("s"), col("v").as("d"))
       .union(e.select(col("v").as("s"), col("u").as("d")))
     val wN = org.apache.spark.sql.expressions.Window
       .partitionBy("s").orderBy(col("d").asc)
-    val adj = sym
+    val ranked = sym
       .withColumn("rn", row_number().over(wN))
       .withColumn("deg", count(lit(1)).over(
         org.apache.spark.sql.expressions.Window.partitionBy("s")))
-      .cutLineage()
-    var walk = starts
+    val (adj, local) = LocalGate.cut(ranked, localThreshold,
+      edges.schema("u").dataType == edges.schema("v").dataType &&
+        LocalGate.stringableId(ranked.schema("s").dataType))
+    val startFrame = starts
       .select(col(starts.columns.head).cast(adj.schema("s").dataType).as("start"))
+    var walk = startFrame
       .distinct()
       .withColumn("cur", col("start"))
       .withColumn("step", lit(0))
@@ -1114,7 +1216,40 @@ object GraphAlgos {
         .select(col("start"), col("d").as("cur"), lit(t).as("step"))
       out = out.unionByName(walk)
     }
-    out.select(col("start"), col("step"), col("cur").as("node"))
+    val walks = out.select(col("start"), col("step"), col("cur").as("node"))
+    if (local) localWalks(adj, startFrame, steps, walks.schema) else walks
+  }
+
+  /** Driver twin of [[deterministicWalks]]' step joins over the gated
+    * ranked adjacency `(s, d, rn, deg)`: neighbor `rn` of each node is
+    * the row Spark ranked, and each step evaluates the join's md5 →
+    * 48-bit → `pmod` arithmetic on the driver. Starts are deduplicated
+    * on the driver (Java equality is Spark's for the admitted ids); a
+    * null or neighborless `cur` ends its walk, as the inner join drops
+    * it. */
+  private def localWalks(adj: DataFrame, startFrame: DataFrame, steps: Int,
+      schema: StructType): DataFrame = {
+    val nbrs = adj.collect().groupBy(_.get(0))
+      .map { case (s, rows) =>
+        val ordered = new Array[Any](rows.head.getLong(3).toInt)
+        rows.foreach(r => ordered(r.getInt(2) - 1) = r.get(1))
+        s -> ordered
+      }
+    val rows = new java.util.ArrayList[Row]()
+    for (start <- LocalGate.seeds(startFrame)) {
+      rows.add(Row(start, 0, start))
+      var cur = start
+      var t = 1
+      while (t <= steps && cur != null && nbrs.contains(cur)) {
+        val next = nbrs(cur)
+        val hex = org.apache.commons.codec.digest.DigestUtils.md5Hex(
+          s"$cur:$t:$start".getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        cur = next((java.lang.Long.parseLong(hex.substring(0, 12), 16) % next.length).toInt)
+        rows.add(Row(start, t, cur))
+        t += 1
+      }
+    }
+    adj.sparkSession.createDataFrame(rows, schema)
   }
 
   /** Per-community modularity accounting for a partition `labels`

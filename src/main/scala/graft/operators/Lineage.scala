@@ -52,6 +52,23 @@ object Lineage {
     org.apache.spark.sql.GraftLineageShim.resetStats(cp)
   }
 
+  /** [[cut]] that also returns the cut frame's row count. In
+    * `localCheckpoint` mode the count IS the cut's materializing job: a
+    * lazy local checkpoint, counted, caches its blocks as the count runs
+    * — one job, where `cut` followed by a count costs two. Reliable mode
+    * keeps the checkpoint and counts the durable copy: cut + count. */
+  def cutCounted(df: DataFrame): (DataFrame, Long) =
+    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) {
+      val cp = cut(df)
+      (cp, cp.rdd.count())
+    } else {
+      // the count job computes the checkpointed RDD, and the checkpoint
+      // completes when that job ends
+      val cp = df.localCheckpoint(eager = false)
+      val n = cp.rdd.count()
+      (org.apache.spark.sql.GraftLineageShim.resetStats(cp), n)
+    }
+
   /** `.cutLineage()` as a chainable postfix, mirroring the
     * `.localCheckpoint()` call sites it replaces. */
   implicit class CutOps(private val df: DataFrame) extends AnyVal {

@@ -12,29 +12,36 @@ import org.apache.spark.sql.types._
   * per round, which dominates wall-clock when the graph is small — and
   * aggregated ENTITY graphs (nations, owners, companies) stay small no
   * matter how large the fact data deriving them grows. [[Components]],
-  * [[Scc]], [[Matching]], and [[GraphAlgos]]' PageRank, BFS and weighted
-  * shortest paths therefore each keep a driver twin: the same rounds
-  * over a collected edge set, row-identical to the distributed loop
-  * (PageRank up to the order of its floating-point sums). Every one of
-  * them decides the same way: cut the frame its distributed loop starts
-  * from anyway, count it, and compare the count with the per-call
-  * `localThreshold` (default [[DefaultRows]]; 0 disables the twin).
-  * Above the gate the distributed loop runs unchanged after that one
-  * count job.
+  * [[Scc]], [[Matching]], and [[GraphAlgos]]' PageRank, BFS, weighted
+  * shortest paths, HyperBall registers and deterministic walks
+  * therefore each keep a driver twin: the same rounds over a collected
+  * edge set, row-identical to the distributed loop (PageRank up to the
+  * order of its floating-point sums). Every one of them decides the
+  * same way, through [[cut]]: cut the frame its distributed loop starts
+  * from anyway, count it in that cut's own job, and compare the count
+  * with the per-call `localThreshold` (default [[DefaultRows]]; 0
+  * disables the twin). A gated operator then costs the cut and one
+  * collect; above the gate the distributed loop runs unchanged on the
+  * cut frame.
   */
 object LocalGate {
 
   /** Default `localThreshold` of every twin: rows of the cut frame. */
   val DefaultRows: Long = 1L << 20
 
-  /** True when the driver twin should run: the gate is on
-    * (`threshold > 0`), the operator's own precondition holds, and the
-    * cut `frame` measures at or under `threshold` rows. The count is one
-    * job over the materialized partitions (`Dataset.count` would plan an
-    * aggregate exchange: two jobs under AQE), and a disabled gate or a
-    * failed precondition runs none. */
-  def admits(frame: DataFrame, threshold: Long, eligible: Boolean = true): Boolean =
-    threshold > 0 && eligible && frame.rdd.count() <= threshold
+  /** Cut `frame` (the distributed loop's starting frame) and decide the
+    * gate: `(cut frame, twin admitted)`. The twin is admitted when the
+    * gate is on (`threshold > 0`), the operator's own precondition
+    * holds, and the cut frame measures at or under `threshold` rows.
+    * The count comes from the cut's materializing job
+    * ([[Lineage.cutCounted]]), so the decision launches no job of its
+    * own (one count job under a reliable checkpoint dir); a disabled
+    * gate or a failed precondition counts nothing. */
+  def cut(frame: DataFrame, threshold: Long, eligible: Boolean = true): (DataFrame, Boolean) =
+    if (threshold > 0 && eligible) {
+      val (cp, rows) = Lineage.cutCounted(frame)
+      (cp, rows <= threshold)
+    } else (Lineage.cut(frame), false)
 
   /** Id types whose driver-side values are equal exactly when Spark
     * joins and groups them as equal: integral types, UTF8_BINARY
@@ -45,6 +52,18 @@ object LocalGate {
     case ByteType | ShortType | IntegerType | LongType => true
     case s: StringType => s.collationId == StringType.collationId
     case DateType | TimestampType | TimestampNTZType => true
+    case _ => false
+  }
+
+  /** Id types whose driver-side `toString`, UTF-8 encoded, is the byte
+    * string of Spark's `CAST(id AS STRING)` — what the twins that hash
+    * ids with md5 (HyperBall registers, deterministic walks) need on top
+    * of [[hashableId]]: integral types and UTF8_BINARY strings. Dates
+    * and timestamps cast through the session time zone, so they keep
+    * the distributed path. */
+  def stringableId(dt: DataType): Boolean = dt match {
+    case ByteType | ShortType | IntegerType | LongType => true
+    case s: StringType => s.collationId == StringType.collationId
     case _ => false
   }
 

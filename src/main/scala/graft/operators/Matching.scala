@@ -46,19 +46,20 @@ object Matching {
     * ~300-edge graph. 0 disables the gate. */
   def greedy(edges: DataFrame, maxRounds: Int = 128,
       localThreshold: Long = LocalGate.DefaultRows): DataFrame = {
-    var cur = edges.filter(col("u") =!= col("v"))
+    val deduped = edges.filter(col("u") =!= col("v"))
       .select(least(col("u"), col("v")).as("u"),
         greatest(col("u"), col("v")).as("v"), col("w"))
       .groupBy("u", "v").agg(max("w").as("w"))
-      .cutLineage()
     val integral = {
       import org.apache.spark.sql.types._
-      cur.schema.fields.forall(_.dataType match {
+      deduped.schema.fields.forall(_.dataType match {
         case ByteType | ShortType | IntegerType | LongType => true
         case _ => false
       })
     }
-    if (LocalGate.admits(cur, localThreshold, integral)) {
+    val (cutFrame, local) = LocalGate.cut(deduped, localThreshold, integral)
+    var cur = cutFrame
+    if (local) {
       val rows = cur.collect().map(r => (
         r.getAs[Number](0).longValue(), r.getAs[Number](1).longValue(),
         r.getAs[Number](2).longValue()))

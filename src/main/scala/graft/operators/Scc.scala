@@ -59,17 +59,16 @@ object Scc {
   def strongComponents(edges: DataFrame, src: String = "src",
       dst: String = "dst", maxOuter: Int = 8, maxProp: Int = 64,
       trimRounds: Int = 8, localThreshold: Long = LocalGate.DefaultRows): DataFrame = {
-    val dedup = edges.select(col(src).as("s"), col(dst).as("d"))
+    val dedupPlan = edges.select(col(src).as("s"), col(dst).as("d"))
       .filter(col("s") =!= col("d"))
       .distinct()
-      .cutLineage()
-    val integralIds = dedup.schema.fields.forall(_.dataType match {
+    val integralIds = dedupPlan.schema.fields.forall(_.dataType match {
       case org.apache.spark.sql.types.LongType |
            org.apache.spark.sql.types.IntegerType => true
       case _ => false
     })
-    if (LocalGate.admits(dedup, localThreshold, integralIds))
-      return localTarjan(dedup, dedup.schema(0).dataType)
+    val (dedup, local) = LocalGate.cut(dedupPlan, localThreshold, integralIds)
+    if (local) return localTarjan(dedup, dedup.schema(0).dataType)
 
     val gc = new Lineage.RoundGc(edges.sparkSession)
 

@@ -2,6 +2,7 @@ package graft.query
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Graft
 import graft.operators.{Components, GraphAlgos}
 
 /** Graph questions over the pipeline's materialized edge set — the
@@ -62,6 +63,7 @@ object GraphQueries {
     * relative to it, not global. */
   def influenceRanking(edges: DataFrame, relType: Option[String] = None,
       topK: Int = 50, from: Option[(String, String)] = None): DataFrame = {
+    Graft.install(edges.sparkSession)
     val e = pairWeights(edges, relType)
     val ranked = from match {
       case Some((t, id)) => GraphAlgos.personalizedPageRank(e, mkKey(t, id))
@@ -95,11 +97,13 @@ object GraphQueries {
     * steps (any direction), nearest first — Cypher's
     * `(a)-[*..k]-(b)` neighborhood. A CRM entity graph sits under the
     * [[graft.operators.LocalGate]] edge gate, so the hop rounds run
-    * as [[graft.operators.GraphAlgos.bfsHops]]' driver twin: one cut,
-    * one count and one collect of the edge set, then the sort of the
-    * answer — not a fixed number of Spark jobs per hop. */
+    * as [[graft.operators.GraphAlgos.bfsHops]]' driver twin: one
+    * counted cut and one collect of the edge set, and the answer is
+    * sorted on the driver ([[graft.plans.SortLocalRelation]]) — not a
+    * fixed number of Spark jobs per hop. */
   def neighborhood(edges: DataFrame, entityType: String, entityId: String,
       hops: Int = 2): DataFrame = {
+    Graft.install(edges.sparkSession)
     val e = edges.select(
       nodeKey(col("src_type"), col("src_id")).as("s"),
       nodeKey(col("dst_type"), col("dst_id")).as("d"))
@@ -118,10 +122,12 @@ object GraphQueries {
     * Under the [[graft.operators.LocalGate]] edge gate (every CRM entity
     * graph) the bounded relaxation runs as
     * [[graft.operators.GraphAlgos.shortestPaths]]' driver twin — one
-    * cut, one count and one collect of the pair edges instead of a
-    * fixed number of Spark jobs per hop — with bit-identical distances. */
+    * counted cut and one collect of the pair edges, sorted on the
+    * driver, instead of a fixed number of Spark jobs per hop — with
+    * bit-identical distances. */
   def shortestPath(edges: DataFrame, fromType: String, fromId: String,
       to: Option[(String, String)] = None, maxHops: Int = 6): DataFrame = {
+    Graft.install(edges.sparkSession)
     val pairs = pairWeights(edges, None)
       .select(col("src").as("s"), col("dst").as("d"),
         (lit(1.0) / col("weight")).as("w"))

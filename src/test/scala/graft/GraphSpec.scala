@@ -831,4 +831,116 @@ class GraphSpec extends AnyFunSuite {
     assert(rebuilt.isEmpty,
       s"register rounds re-ran during shared readouts: $rebuilt")
   }
+
+  /** True when `df` is a driver twin's answer (a local relation), not a
+    * plan over the distributed loop's frames. */
+  private def isLocal(df: DataFrame): Boolean = df.queryExecution.analyzed
+    .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+
+  test("driver twins: HyperBall registers and walks give the same rows and schema on both sides of the gate") {
+    def both(name: String, twin: Boolean, run: Long => DataFrame): Unit = {
+      val on = run(LocalGate.DefaultRows)
+      assert(isLocal(on) == twin, s"$name: expected the ${if (twin) "twin" else "loop"} path")
+      assertSameRows(on, run(0L), name)
+    }
+    def check(what: String, pairs: DataFrame, starts: DataFrame, twin: Boolean): Unit = {
+      val sd = pairs.select(col("a").as("s"), col("b").as("d"))
+      val uv = pairs.select(col("a").as("u"), col("b").as("v"))
+      for (hops <- Seq(0, 3))
+        both(s"$what hyperballRegisters hops=$hops", twin,
+          t => GraphAlgos.hyperballRegisters(sd, hops, localThreshold = t))
+      for (steps <- Seq(1, 4))
+        both(s"$what deterministicWalks steps=$steps", twin,
+          t => GraphAlgos.deterministicWalks(uv, starts, steps, localThreshold = t))
+    }
+    // random multigraphs with self-loops and duplicates; every node
+    // starts a walk, plus a duplicate, an absent and a null start
+    for ((es, i) <- randomGraphs(seed = 404, count = 3).zipWithIndex) {
+      val nodes = es.flatMap(e => Seq(e._1, e._2)).distinct
+      val starts = (nodes.map(Option(_)) ++ Seq(Some(nodes.head), Some(99L), None)).toDF("n")
+      check(s"random graph $i", es.toDF("a", "b"), starts, twin = true)
+    }
+    // string ids whose UTF-8 order (Spark's neighbor rank) differs from
+    // String.compareTo: U+FFFF sorts before U+1F600 in UTF-8 only
+    val (bmp, astral, astral2) = ("\uFFFF", "\uD83D\uDE00", "\uD83D\uDE01")
+    val strings = Seq(("c", bmp), ("c", astral), ("c", astral2), ("c", "a"),
+      (bmp, astral), ("a", astral2), (astral, "c")).toDF("a", "b")
+    check("string ids", strings,
+      Seq(Some("c"), Some(bmp), Some("c"), Some("zz"), None).toDF("n"), twin = true)
+    // dates stringify through the session time zone: the loops run
+    val d = (i: Int) => java.sql.Date.valueOf(java.time.LocalDate.of(2024, 1, i))
+    val dates = Seq((d(1), d(2)), (d(2), d(3)), (d(3), d(1)), (d(3), d(4)), (d(4), d(4)))
+      .toDF("a", "b")
+    check("date ids", dates, dates.select(col("a").as("n")), twin = false)
+  }
+
+  test("the HyperBall twin also gates on the rows it answers with") {
+    // a 10-node path: 18 symmetric pairs in, 10 nodes x 4 radii out
+    val path = (1L until 10L).map(i => (i, i + 1)).toDF("s", "d")
+    val loops = GraphAlgos.hyperballRegisters(path, 3, localThreshold = 0)
+    for ((t, twin) <- Seq(17L -> false, 18L -> false, 39L -> false, 40L -> true)) {
+      val got = GraphAlgos.hyperballRegisters(path, 3, localThreshold = t)
+      assert(isLocal(got) == twin, s"localThreshold $t: expected the ${if (twin) "twin" else "loops"}")
+      assertSameRows(got, loops, s"localThreshold $t")
+    }
+  }
+
+  test("property: deterministicWalks matches its brute force on both paths") {
+    // Brute force from the scaladoc: neighbors sorted ascending over the
+    // distinct non-loop pairs in both directions; step t takes 0-based
+    // rank pmod(first 12 hex digits of md5("cur:t:start"), degree).
+    def brute(es: Seq[(Long, Long)], starts: Seq[Option[Long]], steps: Int): Seq[(Any, Int, Any)] = {
+      val pairs = es.filter(e => e._1 != e._2).distinct
+      val nbrs = (pairs ++ pairs.map(_.swap)).groupBy(_._1).view
+        .mapValues(_.map(_._2).sorted).toMap
+      val md5 = java.security.MessageDigest.getInstance("MD5")
+      starts.distinct.flatMap {
+        case None => Seq((null, 0, null))
+        case Some(start) =>
+          var cur = start
+          (start, 0, start) +: (1 to steps).iterator.takeWhile(_ => nbrs.contains(cur)).map { t =>
+            val hex = md5.digest(s"$cur:$t:$start".getBytes("UTF-8"))
+              .map(b => f"${b & 0xff}%02x").mkString
+            val ns = nbrs(cur)
+            cur = ns((java.lang.Long.parseLong(hex.take(12), 16) % ns.size).toInt)
+            (start, t, cur)
+          }.toSeq
+      }
+    }
+    for (es <- randomGraphs(seed = 606, count = 4); steps <- Seq(1, 5)) {
+      val nodes = es.flatMap(e => Seq(e._1, e._2)).distinct
+      val starts = nodes.map(Option(_)) ++ Seq(Some(nodes.head), Some(99L), None)
+      val want = brute(es, starts, steps).groupBy(identity).view.mapValues(_.size).toMap
+      for (t <- Seq(LocalGate.DefaultRows, 0L)) {
+        val got = GraphAlgos.deterministicWalks(es.toDF("u", "v"), starts.toDF("n"), steps,
+            localThreshold = t)
+          .collect().map(r => (r.get(0), r.getInt(1), r.get(2))).toSeq
+          .groupBy(identity).view.mapValues(_.size).toMap
+        assert(got == want, s"walks (localThreshold=$t, steps=$steps) diverged on $es")
+      }
+    }
+  }
+
+  test("gated HyperBall and walk builds stay within their job budgets") {
+    // Measured on the twins: the counted cut (its shuffle stages and the
+    // counting result job) plus one collect; the readout and the
+    // literal starts add none. The loops take a fixed number of jobs
+    // per round, so falling back to them fails here.
+    val es = randomGraphs(seed = 707, count = 1).head.toDF("a", "b").localCheckpoint()
+    val sd = es.select(col("a").as("s"), col("b").as("d"))
+    val uv = es.select(col("a").as("u"), col("b").as("v"))
+    val starts = Seq(1L, 2L, 3L).toDF("n")
+    def jobs(what: String, budget: Int)(run: Long => DataFrame): Unit = {
+      var rows = 0
+      val twin = TestSpark.jobsDuring { rows = run(LocalGate.DefaultRows).collect().length }
+      val loop = TestSpark.jobsDuring { run(0L).collect() }
+      info(s"$what: $twin jobs gated, $loop on the loops, $rows rows")
+      assert(rows > 0, s"$what returned nothing")
+      assert(twin <= budget, s"$what launched $twin jobs, budget $budget")
+    }
+    jobs("hyperballRegisters + hyperballEstimates", 3)(t =>
+      GraphAlgos.hyperballEstimates(GraphAlgos.hyperballRegisters(sd, 3, localThreshold = t)))
+    jobs("deterministicWalks", 4)(t =>
+      GraphAlgos.deterministicWalks(uv, starts, 4, localThreshold = t))
+  }
 }

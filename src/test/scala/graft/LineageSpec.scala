@@ -107,4 +107,31 @@ class LineageSpec extends AnyFunSuite {
     assert(got12.keySet == want.keySet)
     want.foreach { case (k, v) => assert(math.abs(got12(k) - v) < 1e-12) }
   }
+
+  test("Lineage.cutCounted: the count is the cut's own job locally; reliable mode adds one") {
+    val sc = spark.sparkContext
+    // a fresh plan per call: a Dataset keeps its executed AQE plan, so a
+    // second cut of the same object would skip the shuffle stage
+    def df = (1 to 50).toDF("a").repartition(3)
+    def check(what: String, extraJobs: Int): Unit = {
+      var got: (org.apache.spark.sql.DataFrame, Long) = null
+      val counted = TestSpark.jobsDuring { got = Lineage.cutCounted(df) }
+      val cut = TestSpark.jobsDuring { Lineage.cut(df) }
+      assert(got._2 == 50L, s"$what: counted ${got._2}")
+      assert(counted == cut + extraJobs, s"$what: $counted jobs counted vs $cut for the cut")
+      assert(got._1.collect().map(_.getInt(0)).sorted.toSeq == (1 to 50), what)
+    }
+    check("local", 0)
+    // the count job completes the local checkpoint: reading the cut
+    // frame again computes none of its rows
+    val computed = sc.longAccumulator("rows computed")
+    val tick = udf { (a: Int) => computed.add(1L); a }
+    val (cp, n) = Lineage.cutCounted(df.select(tick(col("a")).as("a")))
+    assert(n == 50L && computed.value == 50L, s"counted $n, computed ${computed.value}")
+    assert(cp.collect().length == 50 && cp.count() == 50L)
+    assert(computed.value == 50L, s"${computed.value} rows computed after reading the cut")
+    sc.setCheckpointDir(java.nio.file.Files.createTempDirectory("graft-ckpt").toString)
+    try check("reliable", 1)
+    finally sc.setCheckpointDir(null)
+  }
 }

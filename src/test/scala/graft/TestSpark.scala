@@ -18,4 +18,26 @@ object TestSpark {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** Spark jobs launched while `body` runs, counted by a listener once
+    * the bus has gone quiet. */
+  def jobsDuring(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = n.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(l)
+    try body
+    finally {
+      var last = -1; var stable = 0
+      while (stable < 3) {
+        Thread.sleep(100)
+        val cur = n.get()
+        if (cur == last) stable += 1 else { stable = 0; last = cur }
+      }
+      spark.sparkContext.removeSparkListener(l)
+    }
+    n.get()
+  }
 }
