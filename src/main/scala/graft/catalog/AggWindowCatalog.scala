@@ -6388,15 +6388,20 @@ object AggWindowCatalog {
         // join-back. a_gt at a marker = sum of contrib c over rows
         // with the same v and y' > y = the exact integer the old
         // (groupBy + rowsBetween-minus-self + join) chain produced.
+        // It is taken as the partition total minus the running sum up
+        // to y's last peer: both frames are linear, where a frame
+        // ending at UNBOUNDED FOLLOWING with a bounded start
+        // re-aggregates the whole suffix for every row.
         val contrib = p.crossJoin(xmax).filter(col("x") < col("xmax"))
           .select(explode(expr("sequence(x + 1, xmax)")).as("v"),
             col("y"), col("cnt").as("c"), lit(0L).as("cellcnt"))
           .unionByName(p.select(col("x").as("v"), col("y"),
             lit(0L).as("c"), col("cnt").as("cellcnt")))
-        val wSuf = Window.partitionBy("v").orderBy(col("y").asc)
-          .rangeBetween(1L, Window.unboundedFollowing)
+        val byV = Window.partitionBy("v")
+        val upToY = byV.orderBy(col("y").asc)
+          .rangeBetween(Window.unboundedPreceding, Window.currentRow)
         val st = contrib
-          .withColumn("a_gt", coalesce(sum("c").over(wSuf), lit(0L)))
+          .withColumn("a_gt", sum("c").over(byV) - sum("c").over(upToY))
           .agg(sum("cellcnt").as("n"),
             sum(expr("cellcnt * a_gt")).as("nd"),
             sum(expr("cellcnt * (cellcnt - 1) div 2")).as("n3"))

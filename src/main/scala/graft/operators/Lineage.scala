@@ -69,6 +69,21 @@ object Lineage {
       (org.apache.spark.sql.GraftLineageShim.resetStats(cp), n)
     }
 
+  /** Frees the blocks a [[cut]] of `df` holds in local-checkpoint mode
+    * (its persisted RDD, found through the lineage of `df`'s scan), once
+    * nothing reads `df` again. Reliable checkpoints keep their files;
+    * [[RoundGc]] owns those. */
+  def release(df: DataFrame): Unit = {
+    def free(rdd: org.apache.spark.rdd.RDD[_]): Unit =
+      if (rdd.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE)
+        rdd.unpersist(blocking = false)
+      else rdd.dependencies.foreach(d => free(d.rdd))
+    df.queryExecution.analyzed.foreach {
+      case r: org.apache.spark.sql.execution.LogicalRDD => free(r.rdd)
+      case _ =>
+    }
+  }
+
   /** `.cutLineage()` as a chainable postfix, mirroring the
     * `.localCheckpoint()` call sites it replaces. */
   implicit class CutOps(private val df: DataFrame) extends AnyVal {

@@ -6,6 +6,8 @@ import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types._
 
+import graft.plans.LocalEval
+
 /** The one size gate in front of every driver twin.
   *
   * An iterative distributed operator costs a fixed number of Spark jobs
@@ -17,13 +19,19 @@ import org.apache.spark.sql.types._
   * therefore each keep a driver twin: the same rounds over a collected
   * edge set, row-identical to the distributed loop (PageRank up to the
   * order of its floating-point sums). Every one of them decides the
-  * same way, through [[cut]]: cut the frame its distributed loop starts
-  * from anyway, count it in that cut's own job, and compare the count
-  * with the per-call `localThreshold` (default [[DefaultRows]]; 0
-  * disables the twin). A gated operator then costs the cut and one
-  * collect; above the gate the distributed loop runs unchanged on the
-  * cut frame.
-  */
+  * same way, through [[cut]], against the per-call `localThreshold`
+  * (default [[DefaultRows]]; 0 disables the twin):
+  *  - the frame its distributed loop starts from is first offered to
+  *    [[graft.plans.LocalEval]]: when that frame's plan evaluates on the
+  *    driver and its narrow inputs fit the broadcast byte budget, the
+  *    twin gets it as a local relation from one narrow job per input,
+  *    and the shuffles below the cut never run;
+  *  - otherwise the frame is cut as before, counted in the cut's own
+  *    job; at or under the threshold it is collected into a local
+  *    relation and the cut's blocks are released at once;
+  *  - above the threshold the distributed loop runs on the cut frame.
+  * A twin therefore always reads its cut frame as a local relation,
+  * whose collect launches no job. */
 object LocalGate {
 
   /** Default `localThreshold` of every twin: rows of the cut frame. */
@@ -32,15 +40,26 @@ object LocalGate {
   /** Cut `frame` (the distributed loop's starting frame) and decide the
     * gate: `(cut frame, twin admitted)`. The twin is admitted when the
     * gate is on (`threshold > 0`), the operator's own precondition
-    * holds, and the cut frame measures at or under `threshold` rows.
-    * The count comes from the cut's materializing job
-    * ([[Lineage.cutCounted]]), so the decision launches no job of its
-    * own (one count job under a reliable checkpoint dir); a disabled
-    * gate or a failed precondition counts nothing. */
+    * holds, and the cut frame measures at or under `threshold` rows;
+    * an admitted cut frame is a local relation. [[graft.plans.LocalEval]]
+    * answers small plans with one job per narrow input. Otherwise the
+    * count comes from the cut's materializing job
+    * ([[Lineage.cutCounted]]; one count job more under a reliable
+    * checkpoint dir), and an admitted cut is collected in one job and
+    * released. A disabled gate or a failed precondition counts
+    * nothing. */
   def cut(frame: DataFrame, threshold: Long, eligible: Boolean = true): (DataFrame, Boolean) =
     if (threshold > 0 && eligible) {
-      val (cp, rows) = Lineage.cutCounted(frame)
-      (cp, rows <= threshold)
+      val local = LocalEval(frame, threshold)
+      if (LocalEval.localRows(local).exists(_ <= threshold)) (local, true)
+      else {
+        val (cp, rows) = Lineage.cutCounted(frame)
+        if (rows <= threshold) {
+          val collected = LocalEval.collected(cp)
+          Lineage.release(cp)
+          (collected, true)
+        } else (cp, false)
+      }
     } else (Lineage.cut(frame), false)
 
   /** Id types whose driver-side values are equal exactly when Spark

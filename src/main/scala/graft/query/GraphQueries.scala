@@ -62,7 +62,7 @@ object GraphQueries {
     * With `from`, ranks are personalized to that entity — influence
     * relative to it, not global. */
   def influenceRanking(edges: DataFrame, relType: Option[String] = None,
-      topK: Int = 50, from: Option[(String, String)] = None): DataFrame = {
+      topK: Int = 50, from: Option[(String, String)] = None): DataFrame = answer {
     Graft.install(edges.sparkSession)
     val e = pairWeights(edges, relType)
     val ranked = from match {
@@ -80,7 +80,7 @@ object GraphQueries {
     * largest communities first. The component label is the
     * lexicographically smallest member key rendered as `type:id` —
     * stable across runs. */
-  def communities(edges: DataFrame, relType: Option[String] = None): DataFrame = {
+  def communities(edges: DataFrame, relType: Option[String] = None): DataFrame = answer {
     val e = scoped(edges, relType).select(
       nodeKey(col("src_type"), col("src_id")).as("s"),
       nodeKey(col("dst_type"), col("dst_id")).as("d"))
@@ -97,12 +97,13 @@ object GraphQueries {
     * steps (any direction), nearest first — Cypher's
     * `(a)-[*..k]-(b)` neighborhood. A CRM entity graph sits under the
     * [[graft.operators.LocalGate]] edge gate, so the hop rounds run
-    * as [[graft.operators.GraphAlgos.bfsHops]]' driver twin: one
-    * counted cut and one collect of the edge set, and the answer is
-    * sorted on the driver ([[graft.plans.SortLocalRelation]]) — not a
-    * fixed number of Spark jobs per hop. */
+    * as [[graft.operators.GraphAlgos.bfsHops]]' driver twin over a cut
+    * frame [[graft.plans.LocalEval]] builds from one job per narrow
+    * input (a counted cut and one collect when it declines), and the
+    * answer is sorted on the driver — not a fixed number of Spark jobs
+    * per hop. */
   def neighborhood(edges: DataFrame, entityType: String, entityId: String,
-      hops: Int = 2): DataFrame = {
+      hops: Int = 2): DataFrame = answer {
     Graft.install(edges.sparkSession)
     val e = edges.select(
       nodeKey(col("src_type"), col("src_id")).as("s"),
@@ -121,12 +122,13 @@ object GraphQueries {
     * answer to one destination row; unreachable entities are absent.
     * Under the [[graft.operators.LocalGate]] edge gate (every CRM entity
     * graph) the bounded relaxation runs as
-    * [[graft.operators.GraphAlgos.shortestPaths]]' driver twin — one
-    * counted cut and one collect of the pair edges, sorted on the
+    * [[graft.operators.GraphAlgos.shortestPaths]]' driver twin — its
+    * pair edges from one job per narrow input ([[graft.plans.LocalEval]];
+    * a counted cut and one collect when it declines), sorted on the
     * driver, instead of a fixed number of Spark jobs per hop — with
     * bit-identical distances. */
   def shortestPath(edges: DataFrame, fromType: String, fromId: String,
-      to: Option[(String, String)] = None, maxHops: Int = 6): DataFrame = {
+      to: Option[(String, String)] = None, maxHops: Int = 6): DataFrame = answer {
     Graft.install(edges.sparkSession)
     val pairs = pairWeights(edges, None)
       .select(col("src").as("s"), col("dst").as("d"),
@@ -156,7 +158,13 @@ object GraphQueries {
     * mode pivots only on the entity's neighbor set, so the wedge input
     * is the 2-hop frontier rather than the full edge set. */
   def linkSuggestions(edges: DataFrame, forEntity: Option[(String, String)] = None,
-      relType: Option[String] = None, topK: Int = 20): DataFrame = {
+      relType: Option[String] = None, topK: Int = 20): DataFrame =
+    answer(linkSuggestionPlan(edges, forEntity, relType, topK))
+
+  /** The distributed plan of [[linkSuggestions]], before it is offered
+    * to [[graft.plans.LocalEval]]. */
+  private[graft] def linkSuggestionPlan(edges: DataFrame, forEntity: Option[(String, String)],
+      relType: Option[String], topK: Int): DataFrame = {
     val und = pairWeights(edges, relType)
       .select(least(col("src"), col("dst")).as("u"),
         greatest(col("src"), col("dst")).as("v"))
@@ -218,7 +226,7 @@ object GraphQueries {
     * many closed entity triples each entity participates in — the
     * Cypher `(a)--(b)--(c)--(a)` cohesion question. Entities in no
     * triangle are omitted; most-embedded first. */
-  def triangleCohesion(edges: DataFrame, relType: Option[String] = None): DataFrame = {
+  def triangleCohesion(edges: DataFrame, relType: Option[String] = None): DataFrame = answer {
     val e = scoped(edges, relType).select(
       nodeKey(col("src_type"), col("src_id")).as("u"),
       nodeKey(col("dst_type"), col("dst_id")).as("v"))

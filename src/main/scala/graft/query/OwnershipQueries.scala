@@ -23,30 +23,33 @@ object OwnershipQueries {
       col("last_name").as("owner_last_name")))
 
   /** Owner of one contact by exact email (query_ownership.py:24-37). */
-  def contactOwner(g: GraphTables, email: String): DataFrame =
+  def contactOwner(g: GraphTables, email: String): DataFrame = answer {
     g.contacts.filter(col("email") === email)
       .select(col("first_name"), col("last_name"), col("email"), col("owner_id"))
       .join(ownerDim(g.users), col("owner_id") === col("owner_key"))
       .select(col("first_name"), col("last_name"), col("email"),
         col("owner_email"), col("owner_first_name"), col("owner_last_name"))
+  }
 
   /** Owner of companies matching a name substring (query_ownership.py:39-52). */
-  def companyOwner(g: GraphTables, nameNeedle: String): DataFrame =
+  def companyOwner(g: GraphTables, nameNeedle: String): DataFrame = answer {
     g.companies.filter(col("name").contains(nameNeedle))
       .select(col("name"), col("domain"), col("owner_id"))
       .join(ownerDim(g.users), col("owner_id") === col("owner_key"))
       .select(col("name"), col("domain"),
         col("owner_email"), col("owner_first_name"), col("owner_last_name"))
       .orderBy("name")
+  }
 
   /** Owner of deals matching a name substring (query_ownership.py:54-68). */
-  def dealOwner(g: GraphTables, nameNeedle: String): DataFrame =
+  def dealOwner(g: GraphTables, nameNeedle: String): DataFrame = answer {
     g.deals.filter(col("name").contains(nameNeedle))
       .select(col("name"), col("amount"), col("stage"), col("owner_id"))
       .join(ownerDim(g.users), col("owner_id") === col("owner_key"))
       .select(col("name"), col("amount"), col("stage"),
         col("owner_email"), col("owner_first_name"), col("owner_last_name"))
       .orderBy("name")
+  }
 
   /** Everything one user owns: rosters + counts + pipeline value
     * (query_ownership.py:70-89).
@@ -59,7 +62,7 @@ object OwnershipQueries {
     * correct totals, and the only shape that works at scale: each fact
     * table is reduced to |owners| rows before any join, instead of
     * materializing a three-way row explosion. */
-  def userOwnership(g: GraphTables, userEmail: String): DataFrame = {
+  def userOwnership(g: GraphTables, userEmail: String): DataFrame = answer {
     val u = g.users.filter(col("email") === userEmail)
       .select(col("hubspot_id").as("owner_key"), ownerName.as("owner"),
         col("email"))
@@ -95,7 +98,7 @@ object OwnershipQueries {
     * (query_ownership.py:91-108). Same pre-aggregated shape as
     * [[userOwnership]] — `sum(amount)` must see each deal row exactly
     * once, not once per (contact, company) pair. */
-  def allOwnerships(g: GraphTables): DataFrame = {
+  def allOwnerships(g: GraphTables): DataFrame = answer {
     val u = g.users.select(col("hubspot_id").as("owner_key"), ownerName.as("owner"),
       col("email"))
     val contactAgg = g.contacts.groupBy(col("owner_id").as("c_own"))
@@ -120,7 +123,7 @@ object OwnershipQueries {
   }
 
   /** All contacts with their owners (query_ownership.py:110-123). */
-  def contactsWithOwners(g: GraphTables, limit: Int = 100): DataFrame =
+  def contactsWithOwners(g: GraphTables, limit: Int = 100): DataFrame = answer {
     g.contacts
       .join(broadcast(g.users.select(col("hubspot_id").as("owner_key"),
         ownerName.as("owner"))), col("owner_id") === col("owner_key"))
@@ -128,9 +131,10 @@ object OwnershipQueries {
         col("hubspot_id").as("contact_id"))
       .orderBy("contact_id")
       .limit(limit)
+  }
 
   /** All companies with their owners (query_ownership.py:125-137). */
-  def companiesWithOwners(g: GraphTables, limit: Int = 100): DataFrame =
+  def companiesWithOwners(g: GraphTables, limit: Int = 100): DataFrame = answer {
     g.companies
       .join(broadcast(g.users.select(col("hubspot_id").as("owner_key"),
         ownerName.as("owner"))), col("owner_id") === col("owner_key"))
@@ -138,9 +142,10 @@ object OwnershipQueries {
         col("hubspot_id").as("company_id"))
       .orderBy("company_id")
       .limit(limit)
+  }
 
   /** Top deals with their owners, by amount (query_ownership.py:139-152). */
-  def dealsWithOwners(g: GraphTables, limit: Int = 100): DataFrame =
+  def dealsWithOwners(g: GraphTables, limit: Int = 100): DataFrame = answer {
     g.deals
       .join(broadcast(g.users.select(col("hubspot_id").as("owner_key"),
         ownerName.as("owner"))), col("owner_id") === col("owner_key"))
@@ -148,4 +153,5 @@ object OwnershipQueries {
         col("hubspot_id").as("deal_id"))
       .orderBy(desc_nulls_last("amount"), col("deal_id"))
       .limit(limit)
+  }
 }

@@ -140,22 +140,26 @@ object QuerySql {
        GROUP BY owner_key, owner_name, owner_email, active
        ORDER BY owner_key"""
 
-  /** reporting/queries.py:122-141 — ReportQueries.allOwnersSummary. */
+  /** reporting/queries.py:122-141 — ReportQueries.allOwnersSummary: one
+    * row per owner from each entity table before the left joins. */
   val allOwnersSummary: String =
     s"""SELECT owner_key, owner_name, owner_email,
-         count(DISTINCT c_id) AS n_contacts,
-         count(DISTINCT co_id) AS n_companies,
-         count(DISTINCT d_id) AS n_deals,
-         round(coalesce(sum(amount), 0.0d), 2) AS total_deal_value
-       FROM (SELECT hubspot_id AS owner_key, $ownerName AS owner_name,
+         coalesce(c, 0L) AS n_contacts,
+         coalesce(co, 0L) AS n_companies,
+         coalesce(d, 0L) AS n_deals,
+         round(coalesce(value, 0.0d), 2) AS total_deal_value
+       FROM (SELECT DISTINCT hubspot_id AS owner_key, $ownerName AS owner_name,
                email AS owner_email FROM users) u
-       LEFT JOIN (SELECT hubspot_id AS c_id, owner_id AS c_own FROM contacts)
+       LEFT JOIN (SELECT owner_id AS c_own, count(DISTINCT hubspot_id) AS c
+                  FROM contacts GROUP BY owner_id)
          ON c_own = owner_key
-       LEFT JOIN (SELECT hubspot_id AS co_id, owner_id AS co_own FROM companies)
+       LEFT JOIN (SELECT owner_id AS co_own, count(DISTINCT hubspot_id) AS co
+                  FROM companies GROUP BY owner_id)
          ON co_own = owner_key
-       LEFT JOIN (SELECT hubspot_id AS d_id, owner_id AS d_own, amount FROM deals)
+       LEFT JOIN (SELECT owner_id AS d_own, count(DISTINCT hubspot_id) AS d,
+                    sum(amount) AS value
+                  FROM deals GROUP BY owner_id)
          ON d_own = owner_key
-       GROUP BY owner_key, owner_name, owner_email
        ORDER BY n_contacts DESC, owner_key"""
 
   /** reporting/queries.py:150-156 — ReportQueries.contactsByLifecycle. */

@@ -40,15 +40,16 @@ object ReportQueries {
 
   /** Owner lookup by name OR email substring, with team membership
     * (P4; reporting/queries.py:273-295). */
-  def findOwner(g: GraphTables, needle: String): DataFrame =
+  def findOwner(g: GraphTables, needle: String): DataFrame = answer {
     g.users.filter(ownerNameFilter(needle) || col("email").contains(needle))
       .select(col("hubspot_id"), ownerName.as("owner_name"), col("email"),
         col("active"), col("teams"))
       .orderBy("hubspot_id")
+  }
 
   /** Per-owner contact roster (reporting/queries.py:9-33): J2 broadcast
     * equi-join, contacts keep their partitioning. */
-  def contactsByOwner(g: GraphTables, needle: String): DataFrame =
+  def contactsByOwner(g: GraphTables, needle: String): DataFrame = answer {
     g.contacts.join(matchedOwners(g, needle), col("owner_id") === col("owner_key"))
       .select(col("owner_email"), col("owner_name"),
         col("hubspot_id").as("contact_id"), col("email").as("contact_email"),
@@ -57,9 +58,10 @@ object ReportQueries {
         col("job_title"), col("lifecycle_stage"), col("created_date"),
         col("last_modified"))
       .orderBy(desc_nulls_last("created_date"), col("contact_id"))
+  }
 
   /** Per-owner company roster (reporting/queries.py:35-64). */
-  def companiesByOwner(g: GraphTables, needle: String): DataFrame =
+  def companiesByOwner(g: GraphTables, needle: String): DataFrame = answer {
     g.companies.join(matchedOwners(g, needle), col("owner_id") === col("owner_key"))
       .select(col("owner_email"), col("owner_name"),
         col("hubspot_id").as("company_id"), col("name").as("company_name"),
@@ -67,15 +69,17 @@ object ReportQueries {
         col("city"), col("state"), col("country"), col("created_date"),
         col("last_modified"))
       .orderBy(desc_nulls_last("created_date"), col("company_id"))
+  }
 
   /** Per-owner deal roster (reporting/queries.py:66-94). */
-  def dealsByOwner(g: GraphTables, needle: String): DataFrame =
+  def dealsByOwner(g: GraphTables, needle: String): DataFrame = answer {
     g.deals.join(matchedOwners(g, needle), col("owner_id") === col("owner_key"))
       .select(col("owner_email"), col("owner_name"),
         col("hubspot_id").as("deal_id"), col("name").as("deal_name"),
         col("amount"), col("stage"), col("pipeline"), col("close_date"),
         col("created_date"), col("last_modified"))
       .orderBy(desc_nulls_last("created_date"), col("deal_id"))
+  }
 
   /** Summary statistics for owners matching a name pattern
     * (reporting/queries.py:96-119): the allOwnersSummary A2 counts with
@@ -85,7 +89,7 @@ object ReportQueries {
     * shape): chaining the three left joins first would build
     * n_contacts x n_companies x n_deals rows per owner for
     * `countDistinct` to fold back down. */
-  def ownerSummary(g: GraphTables, needle: String): DataFrame = {
+  def ownerSummary(g: GraphTables, needle: String): DataFrame = answer {
     val u = g.users.filter(ownerNameFilter(needle))
       .select(col("hubspot_id").as("owner_key"), ownerName.as("owner_name"),
         col("email").as("owner_email"), col("active"))
@@ -105,42 +109,46 @@ object ReportQueries {
         coalesce(col("deals_owned"), lit(0L)).as("deals_owned"))
   }
 
-  /** Per-owner entity counts + pipeline value — the A2 shape: three left
-    * joins then DISTINCT counts (reporting/queries.py:122-141,
-    * query_ownership.py:82-103). */
-  def allOwnersSummary(g: GraphTables): DataFrame = {
+  /** Per-owner entity counts + pipeline value — the A2 shape
+    * (reporting/queries.py:122-141, query_ownership.py:82-103), with
+    * each entity table reduced to one row per owner BEFORE the left
+    * joins, as [[ownerSummary]] does: chaining the joins first would
+    * sum each deal's `amount` once per (contact, company) pair. */
+  def allOwnersSummary(g: GraphTables): DataFrame = answer {
     // users must be the PRESERVED side of the left joins (owners with zero
     // entities stay in the report), so it cannot be the broadcast build
-    // side; the entity sides shuffle on owner_id instead (tiny key space).
+    // side; users are not deduplicated upstream, so one row per owner
     val u = g.users.select(col("hubspot_id").as("owner_key"),
-      ownerName.as("owner_name"), col("email").as("owner_email"))
-    u.join(g.contacts.select(col("hubspot_id").as("c_id"), col("owner_id").as("c_own")),
-        col("c_own") === col("owner_key"), "left")
-      .join(g.companies.select(col("hubspot_id").as("co_id"), col("owner_id").as("co_own")),
-        col("co_own") === col("owner_key"), "left")
-      .join(g.deals.select(col("hubspot_id").as("d_id"), col("owner_id").as("d_own"),
-        col("amount")), col("d_own") === col("owner_key"), "left")
-      .groupBy("owner_key", "owner_name", "owner_email")
-      .agg(countDistinct("c_id").as("n_contacts"),
-        countDistinct("co_id").as("n_companies"),
-        countDistinct("d_id").as("n_deals"),
-        round(coalesce(sum("amount"), lit(0.0)), 2).as("total_deal_value"))
+      ownerName.as("owner_name"), col("email").as("owner_email")).distinct()
+    def owned(df: DataFrame, aggs: Column*): DataFrame =
+      df.groupBy(col("owner_id").as("owner_key")).agg(aggs.head, aggs.tail: _*)
+    u.join(owned(g.contacts, countDistinct("hubspot_id").as("c")), Seq("owner_key"), "left")
+      .join(owned(g.companies, countDistinct("hubspot_id").as("co")), Seq("owner_key"), "left")
+      .join(owned(g.deals, countDistinct("hubspot_id").as("d"), sum("amount").as("value")),
+        Seq("owner_key"), "left")
+      .select(col("owner_key"), col("owner_name"), col("owner_email"),
+        coalesce(col("c"), lit(0L)).as("n_contacts"),
+        coalesce(col("co"), lit(0L)).as("n_companies"),
+        coalesce(col("d"), lit(0L)).as("n_deals"),
+        round(coalesce(col("value"), lit(0.0)), 2).as("total_deal_value"))
       .orderBy(desc("n_contacts"), col("owner_key"))
   }
 
   /** A1 — contacts per lifecycle stage (reporting/queries.py:150-156). */
-  def contactsByLifecycle(g: GraphTables): DataFrame =
+  def contactsByLifecycle(g: GraphTables): DataFrame = answer {
     g.contacts.groupBy("lifecycle_stage").agg(count(lit(1)).as("n"))
       .orderBy(desc("n"), col("lifecycle_stage"))
+  }
 
   /** A1/P5 — companies per industry (reporting/queries.py:165-172). */
-  def companiesByIndustry(g: GraphTables): DataFrame =
+  def companiesByIndustry(g: GraphTables): DataFrame = answer {
     g.companies.filter(col("industry").isNotNull)
       .groupBy("industry").agg(count(lit(1)).as("n"))
       .orderBy(desc("n"), col("industry"))
+  }
 
   /** A7 — lifecycle funnel with conversion rate (README.md:314-336). */
-  def conversionFunnel(g: GraphTables): DataFrame = {
+  def conversionFunnel(g: GraphTables): DataFrame = answer {
     val submits = g.edges.filter(col("rel_type") === "SUBMITTED_BY")
       .groupBy(col("dst_id").as("c_id")).agg(count(lit(1)).as("n_submissions"))
     g.contacts
@@ -156,7 +164,7 @@ object ReportQueries {
   }
 
   /** A8 — per-campaign open/click rate (README.md:348-356, main.py:180-187). */
-  def campaignPerformance(g: GraphTables): DataFrame = {
+  def campaignPerformance(g: GraphTables): DataFrame = answer {
     val opens = g.opens.groupBy(col("campaign_id")).agg(count(lit(1)).as("n_opens"))
     val clicks = g.clicks.groupBy(col("campaign_id")).agg(count(lit(1)).as("n_clicks"))
     // campaigns is the preserved side of the left joins (campaigns with
@@ -173,7 +181,7 @@ object ReportQueries {
 
   /** A5/A6 — campaign engagement detail: first 10 opens (ordered collect
     * slice) + distinct clicked URLs (README.md:264-295). */
-  def campaignEngagement(g: GraphTables, campaignId: String): DataFrame = {
+  def campaignEngagement(g: GraphTables, campaignId: String): DataFrame = answer {
     val o = g.opens.filter(col("campaign_id") === campaignId)
       .groupBy("campaign_id")
       .agg(min("timestamp").as("first_open"), max("timestamp").as("last_open"),
@@ -187,7 +195,7 @@ object ReportQueries {
   }
 
   /** O2 — top companies by associated deal value (README.md:341-346). */
-  def topCompaniesByDealValue(g: GraphTables, k: Int): DataFrame =
+  def topCompaniesByDealValue(g: GraphTables, k: Int): DataFrame = answer {
     g.edges.filter(col("rel_type") === "BELONGS_TO")
       .select(col("src_id").as("deal_id"), col("dst_id").as("company_id"))
       .join(g.deals.select(col("hubspot_id").as("deal_id"), col("amount")), Seq("deal_id"))
@@ -197,19 +205,21 @@ object ReportQueries {
         Seq("company_id"))
       .orderBy(desc("total_value"), col("company_id"))
       .limit(k)
+  }
 
   /** J5 — contacts with no company (README.md:376-381). */
-  def contactsWithoutCompany(g: GraphTables): DataFrame =
+  def contactsWithoutCompany(g: GraphTables): DataFrame = answer {
     g.contacts.join(
         g.edges.filter(col("rel_type") === "WORKS_AT")
           .select(col("src_id").as("hubspot_id")),
         Seq("hubspot_id"), "left_anti")
       .select(col("hubspot_id"), col("email"), col("first_name"), col("last_name"))
       .orderBy("hubspot_id")
+  }
 
   /** J4 — contacts with any engagement: OR of three EXISTS = union of
     * semi-joins + distinct (README.md:299-312, DATA_MODEL.md:573-585). */
-  def engagedContacts(g: GraphTables): DataFrame = {
+  def engagedContacts(g: GraphTables): DataFrame = answer {
     val byOpen = g.contacts.join(
       g.opens.select(col("recipient_email").as("email")), Seq("email"), "left_semi")
     val byClick = g.contacts.join(
@@ -225,7 +235,7 @@ object ReportQueries {
   /** U1 — combined contacts+companies per owner, aligned columns (the
     * reference Cypher is malformed; this implements the documented intent,
     * reporting/queries.py:298-334). */
-  def combinedOwnerView(g: GraphTables): DataFrame = {
+  def combinedOwnerView(g: GraphTables): DataFrame = answer {
     val u = broadcast(g.users.select(col("hubspot_id").as("owner_key"),
       ownerName.as("owner_name"), col("email").as("owner_email")))
     val contacts = g.contacts.select(
@@ -251,7 +261,7 @@ object ReportQueries {
     * with n_prior_clicks = 0, not vanish. Post-filtering the joined rows
     * (the round-1 bug) dropped exactly those forms, because every joined
     * row failed the filter and no null-extended row was left. */
-  def clicksBeforeSubmission(g: GraphTables): DataFrame = {
+  def clicksBeforeSubmission(g: GraphTables): DataFrame = answer {
     val f = g.forms.select(col("hubspot_id").as("form_id"), col("email"),
       col("timestamp").as("form_ts"))
     val c = g.clicks.select(col("recipient_email").as("c_email"),
@@ -271,7 +281,7 @@ object ReportQueries {
     * matching a name pattern (reporting/queries.py:298-334; the reference
     * Cypher is malformed, this implements the documented intent: the
     * reference's identifier columns are contact email / company domain). */
-  def combinedByOwner(g: GraphTables, needle: String): DataFrame = {
+  def combinedByOwner(g: GraphTables, needle: String): DataFrame = answer {
     val contacts = g.contacts.select(lit("contact").as("entity_type"),
       col("email").as("identifier"), ownerName.as("name"),
       col("lifecycle_stage").as("status"), col("created_date"), col("owner_id"))
@@ -288,7 +298,7 @@ object ReportQueries {
   /** P7+J1 — form submissions in the lookback window, with the submitting
     * contact (reporting/queries.py:175-195). `asOf` is the caller's batch
     * timestamp (F19: captured once, never now()-per-row). */
-  def recentFormSubmissions(g: GraphTables, asOf: Column, days: Int = 30): DataFrame =
+  def recentFormSubmissions(g: GraphTables, asOf: Column, days: Int = 30): DataFrame = answer {
     g.forms.filter(col("timestamp") >= asOf - expr(s"INTERVAL $days DAYS"))
       .select(col("email"), col("form_guid").as("form_id"),
         col("form_name").as("form_title"), col("timestamp").as("submission_date"))
@@ -296,10 +306,11 @@ object ReportQueries {
       .select(col("email").as("contact_email"), col("contact_name"), col("form_id"),
         col("form_title"), col("submission_date"))
       .orderBy(desc("submission_date"), col("form_id"))
+  }
 
   /** P7+U2+J3 — recent opens and clicks with contact + owner
     * (reporting/queries.py:197-220). */
-  def recentEmailActivity(g: GraphTables, asOf: Column, days: Int = 30): DataFrame = {
+  def recentEmailActivity(g: GraphTables, asOf: Column, days: Int = 30): DataFrame = answer {
     val events = g.opens
       .select(col("recipient_email"), col("timestamp"), col("campaign_id"),
         lit("EmailOpenEvent").as("event_type"))
@@ -319,7 +330,7 @@ object ReportQueries {
     * activity count (reporting/queries.py:222-248). The inner join to the
     * per-email activity aggregate IS the `activity_count > 0` predicate. */
   def contactsWithRecentActivity(g: GraphTables, needle: String, asOf: Column,
-      days: Int = 30): DataFrame = {
+      days: Int = 30): DataFrame = answer {
     val cutoff = asOf - expr(s"INTERVAL $days DAYS")
     val activity = g.opens.select(col("recipient_email").as("email"), col("timestamp"))
       .unionByName(g.clicks.select(col("recipient_email").as("email"), col("timestamp")))
@@ -335,7 +346,7 @@ object ReportQueries {
 
   /** One contact's full engagement timeline (reporting/queries.py:250-271):
     * typed union of the event tables + PERFORMED activities, newest first. */
-  def contactEngagementHistory(g: GraphTables, contactEmail: String): DataFrame = {
+  def contactEngagementHistory(g: GraphTables, contactEmail: String): DataFrame = answer {
     val c = g.contacts.filter(col("email") === contactEmail)
       .select(col("hubspot_id").as("contact_id"), col("email").as("contact_email"),
         ownerName.as("contact_name"))
@@ -375,11 +386,12 @@ object ReportQueries {
 
   /** J8 — 2-hop chain contact → owner (→ SAME_AS person handled by
     * EntityMatcher output when present) (README.md:216-218, 530-533). */
-  def contactOwnerChain(g: GraphTables): DataFrame =
+  def contactOwnerChain(g: GraphTables): DataFrame = answer {
     g.contacts.select(col("hubspot_id").as("contact_id"), col("email"),
         col("owner_id"))
       .join(broadcast(g.users.select(col("hubspot_id").as("owner_id"),
         ownerName.as("owner_name"), col("active").as("owner_active"))),
         Seq("owner_id"), "left")
       .orderBy("contact_id")
+  }
 }

@@ -12,33 +12,41 @@ object TemporalQueries {
 
   /** Current-state filter every "as-of-now" query shares
     * (query_temporal.py:34-36). */
-  def currentOnly(nodes: DataFrame): DataFrame =
+  def currentOnly(nodes: DataFrame): DataFrame = answer(current(nodes))
+
+  private def current(nodes: DataFrame): DataFrame =
     nodes.filter(col("is_current") &&
       (col("is_deleted").isNull || !col("is_deleted")))
 
   /** Current entities, most recently loaded first (query_temporal.py:31-48). */
-  def currentEntities(nodes: DataFrame, limit: Int): DataFrame =
-    currentOnly(nodes).orderBy(desc("valid_from"), col("hubspot_id")).limit(limit)
+  def currentEntities(nodes: DataFrame, limit: Int): DataFrame = answer {
+    current(nodes).orderBy(desc("valid_from"), col("hubspot_id")).limit(limit)
+  }
 
   /** Soft-deleted entities (P8; query_temporal.py:71-87). */
-  def deletedEntities(nodes: DataFrame): DataFrame =
+  def deletedEntities(nodes: DataFrame): DataFrame = answer {
     nodes.filter(coalesce(col("is_deleted"), lit(false)))
       .orderBy(desc("valid_to"), col("hubspot_id"))
+  }
 
   /** Entities loaded in the last N hours (query_temporal.py:89-110). */
-  def recentChanges(nodes: DataFrame, cutoff: Column, limit: Int): DataFrame =
+  def recentChanges(nodes: DataFrame, cutoff: Column, limit: Int): DataFrame = answer {
     nodes.filter(col("valid_from") > cutoff)
       .orderBy(desc("valid_from"), col("hubspot_id")).limit(limit)
+  }
 
   /** Full version chain for one entity: current + history rows
     * (J12; query_temporal.py:50-69). */
-  def entityHistory(current: DataFrame, history: DataFrame, id: String): DataFrame =
+  def entityHistory(current: DataFrame, history: DataFrame, id: String): DataFrame = answer {
     current.filter(col("hubspot_id") === id)
       .unionByName(history.filter(col("hubspot_id") === id), allowMissingColumns = true)
       .orderBy(desc("valid_from"))
+  }
 
   /** W1 — latest previous version per entity (query_temporal.py:208-216). */
-  def latestPreviousVersion(history: DataFrame): DataFrame = {
+  def latestPreviousVersion(history: DataFrame): DataFrame = answer(previous(history))
+
+  private def previous(history: DataFrame): DataFrame = {
     val w = Window.partitionBy("hubspot_id")
       .orderBy(col("valid_to").desc, col("valid_from").desc)
     history.withColumn("rn", row_number().over(w)).filter(col("rn") === 1).drop("rn")
@@ -49,8 +57,8 @@ object TemporalQueries {
     * Python (query_temporal.py:230-239), here it is a struct comparison
     * projection. `fields` = the stable business columns to compare. */
   def compareVersions(current: DataFrame, history: DataFrame,
-      fields: Seq[String]): DataFrame = {
-    val prev = latestPreviousVersion(history)
+      fields: Seq[String]): DataFrame = answer {
+    val prev = previous(history)
     val cur = current.select(col("hubspot_id") +:
       fields.map(f => col(f).cast("string").as(s"cur_$f")): _*)
     val old = prev.select(col("hubspot_id") +:
@@ -67,7 +75,7 @@ object TemporalQueries {
 
   /** A10 — entity lifecycle: version count per entity
     * (query_temporal.py:251-280). */
-  def entityLifecycle(current: DataFrame, history: DataFrame): DataFrame = {
+  def entityLifecycle(current: DataFrame, history: DataFrame): DataFrame = answer {
     val versions = history.groupBy("hubspot_id").agg(count(lit(1)).as("n_history"))
     current.join(versions, Seq("hubspot_id"), "left")
       .select(col("hubspot_id"),
@@ -77,33 +85,36 @@ object TemporalQueries {
   }
 
   /** A9 — relationship-change statistics (query_temporal.py:191-206). */
-  def relationshipChangeStats(relChanges: DataFrame): DataFrame =
+  def relationshipChangeStats(relChanges: DataFrame): DataFrame = answer {
     relChanges.groupBy("relationship_type", "change_type")
       .agg(count(lit(1)).as("n"))
       .orderBy("relationship_type", "change_type")
+  }
 
   /** Complete relationship change history for one entity, on either end
     * of the edge (query_temporal.py:135-157). */
   def entityRelationshipHistory(relChanges: DataFrame, entityType: String,
-      entityId: String): DataFrame =
+      entityId: String): DataFrame = answer {
     relChanges.filter(
         (col("from_entity_type") === entityType && col("from_entity_id") === entityId) ||
           (col("to_entity_type") === entityType && col("to_entity_id") === entityId))
       .orderBy(asc("changed_at"), col("relationship_type"), col("to_entity_id"))
+  }
 
   /** Most recent relationship changes, newest first with a limit
     * (query_temporal.py:112-133). Ties on changed_at (one batch shares a
     * load timestamp) are broken by the full edge key so the page is
     * deterministic. */
-  def recentRelationshipChanges(relChanges: DataFrame, limit: Int = 20): DataFrame =
+  def recentRelationshipChanges(relChanges: DataFrame, limit: Int = 20): DataFrame = answer {
     relChanges.orderBy(desc("changed_at"), col("relationship_type"),
       col("from_entity_id"), col("to_entity_id")).limit(limit)
+  }
 
   /** Ownership transfer history from the change log, optionally scoped
     * to one entity type / entity, projected the way the reference
     * returns it (query_temporal.py:159-189). */
   def ownershipChanges(relChanges: DataFrame, entityType: Option[String] = None,
-      entityId: Option[String] = None): DataFrame = {
+      entityId: Option[String] = None): DataFrame = answer {
     val owned = relChanges.filter(col("relationship_type") === "OWNED_BY")
     val scoped = Seq(
       entityType.map(t => col("from_entity_type") === t),
@@ -117,7 +128,7 @@ object TemporalQueries {
   /** S17-style one-job statistics across all SCD tables: the reference's
     * 16 round trips collapsed into one union + groupBy
     * (query_temporal.py:282-325). */
-  def temporalStatistics(tables: Map[String, (DataFrame, DataFrame)]): DataFrame =
+  def temporalStatistics(tables: Map[String, (DataFrame, DataFrame)]): DataFrame = answer {
     tables.map { case (name, (current, history)) =>
       val cur = current.agg(
         count(lit(1)).as("n_rows"),
@@ -127,4 +138,5 @@ object TemporalQueries {
         .select(col("n_history"))
       cur.crossJoin(his)
     }.reduce(_.unionByName(_)).orderBy("entity_type")
+  }
 }

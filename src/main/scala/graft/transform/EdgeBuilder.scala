@@ -49,15 +49,17 @@ object EdgeBuilder {
 
   /** (Contact)-[:ASSOCIATED_WITH]->(Deal) — emitted from BOTH the contact
     * and the deal association arrays, deduped (graph_transformer.py:155-165,
-    * 276-286; MERGE-dedup in the reference). */
+    * 276-286; MERGE-dedup in the reference). The (contact, deal) pairs are
+    * deduplicated before the literal columns are added, so a filter on
+    * `rel_type` folds against the literal and prunes this branch whole. */
   def associatedWith(contactsRaw: DataFrame, dealsRaw: DataFrame): DataFrame = {
     val fromContacts = assoc(contactsRaw, "deals")
-      .select(edge("ASSOCIATED_WITH", "HUBSPOT_Contact", col("id"),
-        "HUBSPOT_Deal", col("other_id")): _*)
+      .select(col("id").as("src_id"), col("other_id").as("dst_id"))
     val fromDeals = assoc(dealsRaw, "contacts")
-      .select(edge("ASSOCIATED_WITH", "HUBSPOT_Contact", col("other_id"),
-        "HUBSPOT_Deal", col("id")): _*)
-    fromContacts.unionByName(fromDeals).dropDuplicates("src_id", "dst_id")
+      .select(col("other_id").as("src_id"), col("id").as("dst_id"))
+    fromContacts.unionByName(fromDeals).distinct()
+      .select(edge("ASSOCIATED_WITH", "HUBSPOT_Contact", col("src_id"),
+        "HUBSPOT_Deal", col("dst_id")): _*)
   }
 
   /** (Deal)-[:BELONGS_TO]->(Company) (graph_transformer.py:264-275). */

@@ -54,8 +54,8 @@ class GraphQueriesSpec extends AnyFunSuite {
     val edges = entityEdges()
     val someId = edges.select("src_id").head().getString(0)
     val key = s"1:P$someId" // mkKey("P", id) — length-prefixed composite
-    val focused = GraphQueries.linkSuggestions(edges,
-      forEntity = Some(("P", someId)), topK = 20)
+    val focused = GraphQueries.linkSuggestionPlan(edges,
+      forEntity = Some(("P", someId)), relType = None, topK = 20)
     val plan: LogicalPlan = focused.queryExecution.optimizedPlan
     val postAggKeyFilters = plan.collect {
       case f: Filter if f.condition.toString.contains(key) &&
@@ -76,7 +76,7 @@ class GraphQueriesSpec extends AnyFunSuite {
     // whether to broadcast is AQE's runtime call.
     import org.apache.spark.sql.catalyst.plans.logical.ResolvedHint
     val edges = entityEdges()
-    val hints = GraphQueries.linkSuggestions(edges, topK = 20)
+    val hints = GraphQueries.linkSuggestionPlan(edges, None, None, topK = 20)
       .queryExecution.analyzed.collect { case h: ResolvedHint => h }
     assert(hints.isEmpty, s"forced join hints remain: $hints")
   }

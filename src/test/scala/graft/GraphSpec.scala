@@ -943,4 +943,39 @@ class GraphSpec extends AnyFunSuite {
     jobs("deterministicWalks", 4)(t =>
       GraphAlgos.deterministicWalks(uv, starts, 4, localThreshold = t))
   }
+
+  test("gated twins leave no persisted frame behind, on either cut path") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import graft.operators.{Components, Matching, Scc}
+    import graft.plans.LocalEval
+    val es = randomGraphs(seed = 808, count = 1).head
+    val schema = StructType(Seq(StructField("a", LongType), StructField("b", LongType)))
+    // an RDD-backed frame has no size estimate, so LocalEval declines it
+    // and the gate takes the counted checkpoint; the local frame goes
+    // through LocalEval
+    val viaCheckpoint = spark.createDataFrame(
+      spark.sparkContext.parallelize(es.map { case (a, b) => Row(a, b) }, 3), schema)
+    assert(LocalEval(viaCheckpoint) eq viaCheckpoint)
+    for (e <- Seq(viaCheckpoint, es.toDF("a", "b"))) {
+      val sd = e.select(col("a").as("s"), col("b").as("d"))
+      val uv = e.select(col("a").as("u"), col("b").as("v"))
+      val twins = Seq[(String, () => DataFrame)](
+        "connectedComponents" -> (() => Components.connectedComponents(e, "a", "b")),
+        "strongComponents" -> (() => Scc.strongComponents(e, "a", "b")),
+        "greedy" -> (() => Matching.greedy(uv.withColumn("w", col("u") + col("v")))),
+        "pageRank" -> (() => GraphAlgos.pageRank(
+          e.select(col("a").as("src"), col("b").as("dst"), lit(1.0).as("weight")))),
+        "bfsHops" -> (() => GraphAlgos.bfsHops(sd, 1L)),
+        "shortestPaths" -> (() => GraphAlgos.shortestPaths(sd.withColumn("w", lit(0.5)), 1L)),
+        "hyperballRegisters" -> (() => GraphAlgos.hyperballRegisters(sd, 2)),
+        "deterministicWalks" -> (() => GraphAlgos.deterministicWalks(uv, Seq(1L).toDF("n"), 3)))
+      for ((name, twin) <- twins) {
+        val before = spark.sparkContext.getPersistentRDDs.keySet
+        twin().collect()
+        val gained = spark.sparkContext.getPersistentRDDs.keySet -- before
+        assert(gained.isEmpty, s"$name left persisted RDDs $gained")
+      }
+    }
+  }
 }

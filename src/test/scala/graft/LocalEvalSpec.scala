@@ -1,0 +1,176 @@
+package graft
+
+import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import graft.operators.LocalGate
+import graft.plans.LocalEval
+
+/** Driver-side evaluation of small plans: for every operator LocalEval
+  * supports, its local answer equals Spark's distributed answer on
+  * seeded inputs, with the same schema and nullability; anything it does
+  * not support, or inputs over its gates, come back unchanged. */
+class LocalEvalSpec extends AnyFunSuite {
+  private lazy val spark = TestSpark.spark
+
+  private val aSchema = StructType(Seq(
+    StructField("k", IntegerType), StructField("g", StringType),
+    StructField("x", DoubleType), StructField("d", DecimalType(10, 2)),
+    StructField("s", StringType), StructField("id", LongType, nullable = false)))
+  private val bSchema = StructType(Seq(
+    StructField("k", IntegerType), StructField("y", LongType),
+    StructField("t", StringType, nullable = false)))
+
+  /** Seeded tables: null keys; doubles with NaN, -0.0 and infinity, and
+    * otherwise exact binary fractions, so sums do not depend on their
+    * order; decimals; strings whose UTF-8 and UTF-16 orders disagree;
+    * and duplicated rows. */
+  private def tables(seed: Long, n: Int): (Seq[Row], Seq[Row]) = {
+    val rnd = new scala.util.Random(seed)
+    def key: Any = if (rnd.nextInt(8) == 0) null else rnd.nextInt(6)
+    def maybe(p: Int)(v: => Any): Any = if (rnd.nextInt(p) == 0) null else v
+    val doubles = Array(0.0, -0.0, 1.5, -2.25, 0.5, Double.NaN, Double.PositiveInfinity)
+    val strs = Array("a", "b", "\uFFFF", "\uD83D\uDE00", "a,b", "")
+    val a = (0 until n).map(i => Row(key, maybe(6)(s"g${rnd.nextInt(3)}"),
+      maybe(7)(doubles(rnd.nextInt(doubles.length))),
+      maybe(5)(java.math.BigDecimal.valueOf(rnd.nextInt(20000) - 10000L, 2)),
+      maybe(6)(strs(rnd.nextInt(strs.length))), i.toLong))
+    val b = (0 until n / 2).map(_ =>
+      Row(key, rnd.nextInt(4).toLong, strs(rnd.nextInt(strs.length))))
+    (a ++ a.take(n / 5), b ++ b.take(2))
+  }
+
+  private def local(rows: Seq[Row], schema: StructType): DataFrame =
+    spark.createDataFrame(java.util.List.of(rows: _*), schema)
+
+  /** Every supported operator, unordered answers first, then the asks
+    * whose row order is defined. */
+  private def asks(a: DataFrame, b: DataFrame): (Seq[(String, DataFrame)], Seq[(String, DataFrame)]) = {
+    val byG = Window.partitionBy("g")
+    val ties = byG.orderBy(col("x").asc_nulls_first)
+    val total = byG.orderBy(col("x").asc_nulls_first, col("id"))
+    val joins = for (jt <- Seq("inner", "left", "right", "full", "left_semi", "left_anti");
+        (what, cond) <- Seq("" -> (a("k") === b("k")),
+          ", residual" -> (a("k") === b("k") && (a("id") % 3) =!= b("y")),
+          ", two keys" -> (a("k") === b("k") && a("s") === b("t")),
+          ", null-safe" -> (a("k") <=> b("k"))))
+      yield s"$jt join$what" -> a.join(b, cond, jt)
+    val emptyJoins = for (jt <- Seq("inner", "left", "right", "full", "left_anti"))
+      yield s"$jt join, empty side" -> a.join(b.filter(col("y") < 0), Seq("k"), jt)
+    val unordered = Seq(
+      "project + filter" -> a.filter(col("x") > 0 || col("k").isNull)
+        .select(col("k"), (col("x") * 2).as("x2"), upper(col("s")).as("u"), (col("d") * 3).as("d3")),
+      "generate" -> a.select(col("id"), explode(array(col("x"), col("x") + 1)).as("e")),
+      "generate outer" -> a.select(col("id"), explode_outer(split(col("s"), ",")).as("part")),
+      "posexplode" -> a.select(col("id"), posexplode(array(col("g"), col("s")))),
+      "union" -> a.select(col("k"), col("s")).union(b.select(col("k"), col("t"))),
+      "aggregate" -> a.groupBy("g").agg(sum("x"), avg("d"), count(lit(1)), min("s"), max("x"),
+        sort_array(collect_set("s")), countDistinct("k"), sum("d")),
+      "grouping on doubles" -> a.groupBy("x").agg(count(lit(1)).as("n")),
+      "aggregate filter" -> a.groupBy("k").agg(expr("sum(d) FILTER (WHERE x > 0)"),
+        count_if(col("s") === "a")),
+      "global aggregate" -> a.agg(sum("x"), count("k"), max("s"), avg("d")),
+      "global aggregate over no rows" -> a.filter(col("id") < 0).agg(sum("x"), count(lit(1))),
+      "expand: two distinct groups" -> a.groupBy("g").agg(countDistinct("k"), countDistinct("s"),
+        sum("d")),
+      "rollup" -> a.rollup("g", "k").agg(count(lit(1)), sum("d")),
+      "distinct" -> a.select("k", "g").distinct(),
+      "dedup" -> a.dropDuplicates("id").select("id", "k", "s"),
+      "ranks with ties" -> a.select(col("id"), rank().over(ties), dense_rank().over(ties),
+        row_number().over(total)),
+      "partition aggregates" -> a.select(col("id"), sum("d").over(byG), count(lit(1)).over(byG),
+        max("x").over(byG), sum("d").over(ties.rowsBetween(Window.unboundedPreceding,
+          Window.unboundedFollowing))),
+      "running aggregates" -> a.select(col("id"), sum("d").over(ties),
+        sum("d").over(total.rowsBetween(Window.unboundedPreceding, Window.currentRow)),
+        count("k").over(ties)),
+      "top rows per group" -> a.withColumn("rn", row_number().over(total)).filter(col("rn") <= 2),
+      "top ranks per group" -> a.withColumn("r", rank().over(ties)).filter(col("r") <= 2)
+    ) ++ joins ++ emptyJoins
+    val ordered = Seq(
+      "sort" -> a.orderBy(col("s").asc_nulls_last, col("x").desc, col("id")),
+      "sort + limit" -> a.orderBy(col("x").desc_nulls_last, col("id")).limit(7),
+      "sort + offset" -> a.orderBy(col("id").desc).offset(5),
+      "aggregate, sorted" -> a.groupBy("k").agg(sum("d").as("t")).orderBy(col("t").desc, col("k")))
+    (unordered, ordered)
+  }
+
+  private def assertSame(name: String, df: DataFrame, ordered: Boolean): Unit = {
+    val answered = LocalEval(df)
+    assert(answered.queryExecution.optimizedPlan.isInstanceOf[LocalRelation],
+      s"$name stayed distributed:\n${df.queryExecution.optimizedPlan}")
+    assert(answered.schema == df.schema, name)
+    val got = answered.collect().map(_.toString).toSeq
+    val want = df.collect().map(_.toString).toSeq
+    if (ordered) assert(got == want, name)
+    else assert(got.sorted == want.sorted, name)
+  }
+
+  test("property: local answers equal distributed answers for every supported operator") {
+    for (seed <- Seq(1L, 2L, 3L)) {
+      val (ra, rb) = tables(seed, 40 + 20 * seed.toInt)
+      val (unordered, ordered) = asks(local(ra, aSchema), local(rb, bSchema))
+      unordered.foreach { case (n, df) => assertSame(s"seed $seed: $n", df, ordered = false) }
+      ordered.foreach { case (n, df) => assertSame(s"seed $seed: $n", df, ordered = true) }
+    }
+  }
+
+  test("file inputs: each distinct narrow input is collected in one job") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-localeval").toString
+    val (ra, rb) = tables(7L, 60)
+    local(ra, aSchema).write.parquet(s"$dir/a")
+    local(rb, bSchema).write.parquet(s"$dir/b")
+    val (a, b) = (spark.read.parquet(s"$dir/a"), spark.read.parquet(s"$dir/b"))
+    val (unordered, ordered) = asks(a, b)
+    unordered.foreach { case (n, df) => assertSame(s"parquet: $n", df, ordered = false) }
+    ordered.foreach { case (n, df) => assertSame(s"parquet: $n", df, ordered = true) }
+    // a join of `a` with itself reads one narrow input; a and b are two
+    val self = a.as("l").join(a.as("r"), col("l.k") === col("r.k"))
+    assert(TestSpark.jobsDuring(LocalEval(self).collect()) == 1)
+    val both = a.join(b, Seq("k")).groupBy("g").agg(sum("y"))
+    assert(TestSpark.jobsDuring(LocalEval(both).collect()) == 2)
+  }
+
+  test("unsupported plans and inputs over either gate come back unchanged with no job") {
+    val (ra, rb) = tables(11L, 50)
+    val (a, b) = (local(ra, aSchema), local(rb, bSchema))
+    a.createOrReplaceTempView("local_eval_a")
+    val unsupported = Seq(
+      "repartition" -> a.repartition(3),
+      "sample" -> a.sample(0.5, 1L),
+      "cross join" -> a.crossJoin(b),
+      "non-equi join" -> a.join(b, a("k") < b("k")),
+      "lead" -> a.select(lead("x", 1).over(Window.partitionBy("g").orderBy("id"))),
+      "sliding frame" -> a.select(sum("d").over(Window.partitionBy("g").orderBy("id")
+        .rowsBetween(-1, 1))),
+      "nondeterministic" -> a.select(col("id"), rand(1L)),
+      "subquery" -> spark.sql(
+        "SELECT id FROM local_eval_a WHERE d > (SELECT avg(d) FROM local_eval_a)"),
+      "rows over the row gate" -> a.groupBy("g").count())
+    for ((name, df) <- unsupported) {
+      var out: DataFrame = null
+      val threshold = if (name.startsWith("rows")) 5L else LocalGate.DefaultRows
+      val jobs = TestSpark.jobsDuring { out = LocalEval(df, threshold) }
+      assert(out eq df, name)
+      assert(jobs == 0, s"$name launched $jobs jobs")
+    }
+    val dir = java.nio.file.Files.createTempDirectory("graft-localeval-gate").toString
+    a.write.parquet(s"$dir/a")
+    val scan = spark.read.parquet(s"$dir/a").groupBy("g").agg(sum("d"))
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val before = spark.conf.get(key)
+    spark.conf.set(key, "100")
+    try {
+      var out: DataFrame = null
+      assert(TestSpark.jobsDuring { out = LocalEval(scan) } == 0)
+      assert(out eq scan, "an input over the byte budget")
+    } finally spark.conf.set(key, before)
+    // a file's row count is known only once read: its capped collect runs
+    var out: DataFrame = null
+    assert(TestSpark.jobsDuring { out = LocalEval(scan, threshold = 5) } == 1)
+    assert(out eq scan, "a file input over the row gate")
+  }
+}

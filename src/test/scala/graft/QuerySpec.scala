@@ -53,6 +53,23 @@ class QuerySpec extends AnyFunSuite {
     assert(u2.getLong(u2.fieldIndex("n_deals")) == 0)      // left-join keeps owner
   }
 
+  test("allOwnersSummary: an owner's deal value counts each deal once") {
+    // John Doe holds 2 contacts, 2 companies and one 500.0 deal: the
+    // contacts x companies product of the left joins must not repeat it
+    def plus(df: org.apache.spark.sql.DataFrame, from: String, id: String) =
+      df.unionByName(df.filter(col("hubspot_id") === from).withColumn("hubspot_id", lit(id)))
+    val g2 = g.copy(
+      contacts = plus(g.contacts, "c1", "c9"),
+      companies = plus(g.companies, "co1", "co9"),
+      deals = g.deals.withColumn("amount",
+        when(col("hubspot_id") === "d1", lit(500.0)).otherwise(col("amount"))))
+    val u1 = RQ.allOwnersSummary(g2).collect().find(_.getString(0) == "user_1").get
+    assert(u1.getLong(u1.fieldIndex("n_contacts")) == 2)
+    assert(u1.getLong(u1.fieldIndex("n_companies")) == 2)
+    assert(u1.getLong(u1.fieldIndex("n_deals")) == 1)
+    assert(u1.getDouble(u1.fieldIndex("total_deal_value")) == 500.0)
+  }
+
   test("contactsWithoutCompany: anti-join") {
     val got = RQ.contactsWithoutCompany(g).collect().map(_.getString(0)).toSet
     assert(got == Set("c2", "c3")) // only c1 WORKS_AT a company

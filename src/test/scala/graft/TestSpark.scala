@@ -40,4 +40,13 @@ object TestSpark {
     }
     n.get()
   }
+
+  /** Classes Spark's code generator compiled while `body` ran: the
+    * JVM-wide `CodegenMetrics` compilation count, a cache miss each. */
+  def codegenCompilesDuring(body: => Unit): Long = {
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    val before = compiles.getCount
+    body
+    compiles.getCount - before
+  }
 }

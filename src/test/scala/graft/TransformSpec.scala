@@ -70,6 +70,21 @@ class TransformSpec extends AnyFunSuite {
     assert(owned.count() == 2) // c3 has no owner
   }
 
+  test("edges: a rel_type filter prunes the other builders' association explodes") {
+    import org.apache.spark.sql.catalyst.plans.logical.Generate
+    val g = Pipeline.transformAll(
+      CrmFixture.usersRaw(spark), CrmFixture.contactsRaw(spark),
+      CrmFixture.companiesRaw(spark), CrmFixture.dealsRaw(spark),
+      CrmFixture.engagementsRaw(spark), CrmFixture.emailEventsRaw(spark),
+      CrmFixture.formsRaw(spark))
+    val belongsTo = g.edges.filter(col("rel_type") === "BELONGS_TO")
+    val explodes = belongsTo.queryExecution.optimizedPlan
+      .collect { case gen: Generate => gen.generator.toString }
+    assert(explodes.nonEmpty && explodes.forall(_.contains("[companies]")),
+      s"explodes left under a BELONGS_TO filter: $explodes")
+    assert(belongsTo.count() == 2)
+  }
+
   test("edges: email-keyed PERFORMED / SUBMITTED_BY resolve via broadcast join") {
     val performed = EdgeBuilder.performed(opens, "HUBSPOT_EmailOpenEvent")
       .unionByName(EdgeBuilder.performed(clicks, "HUBSPOT_EmailClickEvent"))
