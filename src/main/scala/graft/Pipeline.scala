@@ -63,50 +63,33 @@ object Pipeline {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
-  /** Catalog namespace for one state directory's bucketed SCD tables —
-    * scoped by path hash so two state dirs in one session can't collide. */
-  def stateTableNs(stateDir: String): String =
-    s"graft_${java.lang.Integer.toHexString(stateDir.hashCode)}"
-
-  /** The `current_<name>` table for a state dir: the catalog entry when
-    * available (bucketed — the zero-shuffle merge path), else the plain
-    * parquet path (fresh session without a persistent metastore: correct,
-    * the merge just shuffles). Read-only: a crashed swap is resolved
-    * non-destructively (the marker-certified `.next` is read in place) —
-    * readers must never join the swap protocol, or a report racing a
-    * load could interleave destructively with the writer's rename. The
-    * next WRITER ([[run]]) rolls the rename forward. */
-  def currentTable(spark: SparkSession, stateDir: String, name: String): Option[DataFrame] = {
-    val tbl = s"${stateTableNs(stateDir)}_current_$name"
-    if (spark.catalog.tableExists(tbl)) Some(spark.table(tbl))
-    else graft.temporal.AtomicSwap
+  /** The `current_<name>` table for a state dir, read by path. Read-only:
+    * a crashed swap is resolved non-destructively (the marker-certified
+    * `.next` is read in place) — readers must never join the swap
+    * protocol, or a report racing a load could interleave destructively
+    * with the writer's rename. The next WRITER ([[run]]) rolls the rename
+    * forward. */
+  def currentTable(spark: SparkSession, stateDir: String, name: String): Option[DataFrame] =
+    graft.temporal.AtomicSwap
       .readablePath(spark, s"$stateDir/current_$name")
       .map(spark.read.parquet(_))
-  }
 
-  /** The `history_<name>` table for a state dir, same resolution order as
-    * [[currentTable]]. The path fallback additionally requires at least
-    * one data file: a history that has only ever had empty appends leaves
-    * a schema-less directory no path read can infer. */
-  def historyTable(spark: SparkSession, stateDir: String, name: String): Option[DataFrame] = {
-    val tbl = s"${stateTableNs(stateDir)}_history_$name"
-    val path = s"$stateDir/history_$name"
-    def hasData: Boolean = {
-      val p = new org.apache.hadoop.fs.Path(path)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.exists(p) && fs.listStatus(p).exists(_.getPath.getName.endsWith(".parquet"))
-    }
-    if (spark.catalog.tableExists(tbl)) Some(spark.table(tbl))
-    else if (hasData) Some(spark.read.parquet(path))
-    else None
-  }
+  /** The `history_<name>` table for a state dir, `None` before the first
+    * load. Every load appends, so a history no load has superseded a row
+    * of holds only schema-only files and reads as an empty table. */
+  def historyTable(spark: SparkSession, stateDir: String, name: String): Option[DataFrame] =
+    parquetIn(spark, s"$stateDir/history_$name")
 
   /** The accumulated `relchanges` CDC log for a state dir (T4), `None`
     * until a non-empty diff has been appended: idempotent reloads append
-    * zero rows, which leaves a schema-less directory no path read can
-    * infer — same guard as [[historyTable]]. */
-  def relChanges(spark: SparkSession, stateDir: String): Option[DataFrame] = {
-    val path = s"$stateDir/relchanges"
+    * nothing, so the directory may not exist yet. */
+  def relChanges(spark: SparkSession, stateDir: String): Option[DataFrame] =
+    parquetIn(spark, s"$stateDir/relchanges")
+
+  /** The parquet table at `path` when the directory holds at least one
+    * parquet file: a directory without one has no schema a path read can
+    * infer. */
+  private def parquetIn(spark: SparkSession, path: String): Option[DataFrame] = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(p) && fs.listStatus(p).exists(_.getPath.getName.endsWith(".parquet")))
@@ -147,56 +130,23 @@ object Pipeline {
       read("form_submissions", CrmSchema.formSubmissions))
 
     val validEdges = EdgeBuilder.validate(g.edges, nodeIds(g))
-    val loadTs = current_timestamp()
+    // F19: one load timestamp per run, captured on the driver, so every
+    // table's new rows, every superseded version's valid_to and every
+    // relationship change of this load carry the same instant.
+    val now = new java.sql.Timestamp(System.currentTimeMillis())
+    val loadTs = lit(now)
 
-    // SCD load per entity table against stateDir/current_<name>. All
-    // state tables are written bucketed+sorted on the merge key: the
-    // incoming snapshot is staged bucketed first (ONE shuffle — data must
-    // be key-partitioned at least once), after which the single-join
-    // applyScd merge plans with NO Exchange against the equally-bucketed
-    // current table. At 100 TB that one staged shuffle replaces
-    // re-shuffling both sides on every load.
-    val buckets = sys.env.getOrElse("SPARK_GRAFT_BUCKETS", "8").toInt
-    val ns = stateTableNs(stateDir)
-    val tables = Map(
+    // SCD load per entity table against stateDir/current_<name> and
+    // history_<name>, through the storage step the streaming SCD sink
+    // uses too. Its snapshot row count is the table's verification count.
+    val tables = Seq(
       "users" -> g.users, "contacts" -> g.contacts, "companies" -> g.companies,
       "deals" -> g.deals, "activities" -> g.activities)
-    tables.foreach { case (name, nodes) =>
-      val incoming = GT.withTemporal(nodes, loadTs)
-      val curPath = s"$stateDir/current_$name"
-      def bucketed(df: DataFrame) = df
-        .repartition(buckets, col("hubspot_id")) // partitioner == bucketer: one file per bucket
-        .write.bucketBy(buckets, "hubspot_id").sortBy("hubspot_id")
-      bucketed(incoming).mode("overwrite")
-        .option("path", s"$stateDir/stage_$name").saveAsTable(s"${ns}_stage_$name")
-      val staged = spark.table(s"${ns}_stage_$name")
-      // Writer-side recover BEFORE resolving the current table: if a
-      // prior load crashed mid-swap, currentTable would otherwise read
-      // `.next` in place — and the merge below overwrites `.next` while
-      // the plan lazily reads it. Only the writer mutates swap state.
-      graft.temporal.AtomicSwap.recover(spark, curPath)
-      // First-load is decided by an explicit existence check, NOT by
-      // catching the read failure: a transient FS error or corrupt footer
-      // must fail loudly here, because treating it as "first load" would
-      // make the SCD step mark every row as new — silent history
-      // corruption (round-3 verdict #2).
-      val current = currentTable(spark, stateDir, name).getOrElse(staged.limit(0))
-      val r = ScdLoader.applyScd(current, staged, loadTs)
-      // New current is materialized at <path>.next (the plan reads the old
-      // current), then swapped in: path rename + catalog relocation.
-      val tbl = s"${ns}_current_$name"
-      bucketed(r.current).mode("overwrite")
-        .option("path", s"$curPath.next").saveAsTable(s"${tbl}_next")
-      bucketed(r.historyAppend).mode("append")
-        .option("path", s"$stateDir/history_$name").saveAsTable(s"${ns}_history_$name")
-      spark.sql(s"DROP TABLE IF EXISTS $tbl")
-      // Marker-protected delete+rename: a crash mid-swap rolls forward on
-      // the next read (AtomicSwap.recover in currentTable). The catalog
-      // entries around it are session-scoped derivatives of the path.
-      graft.temporal.AtomicSwap.swapIn(spark, curPath)
-      spark.sql(s"ALTER TABLE ${tbl}_next SET LOCATION '$curPath'")
-      spark.sql(s"ALTER TABLE ${tbl}_next RENAME TO $tbl")
+    val counts = tables.map { case (name, nodes) =>
+      val n = ScdLoader.loadSnapshot(GT.withTemporal(nodes, loadTs),
+        s"$stateDir/current_$name", s"$stateDir/history_$name", now)
       println(s"[pipeline] $name loaded")
+      s"$name=$n"
     }
     // Edge load (T4 + T5; temporal_loader.py:84-100, 313-337, 401-462).
     // The reference splits relationships per load: immutable event edges
@@ -285,9 +235,8 @@ object Pipeline {
       println(s"[pipeline] events_$name loaded")
     }
 
-    // Verification counts (S17): one job per table family
-    val counts = tables.map { case (n, df) => s"$n=${df.count()}" }.mkString(" ")
-    println(s"[pipeline] nodes: $counts " +
+    // Verification counts (S17): the node counts came from the SCD step
+    println(s"[pipeline] nodes: ${counts.mkString(" ")} " +
       s"edges=${spark.read.parquet(edgesPath).count()}")
   }
 }

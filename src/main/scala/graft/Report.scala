@@ -85,8 +85,7 @@ object Report {
     val asOf = lit(now)
     def days = flagValue("--days").map(_.toInt).getOrElse(30)
 
-    // Temporal flags: <dir> is a Pipeline state directory. Resolution goes
-    // through the catalog first so the bucketed layout is kept.
+    // Temporal flags: <dir> is a Pipeline state directory, read by path.
     def table = flagValue("--table").getOrElse("contacts")
     def cur(t: String) = Pipeline.currentTable(spark, rawDir, t)
       .getOrElse(sys.error(s"no current_$t state under $rawDir"))

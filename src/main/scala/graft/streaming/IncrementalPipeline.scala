@@ -205,8 +205,9 @@ object IncrementalPipeline {
         col("event_type"), col("n"), col("total_value"))
 
   /** Run the batch SCD step per micro-batch: each arriving snapshot slice
-    * is applied to the state directory (plain parquet current/history
-    * tables — the storage the batch loader uses too). */
+    * is applied to the state directory's `current` and `history` tables
+    * through [[graft.temporal.ScdLoader.loadSnapshot]], the storage step
+    * the batch loader uses too, with one load timestamp per micro-batch. */
   def scdSink(incomingStream: DataFrame, stateDir: String,
       checkpointDir: String): DataStreamWriter[org.apache.spark.sql.Row] =
     incomingStream.writeStream
@@ -214,21 +215,8 @@ object IncrementalPipeline {
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val currentPath = s"$stateDir/current"
-        graft.temporal.AtomicSwap.recover(spark, currentPath)
-        val loadTs = current_timestamp()
-        val current =
-          if (fileExists(spark, currentPath)) spark.read.parquet(currentPath)
-          else batch.limit(0)
-        val result = graft.temporal.ScdLoader.applyScd(current, batch, loadTs)
-        // Two-phase write: stage, then swap (plain-parquet stand-in for a
-        // transactional MERGE target).
-        result.current.write.mode("overwrite").parquet(s"$currentPath.next")
-        result.historyAppend.write.mode("append").parquet(s"$stateDir/history")
-        // Marker-protected swap: a crash between delete and rename is
-        // rolled forward by the recover() above on the next batch/read.
-        graft.temporal.AtomicSwap.swapIn(spark, currentPath)
+        graft.temporal.ScdLoader.loadSnapshot(batch, s"$stateDir/current",
+          s"$stateDir/history", new java.sql.Timestamp(System.currentTimeMillis()))
         ()
       }
 

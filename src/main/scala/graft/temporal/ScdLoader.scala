@@ -3,14 +3,17 @@ package graft.temporal
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.storage.StorageLevel
 
 /** SCD Type-4 maintenance: current table + full-history table + CDC log
   * (SURVEY.md T1–T5/W3; reference loaders/temporal_loader.py:53-462).
   *
-  * Pure DataFrame → DataFrame semantics, storage-agnostic: callers persist
-  * the three outputs (current / history / relationship changes) however
-  * they like (plain parquet overwrite at reference scale; key-bucketed
-  * MERGE at 100 TB — the join keys are already the bucket keys).
+  * [[applyScd]] and the other transforms are pure DataFrame → DataFrame
+  * semantics, storage-agnostic (plain parquet overwrite at reference
+  * scale; key-bucketed MERGE at 100 TB — the join keys are already the
+  * bucket keys). [[loadSnapshot]] is the one storage step that applies a
+  * snapshot to a plain-parquet state table; the batch loader and the
+  * streaming SCD sink both write through it.
   */
 object ScdLoader {
 
@@ -40,8 +43,8 @@ object ScdLoader {
     * three times AND re-shuffled even over bucketed inputs, because a
     * full-outer join's output partitioning is unknown to the planner.
     * With both inputs bucketed on `hubspot_id`, this single join plans
-    * with NO Exchange at all — the 100 TB merge shape, proven in
-    * PipelineE2eSpec.)
+    * with NO Exchange at all — the 100 TB merge shape, once a writer owns
+    * a bucketed file layout; BucketingSpec pins that plan shape.)
     */
   def applyScd(current: DataFrame, incoming: DataFrame, loadTs: Column): ScdResult = {
     val cols = incoming.columns.toSeq
@@ -83,6 +86,40 @@ object ScdLoader {
       coalesce(col("inc_key"), col("cur_key")).as("hubspot_id"),
       col("change_type"))
     ScdResult(newCurrent, historyAppend, changes)
+  }
+
+  /** Apply one snapshot to one plain-parquet state table: the current
+    * table at `currentPath`, replaced through [[AtomicSwap]], and its
+    * append-only history at `historyPath`. Returns the snapshot's row
+    * count. `loadTs` is one driver-side instant per load, so a superseded
+    * version's `valid_to` equals its successor's `valid_from`.
+    *
+    * Recovery comes first: if a prior load crashed mid-swap, the current
+    * table would otherwise be read from `.next` in place, which the merge
+    * then overwrites while its plan lazily reads it. First load is decided
+    * by an explicit existence check, not by catching a read failure: a
+    * corrupt footer must fail loudly here, because treating it as a first
+    * load would mark every row as new. The history append always writes,
+    * so a load that supersedes nothing lands one schema-only file.
+    */
+  def loadSnapshot(incoming: DataFrame, currentPath: String, historyPath: String,
+      loadTs: java.sql.Timestamp): Long = {
+    val spark = incoming.sparkSession
+    AtomicSwap.recover(spark, currentPath)
+    val in = incoming.persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      val n = in.count()
+      val p = new org.apache.hadoop.fs.Path(currentPath)
+      val current =
+        if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
+          spark.read.parquet(currentPath)
+        else in.limit(0)
+      val r = applyScd(current, in, lit(loadTs))
+      r.current.write.mode("overwrite").parquet(s"$currentPath.next")
+      r.historyAppend.write.mode("append").parquet(historyPath)
+      AtomicSwap.swapIn(spark, currentPath)
+      n
+    } finally { in.unpersist(); () }
   }
 
   /** HAS_HISTORY edge rows linking each current entity to the history

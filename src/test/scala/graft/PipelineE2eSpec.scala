@@ -83,38 +83,62 @@ class PipelineE2eSpec extends AnyFunSuite {
     assert(spark.read.parquet(s"$state/edges").count() == edges1 - 1)
   }
 
-  test("SCD merge over reloaded bucketed state plans with no Exchange") {
-    val raw = java.nio.file.Files.createTempDirectory("graft-raw3").toString
+  test("two loads in one session: one load timestamp, no catalog table, no stage dir") {
+    import org.apache.spark.sql.functions.{col, max}
+    val raw = java.nio.file.Files.createTempDirectory("graft-raw3a").toString
+    val raw2 = java.nio.file.Files.createTempDirectory("graft-raw3b").toString
     val state = java.nio.file.Files.createTempDirectory("graft-state3").toString
-    Seq(
+    def fixtures(contacts: org.apache.spark.sql.DataFrame,
+        deals: org.apache.spark.sql.DataFrame) = Seq(
       "users" -> CrmFixture.usersRaw(spark),
-      "contacts" -> CrmFixture.contactsRaw(spark),
+      "contacts" -> contacts,
       "companies" -> CrmFixture.companiesRaw(spark),
-      "deals" -> CrmFixture.dealsRaw(spark),
+      "deals" -> deals,
       "engagements" -> CrmFixture.engagementsRaw(spark),
       "email_events" -> CrmFixture.emailEventsRaw(spark),
-      "form_submissions" -> CrmFixture.formsRaw(spark)
-    ).foreach { case (n, df) => df.write.mode("overwrite").json(s"$raw/$n.json") }
+      "form_submissions" -> CrmFixture.formsRaw(spark))
+    fixtures(CrmFixture.contactsRaw(spark), CrmFixture.dealsRaw(spark))
+      .foreach { case (n, df) => df.write.mode("overwrite").json(s"$raw/$n.json") }
+    // c1 retitled, c3 missing (soft delete), d1 lost its company edge
+    fixtures(CrmFixture.contactsRawV2(spark), CrmFixture.dealsRawV2(spark))
+      .foreach { case (n, df) => df.write.mode("overwrite").json(s"$raw2/$n.json") }
     Pipeline.run(spark, raw, state)
+    Pipeline.run(spark, raw2, state)
 
-    // Rebuild the production merge exactly as Pipeline.run plans it on the
-    // NEXT load: bucketed current table vs bucketed staged snapshot. The
-    // single-join applyScd must read both sides bucket-for-bucket — zero
-    // Exchange anywhere in the new-current plan.
-    val ns = Pipeline.stateTableNs(state)
-    val key = "spark.sql.autoBroadcastJoinThreshold"
-    val prev = spark.conf.get(key)
-    try {
-      spark.conf.set(key, "-1") // deterministic SMJ, as at scale
-      val cur = spark.table(s"${ns}_current_contacts")
-      val staged = spark.table(s"${ns}_stage_contacts")
-      val r = graft.temporal.ScdLoader.applyScd(cur, staged,
-        org.apache.spark.sql.functions.lit(new java.sql.Timestamp(0L)))
-      val plan = r.current.queryExecution.executedPlan.toString
-      assert(!plan.contains("Exchange"),
-        s"bucketed SCD merge must not shuffle, got plan:\n$plan")
-      assert(r.current.count() == 3)
-    } finally spark.conf.set(key, prev)
+    // The second load's instant: its relationship changes carry it, and
+    // so does every version it superseded and every row it made current.
+    val changedAt = Pipeline.relChanges(spark, state).get
+      .select("changed_at").distinct().collect().map(_.getTimestamp(0)).toSeq
+    assert(changedAt.size == 1, s"one changed_at per load, got $changedAt")
+    val loadTs = changedAt.head
+    val cur = Pipeline.currentTable(spark, state, "contacts").get
+    val superseded = Pipeline.historyTable(spark, state, "contacts").get
+      .groupBy("hubspot_id").agg(max("valid_to").as("superseded_at"))
+    val changed = cur.join(superseded, "hubspot_id")
+      .select(col("hubspot_id"), col("is_deleted"), col("valid_from"),
+        col("valid_to"), col("superseded_at")).collect()
+    assert(changed.map(_.getString(0)).sorted.toSeq == Seq("c1", "c3"))
+    changed.foreach { r =>
+      assert(r.getTimestamp(4) == loadTs, s"history valid_to of ${r.getString(0)}")
+      // a live successor starts where its predecessor ended; a soft
+      // delete ends its current row at the same instant
+      val successor = if (r.getBoolean(1)) r.getTimestamp(3) else r.getTimestamp(2)
+      assert(successor == loadTs, s"current row of ${r.getString(0)}")
+    }
+    val validFrom = Seq("users", "contacts", "companies", "deals", "activities")
+      .map(t => Pipeline.currentTable(spark, state, t).get.select("valid_from"))
+      .reduce(_.unionByName(_)).distinct().collect().map(_.getTimestamp(0))
+    assert(validFrom.length == 2 && validFrom.contains(loadTs),
+      s"each load stamps all its tables with one instant, got ${validFrom.toSeq}")
+
+    // The state lives in its directory alone: no session-catalog entry,
+    // no staging directory.
+    val graftTables = spark.catalog.listTables().collect().map(_.name)
+      .filter(_.startsWith("graft_"))
+    assert(graftTables.isEmpty, s"catalog tables registered: ${graftTables.toSeq}")
+    val staged = new java.io.File(state).listFiles().map(_.getName)
+      .filter(_.startsWith("stage_"))
+    assert(staged.isEmpty, s"staging directories left: ${staged.toSeq}")
   }
 
   test("corrupt current state fails loudly instead of resetting to first-load") {
