@@ -1,16 +1,19 @@
 package graft
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{DataFrame, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.types.IntegerType
 
 import graft.functions._
+import org.apache.spark.sql.graft.SqlShim
+
 import graft.plans.{AsOfJoinStrategy, SortLocalRelation}
 
 /** How a graft session is set up: the one local session the mains run on,
-  * and the one idempotent install of the native SQL functions, the
-  * as-of join planner strategy and the local-sort optimizer rule. */
+  * the one idempotent install of the native SQL functions, the as-of
+  * join planner strategy and the local-sort optimizer rule, and the one
+  * way it reads a parquet path. */
 object Graft {
 
   /** Local worker threads: `SPARK_GRAFT_CPUS`, else every core of the host. */
@@ -96,4 +99,20 @@ object Graft {
         exp.extraOptimizations = exp.extraOptimizations :+ SortLocalRelation
     }
   }
+
+  /** `path` read as parquet with the schema `spark.read.parquet(path)`
+    * infers, taken from one data file's footer on the driver
+    * ([[SqlShim.parquetFooterSchema]]), so the read launches no
+    * schema-inference job (Spark runs that footer read as a job even
+    * over one file). A path with no data file, or a session that merges
+    * parquet schemas, reads as `spark.read.parquet` does. */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    parquetIfAny(spark, path).getOrElse(spark.read.parquet(path))
+
+  /** [[parquet]] of `path` when a data file lies under it, else None. */
+  def parquetIfAny(spark: SparkSession, path: String): Option[DataFrame] =
+    SqlShim.parquetFooterSchema(spark, path).map { schema =>
+      if (spark.sessionState.conf.isParquetSchemaMergingEnabled) spark.read.parquet(path)
+      else spark.read.schema(schema).parquet(path)
+    }
 }

@@ -63,7 +63,8 @@ object Pipeline {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
-  /** The `current_<name>` table for a state dir, read by path. Read-only:
+  /** The `current_<name>` table for a state dir, read by path with its
+    * footer schema ([[Graft.parquet]], no schema job). Read-only:
     * a crashed swap is resolved non-destructively (the marker-certified
     * `.next` is read in place) — readers must never join the swap
     * protocol, or a report racing a load could interleave destructively
@@ -72,30 +73,19 @@ object Pipeline {
   def currentTable(spark: SparkSession, stateDir: String, name: String): Option[DataFrame] =
     graft.temporal.AtomicSwap
       .readablePath(spark, s"$stateDir/current_$name")
-      .map(spark.read.parquet(_))
+      .map(Graft.parquet(spark, _))
 
   /** The `history_<name>` table for a state dir, `None` before the first
     * load. Every load appends, so a history no load has superseded a row
     * of holds only schema-only files and reads as an empty table. */
   def historyTable(spark: SparkSession, stateDir: String, name: String): Option[DataFrame] =
-    parquetIn(spark, s"$stateDir/history_$name")
+    Graft.parquetIfAny(spark, s"$stateDir/history_$name")
 
   /** The accumulated `relchanges` CDC log for a state dir (T4), `None`
     * until a non-empty diff has been appended: idempotent reloads append
     * nothing, so the directory may not exist yet. */
   def relChanges(spark: SparkSession, stateDir: String): Option[DataFrame] =
-    parquetIn(spark, s"$stateDir/relchanges")
-
-  /** The parquet table at `path` when the directory holds at least one
-    * parquet file: a directory without one has no schema a path read can
-    * infer. */
-  private def parquetIn(spark: SparkSession, path: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p) && fs.listStatus(p).exists(_.getPath.getName.endsWith(".parquet")))
-      Some(spark.read.parquet(path))
-    else None
-  }
+    Graft.parquetIfAny(spark, s"$stateDir/relchanges")
 
   /** Node-id table for J6 edge validation. */
   def nodeIds(g: GraphTables): DataFrame = Seq(
@@ -182,7 +172,7 @@ object Pipeline {
     val newEdges =
       if (!fileExists(spark, edgesPath)) validEdges
       else {
-        val prev = spark.read.parquet(edgesPath)
+        val prev = Graft.parquet(spark, edgesPath)
         // T4: stage added/removed trackable-edge changes for the sidecar
         // commit. diffEdges excludes immutable types itself; a reload of
         // the same snapshot stages nothing (idempotence invariant — an
@@ -225,7 +215,7 @@ object Pipeline {
       val dated = nodes.withColumn("event_date", to_date(col("timestamp")))
       val fresh =
         if (!fileExists(spark, path)) dated
-        else dated.join(spark.read.parquet(path).select("hubspot_id"),
+        else dated.join(Graft.parquet(spark, path).select("hubspot_id"),
           Seq("hubspot_id"), "left_anti")
       fresh.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
@@ -237,6 +227,6 @@ object Pipeline {
 
     // Verification counts (S17): the node counts came from the SCD step
     println(s"[pipeline] nodes: ${counts.mkString(" ")} " +
-      s"edges=${spark.read.parquet(edgesPath).count()}")
+      s"edges=${Graft.parquet(spark, edgesPath).count()}")
   }
 }

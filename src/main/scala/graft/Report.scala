@@ -78,7 +78,7 @@ object Report {
     import graft.query.{GraphQueries => GQ, OwnershipQueries => OQ, TemporalQueries => TQ}
     def edgesState: DataFrame =
       if (Pipeline.fileExists(spark, s"$rawDir/edges"))
-        spark.read.parquet(s"$rawDir/edges")
+        Graft.parquet(spark, s"$rawDir/edges")
       else sys.error(s"no edges state under $rawDir — run the pipeline first")
     // F19: the reporting "now" is captured once per invocation, not per row.
     val now = new java.sql.Timestamp(System.currentTimeMillis())

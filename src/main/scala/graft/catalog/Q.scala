@@ -75,6 +75,17 @@ object Q {
     try body finally s.conf.set(k, prev)
   }
 
+  /** A frame pinned once per (session, dataset `dir`, `key`) in the
+    * session registry ([[graft.plans.SessionRegistry]]), fingerprinted by
+    * a driver listing of the `tables` it derives from: a rewritten source
+    * table rebuilds it and unpersists the stale one, and the context's
+    * stop drops it. `build` returns the frames to pin, persisted. */
+  def pinned[V <: AnyRef](s: SparkSession, dir: String, tables: Seq[String], key: Any)(
+      frames: V => Seq[DataFrame])(build: => V): V =
+    graft.plans.SessionRegistry.shared.pin(s.sparkContext, (dir, key),
+      graft.plans.SessionRegistry.listing(s, tables.map(t => s"$dir/$t.parquet")))(
+      (v: V) => frames(v).foreach(_.unpersist(blocking = false)))(build)
+
   /** Read one of the driver-generated tables (see TESTDATA.md).
     *
     * `events.ts` has shipped under two physical types across driver data
@@ -96,7 +107,7 @@ object Q {
     val df = {
       if (name == "events")
         s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      s.read.parquet(s"$dir/$name.parquet")
+      graft.Graft.parquet(s, s"$dir/$name.parquet")
     }
     if (name == "events") {
       import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}

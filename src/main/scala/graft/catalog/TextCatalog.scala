@@ -153,21 +153,22 @@ object TextCatalog {
     * min(substring(md5(..)..)) x16 would hash each shingle 16 times
     * instead of 4. */
   /** ONE distinct 5-gram shingle frame and ONE 16-slot signature table
-    * per (session, dataset) — the hyperballPins/copartPins discipline
+    * per (session, dataset) — the GraphCatalog pin discipline
     * (r16): x_minhash_lsh, x_minhash_bucket_stats and x_minhash_error
     * each rebuilt the shingle explode + 4 md5s per shingle + 16 min
     * aggregates privately, and the error audit additionally re-derived
     * the shingle set for its exact-Jaccard side. At 100 TB the
     * signature table IS the persisted dedup artifact every downstream
     * pass reads. min over the DISTINCT shingle set equals min over the
-    * multiset, so mh is bit-identical to the former non-distinct build. */
-  private val minhashPins = new java.util.concurrent.ConcurrentHashMap[
-    String, (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)]()
-
-  /** (distinct (doc_id, sh) 5-gram shingles, 16-slot signature table) */
+    * multiset, so mh is bit-identical to the former non-distinct build.
+    * Both frames, (distinct (doc_id, sh) 5-gram shingles, 16-slot
+    * signature table), are pinned in the session registry
+    * ([[Q.pinned]]), keyed by the `documents` files. */
   private def minhashBase(s: org.apache.spark.sql.SparkSession, d: String)
       : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) =
-    minhashPins.computeIfAbsent(s.sparkContext.applicationId + ":" + d, _ => {
+    Q.pinned(s, d, Seq("documents"), "minhash")(
+        (p: (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)) =>
+          Seq(p._1, p._2)) {
       val docs = spread(t(s, d, "documents")).withColumn("norm", expr(sparkNorm))
       val shingles = docs
         .select(col("doc_id"), explode(expr("char_ngrams(norm, 5)")).as("sh"))
@@ -181,7 +182,7 @@ object TextCatalog {
       val mh = hashed.groupBy("doc_id").agg(minhashes.head, minhashes.tail: _*)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       (shingles, mh)
-    })
+    }
 
   private def minhashParts(s: org.apache.spark.sql.SparkSession, d: String)
       : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {

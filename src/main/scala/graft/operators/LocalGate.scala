@@ -24,8 +24,9 @@ import graft.plans.LocalEval
   *  - the frame its distributed loop starts from is first offered to
   *    [[graft.plans.LocalEval]]: when that frame's plan evaluates on the
   *    driver and its narrow inputs fit the broadcast byte budget, the
-  *    twin gets it as a local relation from one narrow job per input,
-  *    and the shuffles below the cut never run;
+  *    twin gets it as a local relation from at most one narrow job per
+  *    input (none for a file the session registry already holds), and
+  *    the shuffles below the cut never run;
   *  - otherwise the frame is cut as before, counted in the cut's own
   *    job; at or under the threshold it is collected into a local
   *    relation and the cut's blocks are released at once;
@@ -42,7 +43,8 @@ object LocalGate {
     * gate is on (`threshold > 0`), the operator's own precondition
     * holds, and the cut frame measures at or under `threshold` rows;
     * an admitted cut frame is a local relation. [[graft.plans.LocalEval]]
-    * answers small plans with one job per narrow input. Otherwise the
+    * answers small plans with at most one job per narrow input, and none
+    * for files the session registry holds. Otherwise the
     * count comes from the cut's materializing job
     * ([[Lineage.cutCounted]]; one count job more under a reliable
     * checkpoint dir), and an admitted cut is collected in one job and

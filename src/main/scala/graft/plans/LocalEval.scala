@@ -15,9 +15,12 @@ import org.apache.spark.sql.catalyst.plans.{FullOuter, InnerLike, JoinType, Left
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
-import org.apache.spark.sql.execution.datasources.LogicalRelation
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation,
+  PartitioningAwareFileIndex}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.graft.SqlShim
 import org.apache.spark.sql.types.DataType
+import org.apache.spark.util.SizeEstimator
 
 import graft.operators.LocalGate
 
@@ -49,6 +52,23 @@ import graft.operators.LocalGate
   * raises exactly as before. When a gate fails `df` comes back
   * unchanged and nothing runs.
   *
+  * The file is the unit the driver reuses. A narrow input that ends in
+  * a file relation (a non-streaming `HadoopFsRelation` over a listing
+  * file index) whose own size estimate fits the byte budget is read
+  * whole: the relation is collected once, its `Project`, `Filter` and
+  * `Generate` run on the driver, and its rows go into the session
+  * registry ([[SessionRegistry]]) keyed by the canonical relation, the
+  * session settings that decode it, and its files' fingerprint (path,
+  * length, mtime from the listing the relation already holds). A later
+  * ask over the same unchanged files, with any key or filter, reads the
+  * stored rows and runs no job; a rewritten or swapped table lists other
+  * files and is read anew. A relation whose whole collect passes
+  * `threshold` rows is not stored: the ask is retried with its file
+  * scans collected as narrow inputs when a filter or generator above one
+  * could bring it under the gate, else `df` comes back. Relations over
+  * the budget and non-file inputs (checkpoints, cached frames) keep the
+  * per-ask collect and are never stored.
+  *
   * The answer equals the distributed plan's: the same bound expressions
   * evaluate each row; grouping, partition and join keys compare as
   * `UnsafeRow` bytes after Spark's float normalization, as the hash
@@ -62,7 +82,8 @@ import graft.operators.LocalGate
   * Why: a report ask over one portal's CRM state reads at most a few
   * thousand rows, yet its distributed plan runs 2-8 jobs, and a mix of
   * asks cycles through more generated classes than Spark's codegen
-  * cache holds, so each pass recompiles them (SCALE.md, `LocalEval`).
+  * cache holds, so each pass recompiles them; and the asks of one
+  * session read the same few files over and over (SCALE.md, `LocalEval`).
   * Folding is explicit at the call sites ([[graft.query]] asks,
   * [[graft.operators.LocalGate.cut]]), not an optimizer rule: such a
   * rule would also fold every literal test or catalog frame. */
@@ -74,18 +95,71 @@ object LocalEval {
     val plan = df.queryExecution.optimizedPlan
     if (threshold <= 0 || budget <= 0 || plan.isStreaming ||
         plan.isInstanceOf[LocalRelation]) return df
-    val c = new Compiler(threshold)
+    answer(df, plan, threshold, budget, wholeFiles = true)
+  }
+
+  /** `df` answered locally, file relations read whole through the
+    * registry when `wholeFiles`; a file relation over the row gate
+    * retries with file scans collected as narrow inputs, when some
+    * filter or generator above one could bring it under the gate. */
+  private def answer(df: DataFrame, plan: LogicalPlan, threshold: Long, budget: Long,
+      wholeFiles: Boolean): DataFrame = {
+    val spark = df.sparkSession
+    val c = new Compiler(threshold, if (wholeFiles) budget else 0L, spark.sessionState.conf)
     val root = try Some(c.compile(plan)) catch { case Bail | NonFatal(_) => None }
     if (root.isEmpty || !c.inputs.values.forall(_.plan.stats.sizeInBytes <= budget)) return df
     try {
       val cap = math.min(threshold + 1, Int.MaxValue.toLong).toInt
       for (in <- c.inputs.values) {
-        in.rows = collect(spark, in.plan, cap)
+        in.rows = in.file match {
+          case Some(key) => fileRows(spark, in.plan, key, cap, threshold)
+          case None => collect(spark, in.plan, cap)
+        }
         if (in.rows.length > threshold) throw Bail
       }
       relation(spark, df.queryExecution.analyzed.output, root.get())
-    } catch { case Bail | NonFatal(_) => df }
+    } catch {
+      case FileOverGate if c.narrowsFile => answer(df, plan, threshold, budget, wholeFiles = false)
+      case Bail | FileOverGate | NonFatal(_) => df
+    }
   }
+
+  /** The rows of file relation `r`: the registry's when its files are
+    * unchanged, else one capped collect, stored unless over the gate. */
+  private def fileRows(spark: SparkSession, r: LogicalPlan, key: Any, cap: Int,
+      threshold: Long): Rows = {
+    val sc = spark.sparkContext
+    val files = SessionRegistry.fingerprint(fileIndex(r).get.allFiles())
+    SessionRegistry.shared.get[Rows](sc, key, files).getOrElse {
+      val t0 = System.nanoTime()
+      val rows = collect(spark, r, cap)
+      if (rows.length > threshold) throw FileOverGate
+      SessionRegistry.shared.put(sc, key, files, rows, footprint(rows), System.nanoTime() - t0)
+      rows
+    }
+  }
+
+  /** The listing of a non-streaming file relation whose index lists its
+    * files (what Spark plans a file scan from), else None. */
+  private def fileIndex(p: LogicalPlan): Option[PartitioningAwareFileIndex] = p match {
+    case r: LogicalRelation if !r.isStreaming => r.relation match {
+      case HadoopFsRelation(i: PartitioningAwareFileIndex, _, _, _, _, _) => Some(i)
+      case _ => None
+    }
+    case _ => None
+  }
+
+  /** Session settings that change the rows a file decodes to. */
+  private val readerConf = Seq("spark.sql.session.timeZone", "spark.sql.caseSensitive",
+    "spark.sql.legacy.parquet.nanosAsLong", "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp", "spark.sql.files.ignoreCorruptFiles",
+    "spark.sql.files.ignoreMissingFiles")
+
+  /** Driver heap held by collected rows, about. */
+  private def footprint(rows: Rows): Long = rows.iterator.map {
+    case u: UnsafeRow => u.getSizeInBytes + 64L
+    case r => SizeEstimator.estimate(r)
+  }.sum + 16L * rows.length
 
   /** Rows of `df` when its optimized plan is a `LocalRelation` (no job). */
   def localRows(df: DataFrame): Option[Int] = df.queryExecution.optimizedPlan match {
@@ -112,10 +186,16 @@ object LocalEval {
 
   private object Bail extends ControlThrowable
 
+  /** A whole file relation's collect passed the row gate. */
+  private object FileOverGate extends ControlThrowable
+
   private type Rows = IndexedSeq[InternalRow]
 
-  /** A narrow input; `rows` is filled by its collect job. */
-  private final class Input(val plan: LogicalPlan) { var rows: Rows = IndexedSeq.empty }
+  /** A narrow input; `rows` is filled by its collect job, or from the
+    * registry under `file`, the key of a whole file relation. */
+  private final class Input(val plan: LogicalPlan, val file: Option[Any] = None) {
+    var rows: Rows = IndexedSeq.empty
+  }
 
   /** A running aggregate: rows in, current value out. */
   private trait Acc {
@@ -151,8 +231,20 @@ object LocalEval {
 
   /** Turns a plan into a thunk over its narrow inputs' rows; throws
     * [[Bail]] on anything it does not evaluate. */
-  private final class Compiler(threshold: Long) {
-    val inputs = mutable.LinkedHashMap.empty[LogicalPlan, Input]
+  private final class Compiler(threshold: Long, filesBudget: Long, conf: SQLConf) {
+    val inputs = mutable.LinkedHashMap.empty[Any, Input]
+    /** Whether a filter or generator sits above a whole file relation. */
+    var narrowsFile = false
+
+    /** A file relation read whole: one that fits `filesBudget` and whose
+      * row count, when known, fits the gate. */
+    private def wholeFile(p: LogicalPlan): Boolean = fileIndex(p).isDefined &&
+      p.stats.sizeInBytes <= filesBudget && !p.stats.rowCount.exists(_ > threshold)
+
+    private def leaf(p: LogicalPlan): LogicalPlan = p.children match {
+      case Seq(child) => leaf(child)
+      case _ => p
+    }
 
     private def bind[E <: Expression](e: E, input: Seq[Attribute]): E = {
       val unevaluable = e.exists {
@@ -199,12 +291,24 @@ object LocalEval {
       if (e.foldable) e.eval().asInstanceOf[Int] else throw Bail
 
     def compile(p: LogicalPlan): () => Rows = p match {
+      case n if narrow(n) && wholeFile(leaf(n)) =>
+        if (n.exists(o => o.isInstanceOf[Filter] || o.isInstanceOf[Generate])) narrowsFile = true
+        if (n ne leaf(n)) operator(n)
+        else {
+          val key = (n.canonicalized, readerConf.map(conf.getConfString(_, null)))
+          val in = inputs.getOrElseUpdate(key, new Input(n, Some(key)))
+          () => in.rows
+        }
       case n if narrow(n) =>
         // a known row count (cached or analyzed stats) is gated here
         if (n.stats.rowCount.exists(_ > threshold) || n.exists(_.expressions.exists(e =>
             !e.deterministic || SubqueryExpression.hasSubquery(e)))) throw Bail
         val in = inputs.getOrElseUpdate(n.canonicalized, new Input(n))
         () => in.rows
+      case _ => operator(p)
+    }
+
+    private def operator(p: LogicalPlan): () => Rows = p match {
       case LocalRelation(_, data, false, _) =>
         val rows = guarded(data.toIndexedSeq)
         () => rows

@@ -98,8 +98,9 @@ object GraphQueries {
     * `(a)-[*..k]-(b)` neighborhood. A CRM entity graph sits under the
     * [[graft.operators.LocalGate]] edge gate, so the hop rounds run
     * as [[graft.operators.GraphAlgos.bfsHops]]' driver twin over a cut
-    * frame [[graft.plans.LocalEval]] builds from one job per narrow
-    * input (a counted cut and one collect when it declines), and the
+    * frame [[graft.plans.LocalEval]] builds from the edge file's rows,
+    * collected once per session (a counted cut and one collect when it
+    * declines), and the
     * answer is sorted on the driver — not a fixed number of Spark jobs
     * per hop. */
   def neighborhood(edges: DataFrame, entityType: String, entityId: String,
@@ -123,8 +124,9 @@ object GraphQueries {
     * Under the [[graft.operators.LocalGate]] edge gate (every CRM entity
     * graph) the bounded relaxation runs as
     * [[graft.operators.GraphAlgos.shortestPaths]]' driver twin — its
-    * pair edges from one job per narrow input ([[graft.plans.LocalEval]];
-    * a counted cut and one collect when it declines), sorted on the
+    * pair edges from the edge file's rows, collected once per session
+    * ([[graft.plans.LocalEval]]; a counted cut and one collect when it
+    * declines), sorted on the
     * driver, instead of a fixed number of Spark jobs per hop — with
     * bit-identical distances. */
   def shortestPath(edges: DataFrame, fromType: String, fromId: String,

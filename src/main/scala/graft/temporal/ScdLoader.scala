@@ -112,7 +112,7 @@ object ScdLoader {
       val p = new org.apache.hadoop.fs.Path(currentPath)
       val current =
         if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-          spark.read.parquet(currentPath)
+          graft.Graft.parquet(spark, currentPath)
         else in.limit(0)
       val r = applyScd(current, in, lit(loadTs))
       r.current.write.mode("overwrite").parquet(s"$currentPath.next")

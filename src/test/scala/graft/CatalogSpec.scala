@@ -150,4 +150,55 @@ class CatalogSpec extends AnyFunSuite {
       near("sum_disc_price", "d_disc"); near("sum_charge", "d_charge")
     }
   }
+
+  test("every sf0.001 table reads with its footer schema: the inferred schema, no job") {
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    val before = spark.conf.get(key)
+    spark.conf.set(key, "true") // as Q.t sets it for events
+    try new java.io.File(dir).list.filter(_.endsWith(".parquet")).sorted
+      .foreach(t => FooterSchemaSpec.assertFooterSchema(spark, s"$dir/$t"))
+    finally spark.conf.set(key, before)
+  }
+
+  /** A copy of the sf0.001 tables in a directory no query has read. */
+  private def copy(): String = {
+    val to = java.nio.file.Files.createTempDirectory("graft-pins").toString
+    new java.io.File(dir).listFiles.foreach { f =>
+      java.nio.file.Files.copy(f.toPath, new java.io.File(s"$to/${f.getName}").toPath)
+    }
+    to
+  }
+
+  private def rows(name: String, d: String): Seq[String] =
+    SparkEntry.queries(name)(spark, d).collect().map(_.toString).toSeq
+
+  test("pins: cold and warm answers of every pin family are row-identical") {
+    val d = copy()
+    val consumers = Seq("g_neighborhood_func", "g_eff_diameter", "g_triangles_copart",
+      "g_random_walks", "g_walk_skipgrams", "x_minhash_bucket_stats", "x_minhash_error")
+    val cold = consumers.map(rows(_, d))
+    val registry = graft.plans.SessionRegistry.shared
+    val hits = registry.stats(spark.sparkContext).hits
+    val warm = consumers.map(rows(_, d))
+    consumers.zip(cold.zip(warm)).foreach { case (n, (c, w)) => assert(c == w, n) }
+    assert(registry.stats(spark.sparkContext).hits >= hits + consumers.size)
+  }
+
+  test("pins: rewriting lineitem in place rebuilds the HyperBall registers") {
+    val d = copy()
+    val before = rows("g_neighborhood_func", d)
+    // keep the orders with an even key: fewer co-occurrence pairs
+    val path = s"$d/lineitem.parquet"
+    val kept = spark.read.parquet(path).filter("l_orderkey % 2 = 0").collect()
+    val schema = spark.read.parquet(path).schema
+    new java.io.File(path).delete()
+    spark.createDataFrame(java.util.List.of(kept: _*), schema).coalesce(1)
+      .write.parquet(s"$d/lineitem.tmp")
+    val part = new java.io.File(s"$d/lineitem.tmp").listFiles
+      .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
+    java.nio.file.Files.move(part.toPath, new java.io.File(path).toPath)
+    val after = rows("g_neighborhood_func", d)
+    assert(after != before)
+    assert(after == rows("g_neighborhood_func", d))
+  }
 }

@@ -118,20 +118,36 @@ class LocalEvalSpec extends AnyFunSuite {
     }
   }
 
-  test("file inputs: each distinct narrow input is collected in one job") {
+  /** `a` and `b` written to a directory no earlier ask has read, and
+    * read back with their footer schemas (no schema job). */
+  private def fresh(seed: Long): (DataFrame, DataFrame) = {
     val dir = java.nio.file.Files.createTempDirectory("graft-localeval").toString
-    val (ra, rb) = tables(7L, 60)
+    val (ra, rb) = tables(seed, 60)
     local(ra, aSchema).write.parquet(s"$dir/a")
     local(rb, bSchema).write.parquet(s"$dir/b")
-    val (a, b) = (spark.read.parquet(s"$dir/a"), spark.read.parquet(s"$dir/b"))
+    (Graft.parquet(spark, s"$dir/a"), Graft.parquet(spark, s"$dir/b"))
+  }
+
+  test("file inputs: each distinct narrow input is collected in one job") {
+    val (a, b) = fresh(7L)
     val (unordered, ordered) = asks(a, b)
     unordered.foreach { case (n, df) => assertSame(s"parquet: $n", df, ordered = false) }
     ordered.foreach { case (n, df) => assertSame(s"parquet: $n", df, ordered = true) }
-    // a join of `a` with itself reads one narrow input; a and b are two
-    val self = a.as("l").join(a.as("r"), col("l.k") === col("r.k"))
-    assert(TestSpark.jobsDuring(LocalEval(self).collect()) == 1)
-    val both = a.join(b, Seq("k")).groupBy("g").agg(sum("y"))
-    assert(TestSpark.jobsDuring(LocalEval(both).collect()) == 2)
+    // over files no ask has read: a join of `a` with itself reads one
+    // file relation, a join of a and b two; each is collected once, and
+    // a rerun, or another filter over the same files, runs no job
+    val (a1, _) = fresh(8L)
+    def self(k: Int) = a1.as("l").join(a1.as("r"), col("l.k") === col("r.k"))
+      .filter(col("l.k") =!= k)
+    assert(TestSpark.jobsDuring(LocalEval(self(1)).collect()) == 1)
+    assert(TestSpark.jobsDuring(LocalEval(self(1)).collect()) == 0)
+    assert(TestSpark.jobsDuring(LocalEval(self(2)).collect()) == 0)
+    val (a2, b2) = fresh(9L)
+    def both(y: Long) = a2.join(b2.filter(col("y") > y), Seq("k")).groupBy("g").agg(sum("y"))
+    assert(TestSpark.jobsDuring(LocalEval(both(0L)).collect()) == 2)
+    assert(TestSpark.jobsDuring(LocalEval(both(0L)).collect()) == 0)
+    assert(TestSpark.jobsDuring(LocalEval(both(1L)).collect()) == 0)
+    assertSame("parquet, from the registry", both(1L), ordered = false)
   }
 
   test("unsupported plans and inputs over either gate come back unchanged with no job") {
