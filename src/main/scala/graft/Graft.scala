@@ -8,7 +8,7 @@ import org.apache.spark.sql.types.IntegerType
 import graft.functions._
 import org.apache.spark.sql.graft.SqlShim
 
-import graft.plans.{AsOfJoinStrategy, SortLocalRelation}
+import graft.plans.AsOfJoinStrategy
 
 /** How a graft session is set up: the one local session the mains run on,
   * the one idempotent install of the native SQL functions, the as-of
@@ -77,10 +77,9 @@ object Graft {
     fn("suffix_lcs", classOf[SuffixLcs])(SuffixLcs.build),
     fn("suffix_spans", classOf[SuffixSpans])(SuffixSpans.build))
 
-  /** Give `spark` every native function, [[AsOfJoinStrategy]] and the
-    * [[SortLocalRelation]] optimizer rule, each only when the session
-    * lacks it. A session launched with
-    * [[graft.plans.GraftExtensions]] already has all three, so this is a
+  /** Give `spark` every native function and [[AsOfJoinStrategy]], each
+    * only when the session lacks it. A session launched with
+    * [[graft.plans.GraftExtensions]] already has both, so this is a
     * few lookups there and on every repeat call, and never replaces (or
     * warns about) an existing registration. */
   def install(spark: SparkSession): Unit = {
@@ -94,9 +93,6 @@ object Graft {
     exp.synchronized {
       if (!spark.sessionState.planner.strategies.contains(AsOfJoinStrategy))
         exp.extraStrategies = exp.extraStrategies :+ AsOfJoinStrategy
-      if (!exp.extraOptimizations.contains(SortLocalRelation) &&
-          !spark.sessionState.optimizer.extendedOperatorOptimizationRules.contains(SortLocalRelation))
-        exp.extraOptimizations = exp.extraOptimizations :+ SortLocalRelation
     }
   }
 

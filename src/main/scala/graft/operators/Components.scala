@@ -64,28 +64,16 @@ object Components {
            org.apache.spark.sql.types.IntegerType => true
       case _ => false
     })
-    val (sym, local) = LocalGate.cut(symPlan, localThreshold, integralIds)
-    if (local) return localUnionFind(sym, sym.schema(0).dataType)
-    var labels = sym.select(col("s").as("node")).distinct()
-      .withColumn("comp", col("node"))
-      .cutLineage()
+    val sym = LocalGate.cut(symPlan, localThreshold, integralIds) match {
+      case Right(cut) => return localUnionFind(cut)
+      case Left(cp) => cp
+    }
+    var labels = initialLabels(sym).cutLineage()
     var iter = 0
     var converged = false
     val gc = new Lineage.RoundGc(edges.sparkSession)
     while (iter < maxIter && !converged) {
-      // Hop: min label among the node itself and its neighbors.
-      val neighborMin = sym
-        .join(labels.select(col("node").as("d"), col("comp").as("ncomp")), Seq("d"))
-        .groupBy(col("s").as("node"))
-        .agg(min("ncomp").as("nmin"))
-      val hopped = labels.join(neighborMin, Seq("node"), "left")
-        .select(col("node"), least(col("comp"), coalesce(col("nmin"), col("comp"))).as("comp"))
-      // Jump: compress one pointer level (comp := label(comp)). Labels
-      // only ever decrease, so label(comp) <= comp and `least` is safe.
-      val jumped = hopped
-        .join(hopped.select(col("node").as("comp"), col("comp").as("ccomp")), Seq("comp"), "left")
-        .select(col("node"), least(col("comp"), coalesce(col("ccomp"), col("comp"))).as("comp"))
-        .cutLineage()
+      val jumped = hopAndJump(sym, labels).cutLineage()
       // Convergence = a full round changed nothing: then the hop was
       // already stable, i.e. every node's label <= all its neighbors'
       // labels, which across each edge in both directions means the
@@ -104,22 +92,43 @@ object Components {
     labels
   }
 
-  /** Driver-side union-find over a small (size-gated) edge set — result
-    * is row-identical to the iterative fixpoint: every node labeled with
-    * the minimum id of its component. Path compression keeps it
-    * effectively linear at the gated sizes.
+  /** Every node of the symmetric edge frame labeled with itself. */
+  private def initialLabels(sym: DataFrame): DataFrame =
+    sym.select(col("s").as("node")).distinct().withColumn("comp", col("node"))
+
+  /** One propagation round over `labels`. Hop: the min label among the
+    * node itself and its neighbors. Jump: compress one pointer level
+    * (comp := label(comp)); labels only ever decrease, so
+    * label(comp) <= comp and `least` is safe. */
+  private def hopAndJump(sym: DataFrame, labels: DataFrame): DataFrame = {
+    val neighborMin = sym
+      .join(labels.select(col("node").as("d"), col("comp").as("ncomp")), Seq("d"))
+      .groupBy(col("s").as("node"))
+      .agg(min("ncomp").as("nmin"))
+    val hopped = labels.join(neighborMin, Seq("node"), "left")
+      .select(col("node"), least(col("comp"), coalesce(col("nmin"), col("comp"))).as("comp"))
+    hopped
+      .join(hopped.select(col("node").as("comp"), col("comp").as("ccomp")), Seq("comp"), "left")
+      .select(col("node"), least(col("comp"), coalesce(col("ccomp"), col("comp"))).as("comp"))
+  }
+
+  /** Driver-side union-find over a small (size-gated) symmetric edge
+    * cut — result is row-identical to the iterative fixpoint: every node
+    * labeled with the minimum id of its component. Path compression
+    * keeps it effectively linear at the gated sizes.
     *
-    * The result is cast back to the INPUT id type: the gate admits
-    * IntegerType edges, and without the cast the output schema would
-    * silently depend on which side of the size gate the data landed —
-    * breaking schema-sensitive consumers (unionByName, strict Dataset
-    * decoding) non-deterministically with data volume. */
-  private def localUnionFind(sym: DataFrame,
-      idType: org.apache.spark.sql.types.DataType): DataFrame = {
-    val spark = sym.sparkSession
-    import spark.implicits._
-    val pairs = sym.select(col("s").cast("long"), col("d").cast("long"))
-      .as[(Long, Long)].collect()
+    * Ids keep the INPUT id type and the schema is one loop round's over
+    * the cut's empty relation: the gate admits IntegerType edges, and
+    * the output schema must not depend on which side of the size gate
+    * the data landed — that would break schema-sensitive consumers
+    * (unionByName, strict Dataset decoding) non-deterministically with
+    * data volume. */
+  private def localUnionFind(cut: LocalGate.Cut): DataFrame = {
+    val (s, d) = (cut.column("s"), cut.column("d"))
+    val long: Any => Long = _.asInstanceOf[Number].longValue
+    val back: Long => Any =
+      if (cut.dataType("s") == org.apache.spark.sql.types.IntegerType) _.toInt else identity
+    val pairs = cut.rows.map(r => (long(s(r)), long(d(r))))
     val parent = scala.collection.mutable.HashMap.empty[Long, Long]
     def find(x: Long): Long = {
       var r = x
@@ -136,7 +145,8 @@ object Components {
         if (ra < rb) parent(rb) = ra else parent(ra) = rb
       }
     }
-    parent.keys.toSeq.map(k => (k, find(k))).toDF("node", "comp")
-      .select(col("node").cast(idType), col("comp").cast(idType))
+    val e = cut.empty
+    cut.answer(hopAndJump(e, initialLabels(e)).schema, parent.keys.toIndexedSeq.map(k =>
+      new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(Array(back(k), back(find(k))))))
   }
 }

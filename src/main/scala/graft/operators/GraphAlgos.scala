@@ -1,10 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.functions._
 import graft.operators.Lineage.{CutOps, spreadCut}
 import org.apache.spark.sql.types._
-import scala.jdk.CollectionConverters._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Distributed graph analytics over DataFrame edge lists.
   *
@@ -127,9 +129,10 @@ object GraphAlgos {
         case ByteType | ShortType | IntegerType | LongType | FloatType | DoubleType => true
         case _ => false // decimal shares divide as decimals on the distributed path
       })
-    val (e, local) = LocalGate.cut(cutFrame, localThreshold, twinnable)
-    if (local) localPageRank(e, source, iters, damping)
-    else distributedRank(e, source, iters, damping)
+    LocalGate.cut(cutFrame, localThreshold, twinnable) match {
+      case Right(cut) => localPageRank(cut, source, iters, damping)
+      case Left(e) => distributedRank(e, source, iters, damping)
+    }
   }
 
   /** The distributed rank loop over the cut edge frame `edges`. */
@@ -213,25 +216,25 @@ object GraphAlgos {
     def apply(v: Any): Int = index.getOrElseUpdate(v, { ids += v; ids.length - 1 })
   }
 
-  /** Driver twin of [[distributedRank]] over the gated edge frame
-    * `(src, dst, weight)`: one collect, then the node set, out-weights,
-    * teleport vector and iteration on primitive arrays, with the
-    * distributed update's association
-    * `(1-d) * t + d * (in_mass + dangling_mass * t)`. Only the order of
-    * the per-node sums differs from Spark's, so ranks agree to
-    * float-noise precision. Null endpoints and weights follow the SQL
+  /** Driver twin of [[distributedRank]] over the gated edge rows
+    * `(src, dst, weight)`: the node set, out-weights, teleport vector and
+    * iteration on primitive arrays, with the distributed update's
+    * association `(1-d) * t + d * (in_mass + dangling_mass * t)`. Only
+    * the order of the per-node sums differs from Spark's, so ranks agree
+    * to float-noise precision. Null endpoints and weights follow the SQL
     * joins: a null node is a dangling node that receives no in-mass.
     * Node ids stay opaque — interned to dense indices and restored on
     * the way out, under the distributed path's schema. */
-  private def localPageRank(e: DataFrame, source: Option[Option[Any]],
+  private def localPageRank(cut: LocalGate.Cut, source: Option[Option[Any]],
       iters: Int, damping: Double): DataFrame = {
-    val spark = e.sparkSession
+    val e = cut.empty
     val nodeField = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).schema.head
     val idType = nodeField.dataType
-    val rows = e.select(col("src"), col("dst"), col("weight").cast(DoubleType)).collect()
+    val (src, dst, weight) = (cut.column("src"), cut.column("dst"), cut.double("weight"))
     val nodes = new Interner
-    rows.foreach { r => nodes(r.get(0)); nodes(r.get(1)) }
+    val ends = cut.rows.map(r => (nodes(src(r)), nodes(dst(r))))
+    val ws = cut.rows.map(weight)
     val (idx, ids) = (nodes.index, nodes.ids)
     val n = ids.length
     require(n > 0, "pageRank: empty graph")
@@ -239,7 +242,7 @@ object GraphAlgos {
     val tele: Array[Double] = source match {
       case None => Array.fill(n)(1.0 / n)
       case Some(Some(s)) =>
-        val key = LocalGate.literalNode(spark, s, idType).collect()(0).get(0)
+        val key = LocalGate.seeds(LocalGate.literalNode(cut.spark, s, idType)).head
         require(key != null && idx.contains(key),
           s"personalizedPageRank: source $s has no edges in the graph")
         pointMass(idx(key))
@@ -250,16 +253,14 @@ object GraphAlgos {
     // weights); edges whose share is null on the SQL path carry nothing
     val hasOut = new Array[Boolean](n)
     val outW = new Array[Double](n)
-    rows.foreach { r =>
-      if (!r.isNullAt(0)) {
-        val s = idx(r.get(0))
-        hasOut(s) = true
-        if (!r.isNullAt(2)) outW(s) += r.getDouble(2)
-      }
+    for (((s, _), w) <- ends.zip(ws) if ids(s) != null) {
+      hasOut(s) = true
+      if (w != null) outW(s) += w.asInstanceOf[Double]
     }
-    val es = rows.filter(r => !r.isNullAt(0) && !r.isNullAt(1) && !r.isNullAt(2) &&
-        outW(idx(r.get(0))) != 0.0)
-      .map(r => (idx(r.get(0)), idx(r.get(1)), r.getDouble(2) / outW(idx(r.get(0)))))
+    val es = ends.zip(ws).collect {
+      case ((s, d), w) if ids(s) != null && ids(d) != null && w != null && outW(s) != 0.0 =>
+        (s, d, w.asInstanceOf[Double] / outW(s))
+    }
     var ranks = tele.clone()
     for (_ <- 1 to iters) {
       var dangling = 0.0
@@ -270,9 +271,12 @@ object GraphAlgos {
       ranks = Array.tabulate(n)(i =>
         (1 - damping) * tele(i) + damping * (inMass(i) + dangling * tele(i)))
     }
-    spark.createDataFrame(ids.indices.map(i => Row(ids(i), ranks(i))).asJava,
-      StructType(Seq(nodeField, StructField("rank", DoubleType, nullable = false))))
+    cut.answer(StructType(Seq(nodeField, StructField("rank", DoubleType, nullable = false))),
+      ids.indices.map(i => row(ids(i), ranks(i))))
   }
+
+  /** One answer row of a driver twin. */
+  private def row(values: Any*): InternalRow = new GenericInternalRow(values.toArray)
 
   /** Per-node triangle count over an undirected edge list.
     *
@@ -561,8 +565,10 @@ object GraphAlgos {
     val cutFrame = edges.select(col("s"), col("d"), col("w"))
     val twinnable = cutFrame.schema("s").dataType == cutFrame.schema("d").dataType &&
       LocalGate.hashableId(cutFrame.schema("s").dataType)
-    val (e, local) = LocalGate.cut(cutFrame, localThreshold, twinnable)
-    if (local) return localShortestPaths(e, sourceNodes, maxHops)
+    val e = LocalGate.cut(cutFrame, localThreshold, twinnable) match {
+      case Right(cut) => return localShortestPaths(cut, sourceNodes, maxHops)
+      case Left(cp) => cp
+    }
     // Seeds are DEDUPED (round-8 advice: a duplicated seed row would
     // otherwise surface as repeated dist-0 rows whenever no relaxation
     // round fires) — cheap, the seed set is small by construction. A
@@ -610,15 +616,17 @@ object GraphAlgos {
     * bit-identical. Same seed contract; an edge with a null source
     * never relaxes, as in the SQL join. Weights are non-null (the
     * contract: positive). */
-  private def localShortestPaths(e: DataFrame, sourceNodes: DataFrame,
+  private def localShortestPaths(cut: LocalGate.Cut, sourceNodes: DataFrame,
       maxHops: Int): DataFrame = {
     import scala.collection.mutable
-    val idType = e.schema("s").dataType
-    val seedFrame = sourceNodes.select(col(sourceNodes.columns.head).cast(idType).as("node"))
+    val seedFrame = sourceNodes.select(
+      col(sourceNodes.columns.head).cast(cut.dataType("s")).as("node"))
+    val (s, d, w) = (cut.column("s"), cut.column("d"), cut.double("w"))
     val adj = mutable.HashMap.empty[Any, mutable.ArrayBuffer[(Any, Double)]]
-    e.select(col("s"), col("d"), col("w").cast(DoubleType)).collect().foreach { r =>
-      if (!r.isNullAt(0) && !r.isNullAt(2))
-        adj.getOrElseUpdate(r.get(0), mutable.ArrayBuffer.empty) += ((r.get(1), r.getDouble(2)))
+    cut.rows.foreach { r =>
+      val (u, c) = (s(r), w(r))
+      if (u != null && c != null)
+        adj.getOrElseUpdate(u, mutable.ArrayBuffer.empty) += ((d(r), c.asInstanceOf[Double]))
     }
     val dist = mutable.LinkedHashMap.empty[Any, Double]
     LocalGate.seeds(seedFrame).foreach(dist(_) = 0.0)
@@ -637,11 +645,12 @@ object GraphAlgos {
     // the distributed schema: seed rows alone when no round ran, else
     // the min-merge of seeds and relaxed rows
     val seeded = seedFrame.distinct().withColumn("dist", lit(0.0))
+    val e = cut.empty
     val schema =
       if (hop == 0) seeded.schema
       else seeded.unionByName(e.select(col("d").as("node"), col("w").cast(DoubleType).as("dist")))
         .groupBy("node").agg(min("dist").as("dist")).schema
-    e.sparkSession.createDataFrame(dist.map { case (v, c) => Row(v, c) }.toSeq.asJava, schema)
+    cut.answer(schema, dist.iterator.map { case (v, c) => row(v, c) }.toIndexedSeq)
   }
 
   /** Minimum hop distance from a source node over an undirected edge
@@ -682,9 +691,11 @@ object GraphAlgos {
       maxHops: Int = 6, broadcastFrontierLimit: Long = 4L << 20,
       localThreshold: Long = LocalGate.DefaultRows): DataFrame = {
     val symPlan = symmetric(edges)
-    val (sym, local) = LocalGate.cut(symPlan, localThreshold,
-      LocalGate.hashableId(symPlan.schema("s").dataType))
-    if (local) return localBfs(sym, sourceNodes, maxHops)
+    val sym = LocalGate.cut(symPlan, localThreshold,
+        LocalGate.hashableId(symPlan.schema("s").dataType)) match {
+      case Right(cut) => return localBfs(cut, sourceNodes, maxHops)
+      case Left(cp) => cp
+    }
     // Seeds deduped; absent seeds still report hops 0 (same contract as
     // [[shortestPathsFrom]] — see the note there).
     var settled = sourceNodes
@@ -722,12 +733,13 @@ object GraphAlgos {
     * `sym`: the same frontier rounds over a hash adjacency — round k
     * expands only the nodes round k-1 settled, minus everything settled
     * so far — with the same seed contract and output schema. */
-  private def localBfs(sym: DataFrame, sourceNodes: DataFrame, maxHops: Int): DataFrame = {
+  private def localBfs(cut: LocalGate.Cut, sourceNodes: DataFrame, maxHops: Int): DataFrame = {
     import scala.collection.mutable
-    val idType = sym.schema("s").dataType
-    val seedFrame = sourceNodes.select(col(sourceNodes.columns.head).cast(idType).as("node"))
+    val seedFrame = sourceNodes.select(
+      col(sourceNodes.columns.head).cast(cut.dataType("s")).as("node"))
+    val (s, d) = (cut.column("s"), cut.column("d"))
     val adj = mutable.HashMap.empty[Any, mutable.ArrayBuffer[Any]]
-    sym.collect().foreach(r => adj.getOrElseUpdate(r.get(0), mutable.ArrayBuffer.empty) += r.get(1))
+    cut.rows.foreach(r => adj.getOrElseUpdate(s(r), mutable.ArrayBuffer.empty) += d(r))
     val settled = mutable.LinkedHashMap.empty[Any, Int]
     LocalGate.seeds(seedFrame).foreach(settled(_) = 0)
     var frontier: Iterable[Any] = settled.keys.toVector
@@ -744,9 +756,8 @@ object GraphAlgos {
     val seeded = seedFrame.distinct().withColumn("hops", lit(0))
     val schema =
       if (hop == 0) seeded.schema
-      else seeded.unionByName(sym.select(col("d").as("node"), lit(1).as("hops"))).schema
-    sym.sparkSession.createDataFrame(
-      settled.map { case (v, h) => Row(v, h) }.toSeq.asJava, schema)
+      else seeded.unionByName(cut.empty.select(col("d").as("node"), lit(1).as("hops"))).schema
+    cut.answer(schema, settled.iterator.map { case (v, h) => row(v, h) }.toIndexedSeq)
   }
 
   /** Sampled betweenness centrality (Brandes 2001 pivots, Bader et al.
@@ -920,14 +931,14 @@ object GraphAlgos {
       localThreshold: Long = LocalGate.DefaultRows): DataFrame = {
     require(hops >= 0, s"hops must be >= 0, got $hops")
     val symPlan = symmetric(edges)
-    val (sym, local) = LocalGate.cut(symPlan, localThreshold,
-      edges.schema("s").dataType == edges.schema("d").dataType &&
-        LocalGate.stringableId(symPlan.schema("s").dataType))
-    if (!local) registerRounds(sym, hops, _.cutLineage())
-    else {
-      val (ids, src, dst) = densePairs(sym)
-      if (ids.length.toLong * (hops + 1) <= localThreshold) localHyperball(sym, ids, src, dst, hops)
-      else registerRounds(sym, hops, _.cutLineage())
+    LocalGate.cut(symPlan, localThreshold,
+        edges.schema("s").dataType == edges.schema("d").dataType &&
+          LocalGate.stringableId(symPlan.schema("s").dataType)) match {
+      case Left(sym) => registerRounds(sym, hops, _.cutLineage())
+      case Right(cut) =>
+        val (ids, src, dst) = densePairs(cut)
+        if (ids.length.toLong * (hops + 1) <= localThreshold) localHyperball(cut, ids, src, dst, hops)
+        else registerRounds(cut.frame, hops, _.cutLineage())
     }
   }
 
@@ -968,24 +979,26 @@ object GraphAlgos {
     * digits = w, rho = 1 + nlz32(w) (what [[lz32CaseSql]] computes).
     * Rounds are Jacobi, like the aggregate: every node merges its
     * neighbors' registers of the previous round. `(ids, src, dst)` are
-    * `sym`'s pairs over dense node indices ([[densePairs]]). The schema
-    * is the distributed path's, derived by running [[registerRounds]]
-    * over empty stand-ins for each round's state. */
-  private def localHyperball(sym: DataFrame, ids: Array[Any], src: Array[Int],
+    * the cut's pairs over dense node indices ([[densePairs]]). The
+    * schema is the distributed path's, derived by running
+    * [[registerRounds]] over the cut's empty relation, with an empty
+    * stand-in for each round's state. */
+  private def localHyperball(cut: LocalGate.Cut, ids: Array[Any], src: Array[Int],
       dst: Array[Int], hops: Int): DataFrame = {
-    val spark = sym.sparkSession
     val n = ids.length
     var regs = new Array[Int](n * 16)
     for (v <- 0 until n) {
-      val hex = org.apache.commons.codec.digest.DigestUtils.md5Hex(
-        ids(v).toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      val hex = org.apache.commons.codec.digest.DigestUtils.md5Hex(ids(v) match {
+        case u: UTF8String => u.getBytes
+        case id => id.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      })
       val w = java.lang.Long.parseLong(hex.substring(1, 9), 16)
       regs(v * 16 + Character.digit(hex.charAt(0), 16)) =
         1 + Integer.numberOfLeadingZeros(w.toInt)
     }
-    val rows = new java.util.ArrayList[Row](n * (hops + 1))
+    val rows = new scala.collection.immutable.VectorBuilder[InternalRow]
     def emit(h: Int): Unit = for (v <- 0 until n)
-      rows.add(Row.fromSeq(ids(v) +: (0 until 16).map(j => regs(v * 16 + j)) :+ h))
+      rows += row(ids(v) +: (0 until 16).map(j => regs(v * 16 + j)) :+ h: _*)
     emit(0)
     for (hop <- 1 to hops) {
       val next = regs.clone()
@@ -1003,18 +1016,16 @@ object GraphAlgos {
       regs = next
       emit(hop)
     }
-    val schema = registerRounds(sym, hops,
-      df => spark.createDataFrame(java.util.List.of[Row](), df.schema)).schema
-    spark.createDataFrame(rows, schema)
+    cut.answer(registerRounds(cut.empty, hops, LocalGate.empty).schema, rows.result())
   }
 
-  /** The `(s, d)` id pairs of a gated two-column frame over dense node
-    * indices: `(ids, src, dst)`, `ids(i)` the id of index i. */
-  private def densePairs(pairs: DataFrame): (Array[Any], Array[Int], Array[Int]) = {
+  /** The `(s, d)` id pairs of a gated cut over dense node indices:
+    * `(ids, src, dst)`, `ids(i)` the id of index i. */
+  private def densePairs(cut: LocalGate.Cut): (Array[Any], Array[Int], Array[Int]) = {
     val nodes = new Interner
-    val rows = pairs.collect()
-    val src = rows.map(r => nodes(r.get(0)))
-    val dst = rows.map(r => nodes(r.get(1)))
+    val (s, d) = (cut.column("s"), cut.column("d"))
+    val src = cut.rows.map(r => nodes(s(r))).toArray
+    val dst = cut.rows.map(r => nodes(d(r))).toArray
     (nodes.ids.toArray, src, dst)
   }
 
@@ -1196,9 +1207,11 @@ object GraphAlgos {
       .withColumn("rn", row_number().over(wN))
       .withColumn("deg", count(lit(1)).over(
         org.apache.spark.sql.expressions.Window.partitionBy("s")))
-    val (adj, local) = LocalGate.cut(ranked, localThreshold,
+    val gate = LocalGate.cut(ranked, localThreshold,
       edges.schema("u").dataType == edges.schema("v").dataType &&
         LocalGate.stringableId(ranked.schema("s").dataType))
+    // admitted, the steps below plan over no rows and give the schema
+    val adj = gate.fold(identity, _.empty)
     val startFrame = starts
       .select(col(starts.columns.head).cast(adj.schema("s").dataType).as("start"))
     var walk = startFrame
@@ -1217,27 +1230,27 @@ object GraphAlgos {
       out = out.unionByName(walk)
     }
     val walks = out.select(col("start"), col("step"), col("cur").as("node"))
-    if (local) localWalks(adj, startFrame, steps, walks.schema) else walks
+    gate.fold(_ => walks, localWalks(_, startFrame, steps, walks.schema))
   }
 
   /** Driver twin of [[deterministicWalks]]' step joins over the gated
-    * ranked adjacency `(s, d, rn, deg)`: neighbor `rn` of each node is
-    * the row Spark ranked, and each step evaluates the join's md5 →
+    * ranked adjacency rows `(s, d, rn, deg)`: neighbor `rn` of each node
+    * is the row Spark ranked, and each step evaluates the join's md5 →
     * 48-bit → `pmod` arithmetic on the driver. Starts are deduplicated
     * on the driver (Java equality is Spark's for the admitted ids); a
     * null or neighborless `cur` ends its walk, as the inner join drops
     * it. */
-  private def localWalks(adj: DataFrame, startFrame: DataFrame, steps: Int,
+  private def localWalks(cut: LocalGate.Cut, startFrame: DataFrame, steps: Int,
       schema: StructType): DataFrame = {
-    val nbrs = adj.collect().groupBy(_.get(0))
-      .map { case (s, rows) =>
-        val ordered = new Array[Any](rows.head.getLong(3).toInt)
-        rows.foreach(r => ordered(r.getInt(2) - 1) = r.get(1))
-        s -> ordered
-      }
-    val rows = new java.util.ArrayList[Row]()
+    val (s, d, rn, deg) = (cut.column("s"), cut.column("d"), cut.column("rn"), cut.column("deg"))
+    val nbrs = cut.rows.groupBy(s).map { case (node, rows) =>
+      val ordered = new Array[Any](deg(rows.head).asInstanceOf[Long].toInt)
+      rows.foreach(r => ordered(rn(r).asInstanceOf[Int] - 1) = d(r))
+      node -> ordered
+    }
+    val rows = new scala.collection.immutable.VectorBuilder[InternalRow]
     for (start <- LocalGate.seeds(startFrame)) {
-      rows.add(Row(start, 0, start))
+      rows += row(start, 0, start)
       var cur = start
       var t = 1
       while (t <= steps && cur != null && nbrs.contains(cur)) {
@@ -1245,11 +1258,11 @@ object GraphAlgos {
         val hex = org.apache.commons.codec.digest.DigestUtils.md5Hex(
           s"$cur:$t:$start".getBytes(java.nio.charset.StandardCharsets.UTF_8))
         cur = next((java.lang.Long.parseLong(hex.substring(0, 12), 16) % next.length).toInt)
-        rows.add(Row(start, t, cur))
+        rows += row(start, t, cur)
         t += 1
       }
     }
-    adj.sparkSession.createDataFrame(rows, schema)
+    cut.answer(schema, rows.result())
   }
 
   /** Per-community modularity accounting for a partition `labels`

@@ -71,12 +71,13 @@ object Lineage {
 
   /** Frees the blocks a [[cut]] of `df` holds in local-checkpoint mode
     * (its persisted RDD, found through the lineage of `df`'s scan), once
-    * nothing reads `df` again. Reliable checkpoints keep their files;
-    * [[RoundGc]] owns those. */
+    * nothing reads `df` again, with no warning that its truncated
+    * lineage cannot be recomputed: nothing will ask it to be. Reliable
+    * checkpoints keep their files; [[RoundGc]] owns those. */
   def release(df: DataFrame): Unit = {
     def free(rdd: org.apache.spark.rdd.RDD[_]): Unit =
       if (rdd.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE)
-        rdd.unpersist(blocking = false)
+        org.apache.spark.sql.GraftLineageShim.free(rdd)
       else rdd.dependencies.foreach(d => free(d.rdd))
     df.queryExecution.analyzed.foreach {
       case r: org.apache.spark.sql.execution.LogicalRDD => free(r.rdd)

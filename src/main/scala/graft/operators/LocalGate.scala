@@ -1,9 +1,13 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Attribute, BoundReference, Cast}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.graft.SqlShim
 import org.apache.spark.sql.types._
 
 import graft.plans.LocalEval
@@ -24,45 +28,101 @@ import graft.plans.LocalEval
   *  - the frame its distributed loop starts from is first offered to
   *    [[graft.plans.LocalEval]]: when that frame's plan evaluates on the
   *    driver and its narrow inputs fit the broadcast byte budget, the
-  *    twin gets it as a local relation from at most one narrow job per
-  *    input (none for a file the session registry already holds), and
-  *    the shuffles below the cut never run;
+  *    twin gets its rows from at most one narrow job per input (none for
+  *    a file the session registry already holds), and the shuffles
+  *    below the cut never run; a cut over whole files alone is kept in
+  *    the registry too, so a later twin over the same unchanged files,
+  *    from any seed, starts from its rows with no job;
   *  - otherwise the frame is cut as before, counted in the cut's own
-  *    job; at or under the threshold it is collected into a local
-  *    relation and the cut's blocks are released at once;
+  *    job; at or under the threshold it is collected in one job and the
+  *    cut's blocks are released at once;
   *  - above the threshold the distributed loop runs on the cut frame.
-  * A twin therefore always reads its cut frame as a local relation,
-  * whose collect launches no job. */
+  * An admitted twin receives rows, not a frame ([[Cut]]): it reads them
+  * with the cut's attribute types, derives its output schema from its
+  * distributed plan over a relation with no rows ([[Cut.empty]]), and
+  * builds its answer once ([[Cut.answer]]), a local relation whose
+  * collect launches no job. No Catalyst rule walks the collected rows
+  * before that answer. */
 object LocalGate {
 
   /** Default `localThreshold` of every twin: rows of the cut frame. */
   val DefaultRows: Long = 1L << 20
 
+  /** An admitted cut: the cut frame's output attributes and its rows,
+    * values as Spark holds them (strings as `UTF8String`, dates and
+    * timestamps as numbers). */
+  final class Cut(val spark: SparkSession, val output: Seq[Attribute],
+      val rows: IndexedSeq[InternalRow]) {
+
+    private def ordinal(name: String): Int = {
+      val i = output.indexWhere(_.name == name)
+      require(i >= 0, s"no column $name in the cut ${output.map(_.name)}")
+      i
+    }
+
+    def dataType(name: String): DataType = output(ordinal(name)).dataType
+
+    /** Column `name` of a row. */
+    def column(name: String): InternalRow => Any = {
+      val i = ordinal(name)
+      val dt = output(i).dataType
+      r => r.get(i, dt)
+    }
+
+    /** Column `name` as Spark's `CAST(name AS DOUBLE)` gives it, null
+      * when null: a `java.lang.Double` or null. */
+    def double(name: String): InternalRow => Any = {
+      val i = ordinal(name)
+      val cast = Cast(BoundReference(i, output(i).dataType, output(i).nullable), DoubleType,
+        Some(spark.sessionState.conf.sessionLocalTimeZone))
+      r => cast.eval(r)
+    }
+
+    /** A frame with the cut's output and no rows. The twin's distributed
+      * plan built over it has the twin's output schema, nullability
+      * included, with no rows to plan over. */
+    def empty: DataFrame = SqlShim.ofRows(spark, LocalRelation(output))
+
+    /** The rows as a frame, for a distributed loop that runs past the
+      * twin. */
+    def frame: DataFrame = LocalEval.relation(spark, output, rows)
+
+    /** The twin's answer: `rows` under `schema`, one local relation. */
+    def answer(schema: StructType, rows: IndexedSeq[InternalRow]): DataFrame =
+      LocalEval.relation(spark, DataTypeUtils.toAttributes(schema), rows)
+  }
+
   /** Cut `frame` (the distributed loop's starting frame) and decide the
-    * gate: `(cut frame, twin admitted)`. The twin is admitted when the
-    * gate is on (`threshold > 0`), the operator's own precondition
-    * holds, and the cut frame measures at or under `threshold` rows;
-    * an admitted cut frame is a local relation. [[graft.plans.LocalEval]]
-    * answers small plans with at most one job per narrow input, and none
-    * for files the session registry holds. Otherwise the
-    * count comes from the cut's materializing job
-    * ([[Lineage.cutCounted]]; one count job more under a reliable
-    * checkpoint dir), and an admitted cut is collected in one job and
-    * released. A disabled gate or a failed precondition counts
-    * nothing. */
-  def cut(frame: DataFrame, threshold: Long, eligible: Boolean = true): (DataFrame, Boolean) =
+    * gate: `Right(rows)` when the twin is admitted, else `Left(cut
+    * frame)`. The twin is admitted when the gate is on (`threshold >
+    * 0`), the operator's own precondition holds, and the cut frame
+    * measures at or under `threshold` rows. [[graft.plans.LocalEval]]
+    * answers small plans with at most one job per narrow input, none
+    * for files or cuts the session registry holds. Otherwise the count
+    * comes from the cut's materializing job ([[Lineage.cutCounted]]; one
+    * count job more under a reliable checkpoint dir), and an admitted
+    * cut is collected in one job and released. A disabled gate or a
+    * failed precondition counts nothing. */
+  def cut(frame: DataFrame, threshold: Long, eligible: Boolean = true): Either[DataFrame, Cut] =
     if (threshold > 0 && eligible) {
-      val local = LocalEval(frame, threshold)
-      if (LocalEval.localRows(local).exists(_ <= threshold)) (local, true)
-      else {
-        val (cp, rows) = Lineage.cutCounted(frame)
-        if (rows <= threshold) {
-          val collected = LocalEval.collected(cp)
-          Lineage.release(cp)
-          (collected, true)
-        } else (cp, false)
+      val spark = frame.sparkSession
+      val output = frame.queryExecution.analyzed.output
+      LocalEval.cut(frame, threshold) match {
+        case Some(rows) => Right(new Cut(spark, output, rows))
+        case None =>
+          val (cp, n) = Lineage.cutCounted(frame)
+          if (n > threshold) Left(cp)
+          else {
+            val rows = LocalEval.collect(spark, cp.queryExecution.optimizedPlan, Int.MaxValue)
+            Lineage.release(cp)
+            Right(new Cut(spark, output, rows))
+          }
       }
-    } else (Lineage.cut(frame), false)
+    } else Left(Lineage.cut(frame))
+
+  /** A frame with `df`'s schema and no rows. */
+  def empty(df: DataFrame): DataFrame =
+    SqlShim.ofRows(df.sparkSession, LocalRelation(DataTypeUtils.toAttributes(df.schema)))
 
   /** Id types whose driver-side values are equal exactly when Spark
     * joins and groups them as equal: integral types, UTF8_BINARY
@@ -96,16 +156,23 @@ object LocalGate {
         StructType(Seq(StructField("one", IntegerType))))
       .select(lit(value).cast(dt).as("node"))
 
-  /** The values of a one-column seed frame, deduplicated on the driver
-    * (Spark's `distinct` would be a job of its own; on a
-    * [[literalNode]] seed this collect runs none). */
-  def seeds(frame: DataFrame): Seq[Any] = frame.collect().map(_.get(0)).distinct.toSeq
-
-  /** Minimum non-null value in Spark's ordering of `dt` — the order the
-    * SQL `min` aggregate uses (UTF-8 byte order for strings, not
-    * `String.compareTo`); None when every value is null. */
-  def sparkMin(values: Iterable[Any], dt: DataType): Option[Any] = {
-    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(dt)
-    values.iterator.filter(_ != null).minByOption(toCatalyst)(TypeUtils.getInterpretedOrdering(dt))
+  /** The values of a one-column seed frame as Spark holds them,
+    * deduplicated on the driver (Spark's `distinct` would be a job of
+    * its own). A seed frame that folds to a local relation, as a
+    * [[literalNode]] does, is read with no job; any other in one. */
+  def seeds(frame: DataFrame): Seq[Any] = {
+    val dt = frame.schema.head.dataType
+    val rows = frame.queryExecution.optimizedPlan match {
+      case r: LocalRelation if !r.isStreaming => r.data
+      case p => LocalEval.collect(frame.sparkSession, p, Int.MaxValue)
+    }
+    rows.map(_.get(0, dt)).distinct
   }
+
+  /** Minimum non-null value of Spark-held `values` in Spark's ordering
+    * of `dt` — the order the SQL `min` aggregate uses (UTF-8 byte order
+    * for strings, not `String.compareTo`); None when every value is
+    * null. */
+  def sparkMin(values: Iterable[Any], dt: DataType): Option[Any] =
+    values.iterator.filter(_ != null).minByOption(identity)(TypeUtils.getInterpretedOrdering(dt))
 }

@@ -57,29 +57,9 @@ object Matching {
         case _ => false
       })
     }
-    val (cutFrame, local) = LocalGate.cut(deduped, localThreshold, integral)
-    var cur = cutFrame
-    if (local) {
-      val rows = cur.collect().map(r => (
-        r.getAs[Number](0).longValue(), r.getAs[Number](1).longValue(),
-        r.getAs[Number](2).longValue()))
-      val taken = scala.collection.mutable.Set.empty[Long]
-      val out = Vector.newBuilder[(Long, Long, Long)]
-      rows.sortBy { case (u, v, w) => (-w, u, v) }.foreach { case (u, v, w) =>
-        if (!taken(u) && !taken(v)) { taken += u; taken += v; out += ((u, v, w)) }
-      }
-      val spark = edges.sparkSession
-      def re(dt: org.apache.spark.sql.types.DataType, x: Long): Any = dt match {
-        case org.apache.spark.sql.types.ByteType => x.toByte
-        case org.apache.spark.sql.types.ShortType => x.toShort
-        case org.apache.spark.sql.types.IntegerType => x.toInt
-        case _ => x
-      }
-      val ts = cur.schema.fields.map(_.dataType)
-      val res = out.result().map(e =>
-        org.apache.spark.sql.Row(re(ts(0), e._1), re(ts(1), e._2), re(ts(2), e._3)))
-      return spark.createDataFrame(
-        spark.sparkContext.parallelize(res, 1), cur.schema)
+    var cur = LocalGate.cut(deduped, localThreshold, integral) match {
+      case Right(cut) => return localGreedy(cut)
+      case Left(cp) => cp
     }
     var matched: DataFrame = null
     var round = 0
@@ -116,5 +96,19 @@ object Matching {
       edges.sparkSession.range(0)
         .select(lit(0L).as("u"), lit(0L).as("v"), lit(0L).as("w"))
     else matched
+  }
+
+  /** The sequential sort-and-take greedy over the gated cut's rows,
+    * each matched edge answered as its cut row, under the schema the
+    * rounds select over the cut's empty relation. */
+  private def localGreedy(cut: LocalGate.Cut): DataFrame = {
+    val (u, v, w) = (cut.column("u"), cut.column("v"), cut.column("w"))
+    val long: Any => Long = _.asInstanceOf[Number].longValue
+    val taken = scala.collection.mutable.Set.empty[Long]
+    val matched = cut.rows.sortBy(r => (-long(w(r)), long(u(r)), long(v(r)))).filter { r =>
+      val (a, b) = (long(u(r)), long(v(r)))
+      !taken(a) && !taken(b) && { taken += a; taken += b; true }
+    }
+    cut.answer(cut.empty.select("u", "v", "w").schema, matched)
   }
 }

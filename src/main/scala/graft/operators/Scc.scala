@@ -67,8 +67,10 @@ object Scc {
            org.apache.spark.sql.types.IntegerType => true
       case _ => false
     })
-    val (dedup, local) = LocalGate.cut(dedupPlan, localThreshold, integralIds)
-    if (local) return localTarjan(dedup, dedup.schema(0).dataType)
+    val dedup = LocalGate.cut(dedupPlan, localThreshold, integralIds) match {
+      case Right(cut) => return localTarjan(cut)
+      case Left(cp) => cp
+    }
 
     val gc = new Lineage.RoundGc(edges.sparkSession)
 
@@ -165,21 +167,26 @@ object Scc {
     }
     require(done || active.isEmpty,
       s"Scc: $maxOuter peel rounds exhausted before convergence")
-    if (settledParts.isEmpty)
-      dedup.select(col("s").as("node"), col("s").as("scc")).limit(0)
+    if (settledParts.isEmpty) unsettled(dedup).limit(0)
     else settledParts.reduce(_ unionByName _)
   }
+
+  /** Every node of the edge frame `e` labeled with itself: a settled
+    * part's shape. */
+  private def unsettled(e: DataFrame): DataFrame =
+    e.select(col("s").as("node"), col("s").as("scc"))
 
   /** Driver-side iterative Tarjan (explicit stack — no recursion, so a
     * 10^5-node chain cannot blow the JVM stack) over a size-gated edge
     * set. Components labeled with their minimum member, identical to
-    * the distributed fixpoint. */
-  private def localTarjan(dedup: DataFrame,
-      idType: org.apache.spark.sql.types.DataType): DataFrame = {
-    val spark = dedup.sparkSession
-    import spark.implicits._
-    val pairs = dedup.select(col("s").cast("long"), col("d").cast("long"))
-      .as[(Long, Long)].collect()
+    * the distributed fixpoint; ids keep the input id type, under the
+    * schema of a settled part over the cut's empty relation. */
+  private def localTarjan(cut: LocalGate.Cut): DataFrame = {
+    val (s, d) = (cut.column("s"), cut.column("d"))
+    val long: Any => Long = _.asInstanceOf[Number].longValue
+    val back: Long => Any =
+      if (cut.dataType("s") == org.apache.spark.sql.types.IntegerType) _.toInt else identity
+    val pairs = cut.rows.map(r => (long(s(r)), long(d(r))))
     val adj = scala.collection.mutable.HashMap
       .empty[Long, scala.collection.mutable.ArrayBuffer[Long]]
     val nodes = scala.collection.mutable.LinkedHashSet.empty[Long]
@@ -226,7 +233,8 @@ object Scc {
         }
       }
     }
-    compOf.toSeq.toDF("node", "scc")
-      .select(col("node").cast(idType), col("scc").cast(idType))
+    cut.answer(unsettled(cut.empty).schema, compOf.toIndexedSeq.map { case (k, c) =>
+      new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(Array(back(k), back(c)))
+    })
   }
 }

@@ -156,16 +156,15 @@ object AdvisedJoinHints extends Rule[LogicalPlan] {
     }
 }
 
-/** Session extension bundle: the self-join guard, advised-join and
-  * local-sort ([[SortLocalRelation]]) rules, the as-of join strategy and
-  * every native function of [[graft.Graft.functions]], so `spark.sql(...)`
-  * sees them from the first query. Activate with `--conf spark.sql.extensions=graft.plans.GraftExtensions`
+/** Session extension bundle: the self-join guard and advised-join
+  * rules, the as-of join strategy and every native function of
+  * [[graft.Graft.functions]], so `spark.sql(...)` sees them from the
+  * first query. Activate with `--conf spark.sql.extensions=graft.plans.GraftExtensions`
   * or `withExtensions(new GraftExtensions)` on a session builder. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(_ => SelfJoinMergeHint)
     ext.injectOptimizerRule(_ => AdvisedJoinHints)
-    ext.injectOptimizerRule(_ => SortLocalRelation)
     ext.injectPlannerStrategy(_ => AsOfJoinStrategy)
     graft.Graft.functions.foreach(ext.injectFunction)
   }

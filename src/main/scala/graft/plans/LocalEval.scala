@@ -69,11 +69,21 @@ import graft.operators.LocalGate
   * the budget and non-file inputs (checkpoints, cached frames) keep the
   * per-ask collect and are never stored.
   *
+  * A driver twin's cut ([[graft.operators.LocalGate.cut]]) is answered
+  * as rows, not as a frame ([[cut]]), and a cut whose only narrow
+  * inputs are whole file relations is stored too, keyed by its
+  * canonical optimized plan and the reader settings, for its files'
+  * fingerprints. Seeds never enter a cut, so a later twin over the
+  * unchanged files, from any source and with any key, starts from the
+  * stored rows: no job and no evaluation. Every answer computed here,
+  * and every twin's, becomes a frame one way ([[relation]]): a local
+  * relation marked analyzed, so no analyzer rule walks its rows.
+  *
   * The answer equals the distributed plan's: the same bound expressions
   * evaluate each row; grouping, partition and join keys compare as
   * `UnsafeRow` bytes after Spark's float normalization, as the hash
   * aggregate and hash join do; sorts are stable with Spark's
-  * `InterpretedOrdering`, as [[SortLocalRelation]] sorts; null join
+  * `InterpretedOrdering`, as the single-partition `SortExec` is; null join
   * keys never match. Row order is that of a one-partition run, so it
   * differs from the distributed answer only where Spark leaves order (or
   * `first`) undefined. The result has the analyzed plan's output
@@ -90,51 +100,87 @@ import graft.operators.LocalGate
 object LocalEval {
 
   def apply(df: DataFrame, threshold: Long = LocalGate.DefaultRows): DataFrame = {
-    val spark = df.sparkSession
-    val budget = spark.sessionState.conf.autoBroadcastJoinThreshold
     val plan = df.queryExecution.optimizedPlan
-    if (threshold <= 0 || budget <= 0 || plan.isStreaming ||
-        plan.isInstanceOf[LocalRelation]) return df
-    answer(df, plan, threshold, budget, wholeFiles = true)
+    if (plan.isInstanceOf[LocalRelation]) df
+    else evaluate(df.sparkSession, plan, threshold, keep = false)
+      .fold(df)(relation(df.sparkSession, df.queryExecution.analyzed.output, _))
   }
 
-  /** `df` answered locally, file relations read whole through the
+  /** The rows of a driver twin's cut frame `df` (in its analyzed
+    * output's order) when they evaluate on the driver within `threshold`
+    * rows, else None. A cut whose only narrow inputs are file relations
+    * read whole is itself kept in the session registry, keyed by its
+    * canonical optimized plan and the reader settings, for those files'
+    * fingerprints: a later cut of the same plan over the unchanged files
+    * is read from there, with no job and no evaluation. Cuts over pinned
+    * or checkpointed frames are never kept. */
+  private[graft] def cut(df: DataFrame, threshold: Long): Option[Rows] =
+    df.queryExecution.optimizedPlan match {
+      case r: LocalRelation if !r.isStreaming => Some(r.data.toIndexedSeq).filter(_.length <= threshold)
+      case plan => evaluate(df.sparkSession, plan, threshold, keep = true)
+    }
+
+  /** `rows` under `output` as one local relation marked analyzed, so
+    * the analyzer passes over it, alone or under any plan built on top:
+    * the one way an answer computed on the driver becomes a frame. */
+  def relation(spark: SparkSession, output: Seq[Attribute], rows: Rows): DataFrame =
+    SqlShim.ofAnalyzed(spark, LocalRelation(output, rows))
+
+  private def evaluate(spark: SparkSession, plan: LogicalPlan, threshold: Long,
+      keep: Boolean): Option[Rows] = {
+    val budget = spark.sessionState.conf.autoBroadcastJoinThreshold
+    if (threshold <= 0 || budget <= 0 || plan.isStreaming) None
+    else evaluate(spark, plan, threshold, budget, wholeFiles = true, keep)
+  }
+
+  /** `plan` answered locally, file relations read whole through the
     * registry when `wholeFiles`; a file relation over the row gate
     * retries with file scans collected as narrow inputs, when some
-    * filter or generator above one could bring it under the gate. */
-  private def answer(df: DataFrame, plan: LogicalPlan, threshold: Long, budget: Long,
-      wholeFiles: Boolean): DataFrame = {
-    val spark = df.sparkSession
-    val c = new Compiler(threshold, if (wholeFiles) budget else 0L, spark.sessionState.conf)
+    * filter or generator above one could bring it under the gate. With
+    * `keep`, a plan over whole files alone is also stored itself. */
+  private def evaluate(spark: SparkSession, plan: LogicalPlan, threshold: Long, budget: Long,
+      wholeFiles: Boolean, keep: Boolean): Option[Rows] = {
+    val conf = spark.sessionState.conf
+    val c = new Compiler(threshold, if (wholeFiles) budget else 0L, conf)
     val root = try Some(c.compile(plan)) catch { case Bail | NonFatal(_) => None }
-    if (root.isEmpty || !c.inputs.values.forall(_.plan.stats.sizeInBytes <= budget)) return df
+    if (root.isEmpty || !c.inputs.values.forall(_.plan.stats.sizeInBytes <= budget)) return None
+    val sc = spark.sparkContext
+    val entry = if (keep && plan.collectLeaves().forall(fileIndex(_).isDefined) &&
+        c.inputs.values.forall(_.file.isDefined))
+      Some((("cut", plan.canonicalized, reader(conf)), c.inputs.values.map(_.files).toSeq))
+    else None
+    val stored = entry.flatMap { case (key, files) => SessionRegistry.shared.get[Rows](sc, key, files) }
+    if (stored.isDefined) return stored.filter(_.length <= threshold)
     try {
+      val t0 = System.nanoTime()
       val cap = math.min(threshold + 1, Int.MaxValue.toLong).toInt
       for (in <- c.inputs.values) {
-        in.rows = in.file match {
-          case Some(key) => fileRows(spark, in.plan, key, cap, threshold)
-          case None => collect(spark, in.plan, cap)
-        }
+        in.rows = if (in.file.isDefined) fileRows(spark, in, cap, threshold)
+          else collect(spark, in.plan, cap)
         if (in.rows.length > threshold) throw Bail
       }
-      relation(spark, df.queryExecution.analyzed.output, root.get())
+      val rows = root.get()
+      for ((key, files) <- entry)
+        SessionRegistry.shared.put(sc, key, files, rows, footprint(rows), System.nanoTime() - t0)
+      Some(rows)
     } catch {
-      case FileOverGate if c.narrowsFile => answer(df, plan, threshold, budget, wholeFiles = false)
-      case Bail | FileOverGate | NonFatal(_) => df
+      case FileOverGate if c.narrowsFile =>
+        evaluate(spark, plan, threshold, budget, wholeFiles = false, keep)
+      case Bail | FileOverGate | NonFatal(_) => None
     }
   }
 
-  /** The rows of file relation `r`: the registry's when its files are
-    * unchanged, else one capped collect, stored unless over the gate. */
-  private def fileRows(spark: SparkSession, r: LogicalPlan, key: Any, cap: Int,
-      threshold: Long): Rows = {
+  /** The rows of whole file input `in`: the registry's when its files
+    * are unchanged, else one capped collect, stored unless over the
+    * gate. */
+  private def fileRows(spark: SparkSession, in: Input, cap: Int, threshold: Long): Rows = {
     val sc = spark.sparkContext
-    val files = SessionRegistry.fingerprint(fileIndex(r).get.allFiles())
-    SessionRegistry.shared.get[Rows](sc, key, files).getOrElse {
+    SessionRegistry.shared.get[Rows](sc, in.file.get, in.files).getOrElse {
       val t0 = System.nanoTime()
-      val rows = collect(spark, r, cap)
+      val rows = collect(spark, in.plan, cap)
       if (rows.length > threshold) throw FileOverGate
-      SessionRegistry.shared.put(sc, key, files, rows, footprint(rows), System.nanoTime() - t0)
+      SessionRegistry.shared.put(sc, in.file.get, in.files, rows, footprint(rows),
+        System.nanoTime() - t0)
       rows
     }
   }
@@ -155,29 +201,23 @@ object LocalEval {
     "spark.sql.parquet.int96AsTimestamp", "spark.sql.files.ignoreCorruptFiles",
     "spark.sql.files.ignoreMissingFiles")
 
-  /** Driver heap held by collected rows, about. */
-  private def footprint(rows: Rows): Long = rows.iterator.map {
-    case u: UnsafeRow => u.getSizeInBytes + 64L
-    case r => SizeEstimator.estimate(r)
-  }.sum + 16L * rows.length
+  private def reader(conf: SQLConf): Seq[String] = readerConf.map(conf.getConfString(_, null))
 
-  /** Rows of `df` when its optimized plan is a `LocalRelation` (no job). */
-  def localRows(df: DataFrame): Option[Int] = df.queryExecution.optimizedPlan match {
-    case r: LocalRelation => Some(r.data.size)
-    case _ => None
+  /** Driver heap held by rows, about: an `UnsafeRow` copy's own size,
+    * and for other rows (a cut's evaluated rows) the mean estimate of an
+    * even sample of at most 64 of them. */
+  private def footprint(rows: Rows): Long = {
+    val sample = rows.indices.by(math.max(1, rows.length / 64)).map(rows)
+      .filterNot(_.isInstanceOf[UnsafeRow])
+    val generic = if (sample.isEmpty) 0L else sample.map(SizeEstimator.estimate).sum / sample.length
+    rows.iterator.map {
+      case u: UnsafeRow => u.getSizeInBytes + 64L
+      case _ => generic
+    }.sum + 16L * rows.length
   }
 
-  /** `df` collected in one job into a `LocalRelation` with its output. */
-  def collected(df: DataFrame): DataFrame =
-    relation(df.sparkSession, df.queryExecution.analyzed.output,
-      collect(df.sparkSession, df.queryExecution.optimizedPlan, Int.MaxValue))
-
-  private def relation(spark: SparkSession, output: Seq[Attribute],
-      rows: IndexedSeq[InternalRow]): DataFrame =
-    SqlShim.ofRows(spark, LocalRelation(output, rows))
-
   /** One job: at most `cap` rows of each partition of `plan`, copied. */
-  private def collect(spark: SparkSession, plan: LogicalPlan, cap: Int): IndexedSeq[InternalRow] = {
+  private[graft] def collect(spark: SparkSession, plan: LogicalPlan, cap: Int): Rows = {
     val qe = SqlShim.ofRows(spark, plan).queryExecution
     SQLExecution.withNewExecutionId(qe, Some("LocalEval")) {
       ArraySeq.unsafeWrapArray(qe.toRdd.mapPartitions(_.take(cap).map(_.copy())).collect())
@@ -189,12 +229,14 @@ object LocalEval {
   /** A whole file relation's collect passed the row gate. */
   private object FileOverGate extends ControlThrowable
 
-  private type Rows = IndexedSeq[InternalRow]
+  private[graft] type Rows = IndexedSeq[InternalRow]
 
   /** A narrow input; `rows` is filled by its collect job, or from the
-    * registry under `file`, the key of a whole file relation. */
+    * registry under `file`, the key of a whole file relation, for the
+    * fingerprint of its `files`. */
   private final class Input(val plan: LogicalPlan, val file: Option[Any] = None) {
     var rows: Rows = IndexedSeq.empty
+    lazy val files: Seq[(String, Long, Long)] = SessionRegistry.fingerprint(fileIndex(plan).get.allFiles())
   }
 
   /** A running aggregate: rows in, current value out. */
@@ -295,7 +337,7 @@ object LocalEval {
         if (n.exists(o => o.isInstanceOf[Filter] || o.isInstanceOf[Generate])) narrowsFile = true
         if (n ne leaf(n)) operator(n)
         else {
-          val key = (n.canonicalized, readerConf.map(conf.getConfString(_, null)))
+          val key = (n.canonicalized, reader(conf))
           val in = inputs.getOrElseUpdate(key, new Input(n, Some(key)))
           () => in.rows
         }

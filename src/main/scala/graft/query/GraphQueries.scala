@@ -97,12 +97,12 @@ object GraphQueries {
     * steps (any direction), nearest first — Cypher's
     * `(a)-[*..k]-(b)` neighborhood. A CRM entity graph sits under the
     * [[graft.operators.LocalGate]] edge gate, so the hop rounds run
-    * as [[graft.operators.GraphAlgos.bfsHops]]' driver twin over a cut
-    * frame [[graft.plans.LocalEval]] builds from the edge file's rows,
-    * collected once per session (a counted cut and one collect when it
-    * declines), and the
-    * answer is sorted on the driver — not a fixed number of Spark jobs
-    * per hop. */
+    * as [[graft.operators.GraphAlgos.bfsHops]]' driver twin over the
+    * rows of its cut, which [[graft.plans.LocalEval]] evaluates from the
+    * edge file's rows, collected once per session, and keeps for the
+    * unchanged file, so a later ask from any entity starts from them (a
+    * counted cut and one collect when it declines); the answer is sorted
+    * on the driver — not a fixed number of Spark jobs per hop. */
   def neighborhood(edges: DataFrame, entityType: String, entityId: String,
       hops: Int = 2): DataFrame = answer {
     Graft.install(edges.sparkSession)
@@ -124,11 +124,11 @@ object GraphQueries {
     * Under the [[graft.operators.LocalGate]] edge gate (every CRM entity
     * graph) the bounded relaxation runs as
     * [[graft.operators.GraphAlgos.shortestPaths]]' driver twin — its
-    * pair edges from the edge file's rows, collected once per session
+    * pair edges evaluated from the edge file's rows, collected once per
+    * session, and kept for the unchanged file
     * ([[graft.plans.LocalEval]]; a counted cut and one collect when it
-    * declines), sorted on the
-    * driver, instead of a fixed number of Spark jobs per hop — with
-    * bit-identical distances. */
+    * declines), sorted on the driver, instead of a fixed number of Spark
+    * jobs per hop — with bit-identical distances. */
   def shortestPath(edges: DataFrame, fromType: String, fromId: String,
       to: Option[(String, String)] = None, maxHops: Int = 6): DataFrame = answer {
     Graft.install(edges.sparkSession)

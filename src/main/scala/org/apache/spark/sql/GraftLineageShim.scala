@@ -1,6 +1,14 @@
 package org.apache.spark.sql
 
-/** One `private[sql]` bridge, used only by graft.operators.Lineage.
+/** Two bridges to Spark internals, used only by graft.operators.Lineage.
+  *
+  * [[free]] drops an RDD's blocks the way `RDD.unpersist` does, minus
+  * the warning `unpersist` logs for a locally checkpointed RDD ("its
+  * lineage has been truncated and cannot be recomputed"): a driver twin
+  * frees its counted cut only after collecting it, when nothing reads
+  * that RDD again.
+  *
+  * [[resetStats]] is the `private[sql]` one:
   *
   * `Dataset.checkpoint()`/`localCheckpoint()` deliberately PRESERVE the
   * optimized plan's statistics on the resulting `LogicalRDD`
@@ -34,6 +42,11 @@ package org.apache.spark.sql
   * (reliable-checkpoint mode, late registration).
   */
 object GraftLineageShim {
+
+  /** Removes `rdd`'s blocks and forgets it as persisted, without
+    * blocking and without `unpersist`'s local-checkpoint warning. */
+  def free(rdd: org.apache.spark.rdd.RDD[_]): Unit =
+    rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
 
   /** Same rows, same truncated lineage, measured (or default) stats. */
   def resetStats(df: Dataset[Row]): Dataset[Row] = {

@@ -14,15 +14,24 @@ import org.apache.spark.sql.types.StructType
 /** Minimal bridge to the `private[sql]` members a third-party operator
   * library needs: turning a custom resolved [[LogicalPlan]] back into a
   * public DataFrame (the access path `Dataset.ofRows` gives Spark's own
-  * modules), the float normalization Spark's planner applies to
-  * grouping keys, and the parquet footer-to-schema conversion Spark's
-  * schema inference runs. Nothing else from the internal API surface is
-  * exposed.
+  * modules), marking such a plan analyzed, the float normalization
+  * Spark's planner applies to grouping keys, and the parquet
+  * footer-to-schema conversion Spark's schema inference runs. Nothing
+  * else from the internal API surface is exposed.
   */
 object SqlShim {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** [[ofRows]] of a plan that is already resolved, marked analyzed
+    * first: the analyzer returns an analyzed plan as it is and skips it
+    * inside every plan built on top, so none of its rules walks a local
+    * relation's rows. */
+  def ofAnalyzed(spark: SparkSession, plan: LogicalPlan): DataFrame = {
+    plan.setAnalyzed()
+    ofRows(spark, plan)
+  }
 
   /** `e` with NaN and -0.0 normalized, as Spark groups and joins on it. */
   def normalizeFloats(e: Expression): Expression =

@@ -84,7 +84,7 @@ class GraphQueriesSpec extends AnyFunSuite {
   test("entity-graph asks stay within their job budgets on the CRM fixture") {
     // The CRM entity graph sits under the LocalGate edge gate, so the
     // hop / relaxation / rank rounds run as driver twins, and the answer
-    // is sorted on the driver (SortLocalRelation). Budgets are the
+    // is sorted on the driver (LocalEval). Budgets are the
     // measured counts: the counted cut's two jobs (shuffle stage and the
     // counting result job) and one collect. The per-round loops take
     // 21, 48 and 15 jobs for the same asks, and a distributed sort of

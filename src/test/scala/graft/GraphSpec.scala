@@ -942,6 +942,13 @@ class GraphSpec extends AnyFunSuite {
       GraphAlgos.hyperballEstimates(GraphAlgos.hyperballRegisters(sd, 3, localThreshold = t)))
     jobs("deterministicWalks", 4)(t =>
       GraphAlgos.deterministicWalks(uv, starts, 4, localThreshold = t))
+    // a gated matching's answer is a local relation: collecting it runs
+    // no job
+    val matching = graft.operators.Matching.greedy(uv.withColumn("w", col("u") + col("v")))
+    assert(isLocal(matching))
+    var matched = 0
+    assert(TestSpark.jobsDuring { matched = matching.collect().length } == 0)
+    assert(matched > 0)
   }
 
   test("gated twins leave no persisted frame behind, on either cut path") {

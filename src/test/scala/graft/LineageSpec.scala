@@ -134,4 +134,40 @@ class LineageSpec extends AnyFunSuite {
     try check("reliable", 1)
     finally sc.setCheckpointDir(null)
   }
+
+  test("an admitted counted cut is released without the local-checkpoint warning") {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import graft.operators.LocalGate
+    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("graft-lineage-warn", null, null, true,
+        org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = lines.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val root = LogManager.getRootLogger.asInstanceOf[Logger]
+    root.addAppender(appender)
+    def warned(): Boolean = lines.toArray.exists(_.toString.contains("was locally checkpointed"))
+    try {
+      // an RDD-backed frame has no size estimate: LocalEval declines it,
+      // so the gate takes the counted cut, collects it and releases it
+      val schema = StructType(Seq(StructField("s", LongType), StructField("d", LongType)))
+      val frame = spark.createDataFrame(spark.sparkContext.parallelize(
+        (1L to 20L).map(i => Row(i, i + 1)), 2), schema)
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val cut = LocalGate.cut(frame, LocalGate.DefaultRows)
+      assert(cut.map(_.rows.length) == Right(20), cut)
+      assert(spark.sparkContext.getPersistentRDDs.keySet == before, "the cut kept its blocks")
+      assert(!warned(), lines)
+      // the appender sees the warning when a local checkpoint is unpersisted
+      val cp = frame.localCheckpoint()
+      cp.queryExecution.analyzed.collect {
+        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist()
+      }
+      assert(warned(), "the appender caught no warning")
+    } finally root.removeAppender(appender)
+  }
 }

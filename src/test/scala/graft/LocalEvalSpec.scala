@@ -189,4 +189,22 @@ class LocalEvalSpec extends AnyFunSuite {
     assert(TestSpark.jobsDuring { out = LocalEval(scan, threshold = 5) } == 1)
     assert(out eq scan, "a file input over the row gate")
   }
+
+  test("an answer frame, marked analyzed, joins and unions with itself as the distributed frame does") {
+    val (ra, _) = tables(21L, 50)
+    val a = local(ra, aSchema)
+    val plan = a.filter(col("k").isNotNull).groupBy("k", "g").agg(sum("d").as("t"))
+    val answered = LocalEval(plan)
+    assert(answered.queryExecution.analyzed.analyzed)
+    def asks(df: DataFrame): Seq[(String, DataFrame)] = Seq(
+      "self-join" -> df.as("l").join(df.as("r"), col("l.k") === col("r.k"))
+        .select(col("l.g"), col("r.g"), col("l.t"), col("r.t")),
+      "union" -> df.union(df.filter(col("t") > 0)),
+      "unionByName" -> df.unionByName(df.select("t", "k", "g")))
+    for (((name, got), (_, want)) <- asks(answered).zip(asks(plan))) {
+      assert(got.schema == want.schema, name)
+      assert(got.collect().map(_.toString).sorted.toSeq ==
+        want.collect().map(_.toString).sorted.toSeq, name)
+    }
+  }
 }

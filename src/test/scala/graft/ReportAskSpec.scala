@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.model.CrmSchema
+import graft.plans.SessionRegistry
 import graft.query.{GraphQueries => GQ, OwnershipQueries => OQ, ReportQueries => RQ,
   TemporalQueries => TQ}
 
@@ -11,8 +12,9 @@ import graft.query.{GraphQueries => GQ, OwnershipQueries => OQ, ReportQueries =>
   * a CRM state `Pipeline.run` loaded from the fixture: every ask answers
   * on the driver, collecting each file the first time any ask reads it;
   * a pass with other keys runs no job; the answers are the distributed
-  * plan's rows, and a later pass over the mix compiles no generated
-  * class. */
+  * plan's rows, a pass over the graph asks with new keys reads each
+  * twin's cut from the registry, and a later pass over the mix compiles
+  * no generated class. */
 class ReportAskSpec extends AnyFunSuite {
   import ReportAskSpec._
   private lazy val spark = TestSpark.spark
@@ -93,15 +95,31 @@ class ReportAskSpec extends AnyFunSuite {
       val jobs = TestSpark.jobsDuring(ask(otherKeys).collect())
       assert(jobs == 0, s"$name with other keys launched $jobs jobs")
     }
+    // the graph asks once more, with keys no pass used: each twin starts
+    // from its cut's registry entry, one hit and no build per ask
+    val graph = mix.filter(m => Set("neighborhood", "shortest_path", "rank")(m._1))
+    val before = SessionRegistry.shared.stats(spark.sparkContext)
+    val third = for ((name, ask, _) <- graph) yield {
+      var rows: Seq[String] = Nil
+      val jobs = TestSpark.jobsDuring { rows = ask(thirdKeys).collect().map(_.toString).toSeq }
+      assert(jobs == 0, s"$name with third keys launched $jobs jobs")
+      assert(rows.nonEmpty, s"$name with third keys returned nothing")
+      rows
+    }
+    val after = SessionRegistry.shared.stats(spark.sparkContext)
+    assert(after.builds == before.builds && after.hits == before.hits + 3, s"$before -> $after")
     val compiled = TestSpark.codegenCompilesDuring(mix.foreach(_._2(firstKeys).collect()))
     assert(compiled == 0, s"a third pass over the mix compiled $compiled classes")
     // with no broadcast budget every ask keeps its distributed plan
     val key = "spark.sql.autoBroadcastJoinThreshold"
-    val before = spark.conf.get(key)
+    val budget = spark.conf.get(key)
     spark.conf.set(key, "-1")
-    try for (((name, ask, _), rows) <- mix.zip(answers))
-      assert(rows.sorted == ask(firstKeys).collect().map(_.toString).toSeq.sorted, name)
-    finally spark.conf.set(key, before)
+    try {
+      for (((name, ask, _), rows) <- mix.zip(answers))
+        assert(rows.sorted == ask(firstKeys).collect().map(_.toString).toSeq.sorted, name)
+      for (((name, ask, _), rows) <- graph.zip(third))
+        assert(rows.sorted == ask(thirdKeys).collect().map(_.toString).toSeq.sorted, name)
+    } finally spark.conf.set(key, budget)
   }
 }
 
@@ -115,4 +133,5 @@ object ReportAskSpec {
     ("HUBSPOT_Deal", "d1"), "c1", 2, 10)
   private val otherKeys = Keys("bob@company2.com", "id:user_2", 5, 30, "c2", 5,
     ("HUBSPOT_Contact", "c1"), "c2", 1, 5)
+  private val thirdKeys = otherKeys.copy(node = "c3", hops = 3, k = 3)
 }

@@ -71,6 +71,27 @@ class SessionRegistrySpec extends AnyFunSuite {
     assert(contacts() != before, "the rewritten contacts file")
   }
 
+  test("rewriting the edges files in place drops the cut entry") {
+    import spark.implicits._
+    import graft.query.GraphQueries
+    val dir = s"${tmp("graft-registry-cut")}/edges"
+    def write(pairs: Seq[(String, String)]): Unit =
+      pairs.map { case (s, d) => ("HUBSPOT_Contact", s, "HUBSPOT_Company", d, "WORKS_AT") }
+        .toDF("src_type", "src_id", "dst_type", "dst_id", "rel_type")
+        .write.mode("overwrite").parquet(dir)
+    def ask() = GraphQueries.neighborhood(Graft.parquet(spark, dir), "HUBSPOT_Contact", "c1", 2)
+    write(Seq("c1" -> "x", "c2" -> "x"))
+    val first = rowsOf(ask())
+    val s0 = stats
+    assert(TestSpark.jobsDuring(assert(rowsOf(ask()) == first)) == 0)
+    assert(stats.hits == s0.hits + 1 && stats.builds == s0.builds)
+    write(Seq("c1" -> "y", "c3" -> "y", "c4" -> "z"))
+    val second = rowsOf(ask())
+    assert(second != first)
+    assert(second == Seq("[HUBSPOT_Company,y,1]", "[HUBSPOT_Contact,c1,0]",
+      "[HUBSPOT_Contact,c3,2]"))
+  }
+
   test("inputs over the byte budget or the row gate are not stored") {
     import spark.implicits._
     val dir = s"${tmp("graft-registry-gates")}/t"
