@@ -18,7 +18,8 @@ import graft.query.GraphTables
   */
 object Pipeline {
 
-  /** Pure transform stage: raw frames -> node tables + resolved edge table. */
+  /** Pure transform stage: raw frames -> node tables + resolved edges,
+    * held per relationship type ([[GraphTables]]). */
   def transformAll(
       usersRaw: DataFrame, contactsRaw: DataFrame, companiesRaw: DataFrame,
       dealsRaw: DataFrame, engagementsRaw: DataFrame, eventsRaw: DataFrame,
@@ -35,27 +36,34 @@ object Pipeline {
       eventsRaw.withColumn("campaign_id", col("emailCampaignId")))
     val pages = GT.webPages(clicks, forms, contacts)
 
-    val edges = Seq(
-      EdgeBuilder.worksAt(contactsRaw),
-      EdgeBuilder.associatedWith(contactsRaw, dealsRaw),
-      EdgeBuilder.belongsTo(dealsRaw),
-      EdgeBuilder.ownedBy(contacts, "HUBSPOT_Contact"),
-      EdgeBuilder.ownedBy(companies, "HUBSPOT_Company"),
-      EdgeBuilder.ownedBy(deals, "HUBSPOT_Deal"),
-      EdgeBuilder.activityEdges(engagementsRaw),
-      EdgeBuilder.performed(opens, "HUBSPOT_EmailOpenEvent"),
-      EdgeBuilder.performed(clicks, "HUBSPOT_EmailClickEvent"),
-      EdgeBuilder.forCampaign(opens, "HUBSPOT_EmailOpenEvent"),
-      EdgeBuilder.forCampaign(clicks, "HUBSPOT_EmailClickEvent"),
-      EdgeBuilder.clickedUrl(clicks),
-      EdgeBuilder.submittedBy(forms),
-      EdgeBuilder.onPage(forms),
-      EdgeBuilder.visited(contacts)
-    ).reduce(_.unionByName(_))
-    val resolved = EdgeBuilder.resolveEmailEdges(edges, contacts)
+    // One frame per relationship type, each built the first time it is
+    // read: an ask over one type plans its own builders, and only the
+    // full union (the load) plans them all. The two email-keyed parts
+    // resolve against one shared contact-email dimension.
+    lazy val emails = EdgeBuilder.contactEmails(contacts)
+    val edges = GraphTables.EdgeParts(
+      "WORKS_AT" -> (() => EdgeBuilder.worksAt(contactsRaw)),
+      "ASSOCIATED_WITH" -> (() => EdgeBuilder.associatedWith(contactsRaw, dealsRaw)),
+      "BELONGS_TO" -> (() => EdgeBuilder.belongsTo(dealsRaw)),
+      "OWNED_BY" -> (() => EdgeBuilder.ownedBy(contacts, "HUBSPOT_Contact")
+        .unionByName(EdgeBuilder.ownedBy(companies, "HUBSPOT_Company"))
+        .unionByName(EdgeBuilder.ownedBy(deals, "HUBSPOT_Deal"))),
+      "INVOLVES" -> (() => EdgeBuilder.involves(engagementsRaw)),
+      "RELATED_TO" -> (() => EdgeBuilder.relatedTo(engagementsRaw)),
+      "PERFORMED" -> (() => EdgeBuilder.resolveEmailEdges(
+        EdgeBuilder.performed(opens, "HUBSPOT_EmailOpenEvent")
+          .unionByName(EdgeBuilder.performed(clicks, "HUBSPOT_EmailClickEvent")),
+        emails, "src_id")),
+      "FOR_CAMPAIGN" -> (() => EdgeBuilder.forCampaign(opens, "HUBSPOT_EmailOpenEvent")
+        .unionByName(EdgeBuilder.forCampaign(clicks, "HUBSPOT_EmailClickEvent"))),
+      "CLICKED_URL" -> (() => EdgeBuilder.clickedUrl(clicks)),
+      "SUBMITTED_BY" -> (() => EdgeBuilder.resolveEmailEdges(
+        EdgeBuilder.submittedBy(forms), emails, "dst_id")),
+      "ON_PAGE" -> (() => EdgeBuilder.onPage(forms)),
+      "VISITED" -> (() => EdgeBuilder.visited(contacts)))
 
     GraphTables(users, contacts, companies, deals, activities, campaigns,
-      pages, opens, clicks, forms, resolved)
+      pages, opens, clicks, forms, edges)
   }
 
   private[graft] def fileExists(spark: SparkSession, path: String): Boolean = {

@@ -992,10 +992,20 @@ object TextCatalog {
           s"CAST(conv(substring(md5(concat(CAST(doc_id AS STRING), ':$sh')), 1, 12), 16, 10) AS BIGINT)")
         val withW = t(s, d, "documents").select(
           (col("doc_id") +: (0 to 10).map(i => w(i).as(s"w$i"))): _*)
-        val best10 = (0 to 9).map(i =>
-          struct(col(s"w$i").as("wt"), lit(i).as("sh"))).reduce((a, b) =>
-          when(a("wt") >= b("wt"), a).otherwise(b))
+        // argmax over shards 0-9, the lowest shard winning a tie: the
+        // greatest (weight, 9 - shard) pair, one linear expression (a
+        // pairwise `when(a.wt >= b.wt, a).otherwise(b)` fold names its
+        // left side twice, so its tree doubles per shard and its
+        // generated code fails to compile). Nulls as that fold treats
+        // them: a null weight of shards 1-9 ends on shard 9 (the first
+        // branch); a null w0 loses (a null field orders first).
+        val top = greatest((0 to 9).map(i =>
+          struct(col(s"w$i").as("wt"), lit(9 - i).as("rk"))): _*)
+        val best10 = when((1 to 9).map(i => col(s"w$i").isNull).reduce(_ || _),
+          struct(col("w9").as("wt"), lit(9).as("sh")))
+          .otherwise(struct(col("top.wt").as("wt"), (lit(9) - col("top.rk")).as("sh")))
         val assigned = withW
+          .withColumn("top", top)
           .withColumn("b10", best10)
           .withColumn("shard10", col("b10.sh"))
           .withColumn("moved", (col("w10") > col("b10.wt")).cast("long"))

@@ -7,6 +7,7 @@ import scala.util.control.{ControlThrowable, NonFatal}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression,
   DeclarativeAggregate, ImperativeAggregate}
 import org.apache.spark.sql.catalyst.planning.ExtractEquiJoinKeys
@@ -19,7 +20,8 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   PartitioningAwareFileIndex}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.graft.SqlShim
-import org.apache.spark.sql.types.DataType
+import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SizeEstimator
 
 import graft.operators.LocalGate
@@ -224,6 +226,30 @@ object LocalEval {
     }
   }
 
+  /** Spark's `lower` or `upper` over a UTF8_BINARY string, with the
+    * ASCII branch taken here: an ASCII value maps through
+    * `toLowerCaseAscii` / `toUpperCaseAscii`, any other goes to `fn`.
+    * Spark's own case mapping starts with this same branch (with ICU
+    * case mappings, `CollationAwareUTF8String.toLowerCase`/`toUpperCase`;
+    * without, `UTF8String.toLowerCase`/`toUpperCase`), so the bytes are
+    * the same; but the ICU path sits in a class whose static initializer
+    * title-cases every code point (1.2-1.3 s on a 4-core host), which
+    * an answer over ASCII text never starts (SCALE.md, `LocalEval`). */
+  private final case class AsciiCase(fn: UnaryExpression with String2StringExpression)
+      extends UnaryExpression with CodegenFallback {
+    private val upper = fn.isInstanceOf[Upper]
+    override def child: Expression = fn.child
+    override def dataType: DataType = fn.dataType
+    override protected def nullSafeEval(v: Any): Any = {
+      val s = v.asInstanceOf[UTF8String]
+      if (!s.isFullAscii) fn.convert(s)
+      else if (upper) s.toUpperCaseAscii
+      else s.toLowerCaseAscii
+    }
+    override protected def withNewChildInternal(c: Expression): AsciiCase =
+      AsciiCase(fn.withNewChildren(Seq(c)).asInstanceOf[UnaryExpression with String2StringExpression])
+  }
+
   private object Bail extends ControlThrowable
 
   /** A whole file relation's collect passed the row gate. */
@@ -295,7 +321,15 @@ object LocalEval {
         case _ => false
       }
       if (!e.deterministic || unevaluable) throw Bail
-      BindReferences.bindReference(e, input)
+      BindReferences.bindReference(e, input).transformUp {
+        case f @ (_: Lower | _: Upper) if utf8Binary(f.dataType) =>
+          AsciiCase(f.asInstanceOf[UnaryExpression with String2StringExpression])
+      }.asInstanceOf[E]
+    }
+
+    private def utf8Binary(t: DataType): Boolean = t match {
+      case st: StringType => st.collationId == StringType.collationId
+      case _ => false
     }
 
     private def projection(exprs: Seq[Expression], input: Seq[Attribute]): InternalRow => InternalRow = {
@@ -313,10 +347,8 @@ object LocalEval {
       r => b.eval(r) == true
     }
 
-    private def ordering(order: Seq[SortOrder], input: Seq[Attribute]): Ordering[InternalRow] = {
-      order.foreach(o => bind(o.child, input))
-      new InterpretedOrdering(order, input)
-    }
+    private def ordering(order: Seq[SortOrder], input: Seq[Attribute]): Ordering[InternalRow] =
+      new InterpretedOrdering(order.map(o => o.copy(child = bind(o.child, input))))
 
     /** `UnsafeRow` keys of `exprs` (floats normalized), so keys compare
       * by bytes as Spark's hash aggregate and hash join compare them. */

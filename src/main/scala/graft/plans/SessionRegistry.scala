@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.SparkSession
@@ -133,15 +133,17 @@ object SessionRegistry {
       .toSeq.sorted
 
   /** Fingerprint of the files under `paths`, listed recursively on the
-    * driver (no Spark job); a missing path lists nothing. */
-  def listing(spark: SparkSession, paths: Seq[String]): Seq[(String, Long, Long)] =
+    * driver (no Spark job); a missing path lists nothing. Listed with
+    * `listStatus`, not `listFiles`: the latter's `LocatedFileStatus`
+    * reads each file's permission, which Hadoop's local file system
+    * without native IO does by starting an `ls -ld` process per file. */
+  def listing(spark: SparkSession, paths: Seq[String]): Seq[(String, Long, Long)] = {
+    def files(fs: FileSystem, s: FileStatus): Seq[FileStatus] =
+      if (s.isDirectory) fs.listStatus(s.getPath).toSeq.flatMap(files(fs, _)) else Seq(s)
     fingerprint(paths.flatMap { p =>
       val path = new Path(p)
       val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(path)) Nil
-      else {
-        val it = fs.listFiles(path, true)
-        Iterator.continually(it).takeWhile(_.hasNext).map(_.next(): FileStatus).toSeq
-      }
+      if (!fs.exists(path)) Nil else files(fs, fs.getFileStatus(path))
     })
+  }
 }

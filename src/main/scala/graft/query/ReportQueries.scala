@@ -1,15 +1,68 @@
 package graft.query
 
+import scala.collection.concurrent.TrieMap
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** The transformed CRM graph as a bundle of node tables + one edge table
-  * (SURVEY.md §1.1). */
+/** The transformed CRM graph as a bundle of node tables and its edges
+  * (SURVEY.md §1.1).
+  *
+  * The edges are held in typed parts, one frame per relationship type
+  * ([[GraphTables.EdgeParts]]), each built the first time it is read:
+  * an ask over one type ([[edgesOf]]) plans that type's builders alone,
+  * and [[edges]], the union of every part, is built only when read (the
+  * load, `QuerySql`'s `edges` view, introspection). Tables built over
+  * one whole edge frame (`GraphTables(users, ..., forms, edges)`) read a
+  * type as that frame filtered on `rel_type`. */
 final case class GraphTables(
     users: DataFrame, contacts: DataFrame, companies: DataFrame,
     deals: DataFrame, activities: DataFrame, campaigns: DataFrame,
     webPages: DataFrame, opens: DataFrame, clicks: DataFrame,
-    forms: DataFrame, edges: DataFrame)
+    forms: DataFrame, edgeParts: GraphTables.EdgeParts) {
+
+  /** The edges of one relationship type. */
+  def edgesOf(relType: String): DataFrame = edgeParts.of(relType)
+
+  /** Every edge: the union of the typed parts. */
+  def edges: DataFrame = edgeParts.all
+}
+
+object GraphTables {
+
+  /** Tables over one whole edge frame. */
+  def apply(users: DataFrame, contacts: DataFrame, companies: DataFrame,
+      deals: DataFrame, activities: DataFrame, campaigns: DataFrame,
+      webPages: DataFrame, opens: DataFrame, clicks: DataFrame,
+      forms: DataFrame, edges: DataFrame): GraphTables =
+    GraphTables(users, contacts, companies, deals, activities, campaigns, webPages,
+      opens, clicks, forms, EdgeParts.whole(edges))
+
+  /** Edges as one frame per relationship type, each built by its
+    * builder on first read and kept; `all`, their union in builder
+    * order, is built on first read too. A type without a builder reads
+    * `all` filtered on `rel_type` (no rows). */
+  final class EdgeParts private (builders: ListMap[String, () => DataFrame],
+      whole: Option[DataFrame]) {
+    private val built = TrieMap.empty[String, DataFrame]
+
+    lazy val all: DataFrame = whole.getOrElse(builders.keys.map(of).reduce(_.unionByName(_)))
+
+    def of(relType: String): DataFrame = builders.get(relType) match {
+      case Some(build) => built.getOrElseUpdate(relType, build())
+      case None => all.filter(col("rel_type") === relType)
+    }
+  }
+
+  object EdgeParts {
+    def apply(builders: (String, () => DataFrame)*): EdgeParts =
+      new EdgeParts(ListMap(builders: _*), None)
+
+    /** Parts read from one frame holding every type. */
+    def whole(edges: DataFrame): EdgeParts = new EdgeParts(ListMap.empty, Some(edges))
+  }
+}
 
 /** One Scala function per reference report query
   * (SURVEY.md §3.2; reference reporting/queries.py:8-334 +
@@ -149,7 +202,7 @@ object ReportQueries {
 
   /** A7 — lifecycle funnel with conversion rate (README.md:314-336). */
   def conversionFunnel(g: GraphTables): DataFrame = answer {
-    val submits = g.edges.filter(col("rel_type") === "SUBMITTED_BY")
+    val submits = g.edgesOf("SUBMITTED_BY")
       .groupBy(col("dst_id").as("c_id")).agg(count(lit(1)).as("n_submissions"))
     g.contacts
       .join(submits, col("hubspot_id") === col("c_id"), "left")
@@ -196,7 +249,7 @@ object ReportQueries {
 
   /** O2 — top companies by associated deal value (README.md:341-346). */
   def topCompaniesByDealValue(g: GraphTables, k: Int): DataFrame = answer {
-    g.edges.filter(col("rel_type") === "BELONGS_TO")
+    g.edgesOf("BELONGS_TO")
       .select(col("src_id").as("deal_id"), col("dst_id").as("company_id"))
       .join(g.deals.select(col("hubspot_id").as("deal_id"), col("amount")), Seq("deal_id"))
       .groupBy("company_id")
@@ -210,8 +263,7 @@ object ReportQueries {
   /** J5 — contacts with no company (README.md:376-381). */
   def contactsWithoutCompany(g: GraphTables): DataFrame = answer {
     g.contacts.join(
-        g.edges.filter(col("rel_type") === "WORKS_AT")
-          .select(col("src_id").as("hubspot_id")),
+        g.edgesOf("WORKS_AT").select(col("src_id").as("hubspot_id")),
         Seq("hubspot_id"), "left_anti")
       .select(col("hubspot_id"), col("email"), col("first_name"), col("last_name"))
       .orderBy("hubspot_id")
@@ -359,8 +411,8 @@ object ReportQueries {
     // Activities reach contacts through (Activity)-[:INVOLVES]->(Contact);
     // PERFORMED edges point at email events, already covered by the typed
     // union below.
-    val performed = g.edges.filter(col("rel_type") === "INVOLVES" &&
-        col("dst_type") === "HUBSPOT_Contact")
+    val performed = g.edgesOf("INVOLVES")
+      .filter(col("dst_type") === "HUBSPOT_Contact")
       .select(col("dst_id").as("contact_id2"), col("src_id").as("activity_id"))
       .join(g.activities.select(col("hubspot_id").as("activity_id"), col("timestamp"),
         col("type"), col("details")), Seq("activity_id"))

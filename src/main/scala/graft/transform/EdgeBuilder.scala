@@ -4,15 +4,15 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.Clean._
 
-/** Builds the single edge table for all 15 relationship types
-  * (SURVEY.md §1.4; reference transformers/graph_transformer.py +
-  * loaders/neo4j_loader.py).
+/** Builds the edges of the 15 relationship builders, one frame per
+  * relationship type (SURVEY.md §1.4; reference
+  * transformers/graph_transformer.py + loaders/neo4j_loader.py).
   *
-  * Edges whose source is only known by email (PERFORMED, SUBMITTED_BY)
-  * carry `src_email`; [[resolveEmailEdges]] turns them into id-keyed
-  * edges with one broadcast hash join against the contact table — the
-  * reference's dict build+probe (graph_transformer.py:501-507) IS a
-  * broadcast hash join (SURVEY.md J2).
+  * Edges whose contact is only known by email (PERFORMED, SUBMITTED_BY)
+  * carry `src_email`; [[resolveEmailEdges]] turns each such part into
+  * id-keyed edges with one broadcast hash join against the contact-email
+  * dimension ([[contactEmails]]) — the reference's dict build+probe
+  * (graph_transformer.py:501-507) IS a broadcast hash join (SURVEY.md J2).
   */
 object EdgeBuilder {
 
@@ -68,20 +68,20 @@ object EdgeBuilder {
       .select(edge("BELONGS_TO", "HUBSPOT_Deal", col("id"),
         "HUBSPOT_Company", col("other_id")): _*)
 
-  /** (Activity)-[:INVOLVES]->(Contact|Company), (Activity)-[:RELATED_TO]->(Deal)
-    * (graph_transformer.py:334-368). */
-  def activityEdges(engagementsRaw: DataFrame): DataFrame = {
-    val inv1 = assoc(engagementsRaw, "contacts")
+  /** (Activity)-[:INVOLVES]->(Contact|Company) (graph_transformer.py:334-357). */
+  def involves(engagementsRaw: DataFrame): DataFrame =
+    assoc(engagementsRaw, "contacts")
       .select(edge("INVOLVES", "HUBSPOT_Activity", col("id"),
         "HUBSPOT_Contact", col("other_id")): _*)
-    val inv2 = assoc(engagementsRaw, "companies")
-      .select(edge("INVOLVES", "HUBSPOT_Activity", col("id"),
-        "HUBSPOT_Company", col("other_id")): _*)
-    val rel = assoc(engagementsRaw, "deals")
+      .unionByName(assoc(engagementsRaw, "companies")
+        .select(edge("INVOLVES", "HUBSPOT_Activity", col("id"),
+          "HUBSPOT_Company", col("other_id")): _*))
+
+  /** (Activity)-[:RELATED_TO]->(Deal) (graph_transformer.py:359-368). */
+  def relatedTo(engagementsRaw: DataFrame): DataFrame =
+    assoc(engagementsRaw, "deals")
       .select(edge("RELATED_TO", "HUBSPOT_Activity", col("id"),
         "HUBSPOT_Deal", col("other_id")): _*)
-    inv1.unionByName(inv2).unionByName(rel)
-  }
 
   /** (Contact)-[:PERFORMED]->(Email{Open,Click}Event) keyed by email
     * (graph_transformer.py:410-418, 444-452). */
@@ -123,9 +123,8 @@ object EdgeBuilder {
         "HUBSPOT_WebPage", col("first_page_seen"),
         props = map(lit("source"), coalesce(col("source"), lit("unknown")))): _*)
 
-  /** J2 — resolve email-keyed edges to contact ids with one hash join
-    * (replaces the reference's driver-side dict probe). PERFORMED uses
-    * the email as the SOURCE contact; SUBMITTED_BY as the DESTINATION.
+  /** The contact-email dimension email-keyed edges resolve against:
+    * one `(c_email, c_id)` row per email, the smallest contact id.
     *
     * The broadcast hint is gated on the optimizer's size estimate: a
     * forced `broadcast()` on a 1B-contact dim is a driver OOM, not a
@@ -135,25 +134,26 @@ object EdgeBuilder {
     * join is left unhinted, where AQE still upgrades to a broadcast at
     * runtime if the aggregated dim turns out small — that IS the graceful
     * degradation SCALE.md §2 claims. */
-  def resolveEmailEdges(edges: DataFrame, contactNodes: DataFrame): DataFrame = {
+  def contactEmails(contactNodes: DataFrame): DataFrame = {
     val dim = contactNodes.filter(col("email").isNotNull)
       .groupBy(col("email").as("c_email"))
       .agg(min("hubspot_id").as("c_id"))
     val conf = dim.sparkSession.sessionState.conf
     val fits = conf.autoBroadcastJoinThreshold > 0 &&
       dim.queryExecution.optimizedPlan.stats.sizeInBytes <= conf.autoBroadcastJoinThreshold
-    val emailToId = if (fits) broadcast(dim) else dim
-    val keyed = edges.filter(col("src_email").isNotNull)
-      .join(emailToId, col("src_email") === col("c_email"), "inner")
-    val performedResolved = keyed.filter(col("rel_type") === "PERFORMED")
-      .withColumn("src_id", col("c_id"))
-    val submittedResolved = keyed.filter(col("rel_type") === "SUBMITTED_BY")
-      .withColumn("dst_id", col("c_id"))
-    val untouched = edges.filter(col("src_email").isNull)
-    performedResolved.unionByName(submittedResolved)
-      .select(edges.columns.map(col): _*)
-      .unionByName(untouched)
+    if (fits) broadcast(dim) else dim
   }
+
+  /** J2 — resolve one email-keyed part (PERFORMED or SUBMITTED_BY) to
+    * contact ids with one hash join against `emails` ([[contactEmails]])
+    * (replaces the reference's driver-side dict probe). The contact's id
+    * lands in `endpoint`: `src_id` for PERFORMED, whose email names the
+    * source contact, `dst_id` for SUBMITTED_BY; edges whose email matches
+    * no contact are dropped. */
+  def resolveEmailEdges(part: DataFrame, emails: DataFrame, endpoint: String): DataFrame =
+    part.join(emails, col("src_email") === col("c_email"), "inner")
+      .withColumn(endpoint, col("c_id"))
+      .select(part.columns.map(col): _*)
 
   /** J6 — keep only edges whose endpoints exist (bulk existence probe,
     * temporal_loader.py:268-311): two semi-joins against the node-id union. */

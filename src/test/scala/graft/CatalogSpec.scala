@@ -46,6 +46,56 @@ class CatalogSpec extends AnyFunSuite {
     }
   }
 
+  test("x_rendezvous_shards compiles its generated code and keeps the fold's rows") {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    import org.apache.spark.sql.functions._
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("graft-compile-errors", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = {
+        val m = e.getMessage.getFormattedMessage
+        if (m.contains("Failed to compile")) failures.add(m)
+      }
+    }
+    appender.start()
+    val root = LogManager.getRootLogger.asInstanceOf[Logger]
+    def failed(body: => Unit): Int = {
+      failures.clear()
+      root.addAppender(appender)
+      try body finally root.removeAppender(appender)
+      failures.size
+    }
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).toSeq
+    var got = Seq.empty[String]
+    assert(failed { got = rows(SparkEntry.queries("x_rendezvous_shards")(spark, dir)) } == 0)
+    // the pairwise fold it replaces, which the appender sees fail
+    var want = Seq.empty[String]
+    assert(failed {
+      def w(sh: Int) = expr(
+        s"CAST(conv(substring(md5(concat(CAST(doc_id AS STRING), ':$sh')), 1, 12), 16, 10) AS BIGINT)")
+      val withW = catalog.Q.t(spark, dir, "documents").select(
+        (col("doc_id") +: (0 to 10).map(i => w(i).as(s"w$i"))): _*)
+      val best10 = (0 to 9).map(i =>
+        struct(col(s"w$i").as("wt"), lit(i).as("sh"))).reduce((a, b) =>
+        when(a("wt") >= b("wt"), a).otherwise(b))
+      val assigned = withW.withColumn("b10", best10)
+        .withColumn("shard10", col("b10.sh"))
+        .withColumn("moved", (col("w10") > col("b10.wt")).cast("long"))
+      val tot = assigned.agg(count(lit(1)).as("__n"), sum("moved").as("__moved"))
+      want = rows(assigned.groupBy("shard10")
+        .agg(count(lit(1)).as("n_docs"), sum("moved").as("n_moved_out"))
+        .crossJoin(tot)
+        .withColumn("moved_ppm_total", expr("1000000 * __moved div __n"))
+        .select("shard10", "n_docs", "n_moved_out", "moved_ppm_total")
+        .orderBy("shard10"))
+    } > 0)
+    assert(got == want)
+    assert(got.size == 10)
+  }
+
   test("graph catalog queries build without driver-scalar pre-fetch jobs") {
     // Round-7 verdict #3: five GraphCatalog queries used to fetch a
     // source node or avg-weight threshold with a separate

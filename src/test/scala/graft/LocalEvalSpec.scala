@@ -150,6 +150,40 @@ class LocalEvalSpec extends AnyFunSuite {
     assertSame("parquet, from the registry", both(1L), ordered = false)
   }
 
+  test("lower and upper: ASCII and other strings give the distributed plan's rows") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-localeval-case").toString
+    Seq("Alice@Company1.COM", "bob", "", null, "\u0130stanbul", "Stra\u00dfe", "\u03a3\u0391\u03a3",
+      "mixed \u00c0b \u03a3\u03c3 Z", "\u01c5", "\uD83D\uDE00 Hi", "\ufb00", " MiXeD ascii 123 ")
+      .toDF("s").write.parquet(s"$dir/s")
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val (budget, icu) = (spark.conf.get(key), "spark.sql.icu.caseMappings.enabled")
+    val icuBefore = spark.conf.getOption(icu)
+    try {
+      for (icuOn <- Seq("true", "false")) {
+        spark.conf.set(icu, icuOn)
+        val df = Graft.parquet(spark, s"$dir/s")
+        val asks = Seq(
+          "project" -> df.select(col("s"), lower(col("s")), upper(col("s")),
+            upper(lower(col("s"))), length(lower(col("s")))),
+          "filter" -> df.filter(lower(col("s")) === "stra\u00dfe" || upper(col("s")) === "BOB"),
+          "grouped" -> df.groupBy(lower(col("s")).as("l")).agg(count(lit(1)).as("n")),
+          "sorted" -> df.orderBy(upper(col("s")).asc_nulls_first, col("s")),
+          "collated" -> df.select(lower(collate(col("s"), "UTF8_LCASE")).as("l")))
+        for ((name, ask) <- asks) {
+          val answered = LocalEval(ask)
+          assert(answered.queryExecution.optimizedPlan.isInstanceOf[LocalRelation], name)
+          val got = answered.collect().map(_.toString).toSeq
+          spark.conf.set(key, "-1")
+          val want = try LocalEval(ask).collect().map(_.toString).toSeq
+            finally spark.conf.set(key, budget)
+          if (name == "sorted") assert(got == want, s"icu $icuOn: $name")
+          else assert(got.sorted == want.sorted, s"icu $icuOn: $name")
+        }
+      }
+    } finally icuBefore.fold(spark.conf.unset(icu))(spark.conf.set(icu, _))
+  }
+
   test("unsupported plans and inputs over either gate come back unchanged with no job") {
     val (ra, rb) = tables(11L, 50)
     val (a, b) = (local(ra, aSchema), local(rb, bSchema))

@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model.CrmSchema
 import graft.plans.SessionRegistry
@@ -43,13 +43,7 @@ class ReportAskSpec extends AnyFunSuite {
     * earlier ask has read (the session registry serves the rest). */
   private def asks(): Seq[(String, Keys => DataFrame, Int)] = {
     val (raw, state) = dirs
-    def json(n: String, s: org.apache.spark.sql.types.StructType) =
-      spark.read.schema(s).json(s"$raw/$n.json")
-    val g = Pipeline.transformAll(json("users", CrmSchema.users),
-      json("contacts", CrmSchema.envelope), json("companies", CrmSchema.envelope),
-      json("deals", CrmSchema.envelope), json("engagements", CrmSchema.envelope),
-      json("email_events", CrmSchema.emailEvents),
-      json("form_submissions", CrmSchema.formSubmissions))
+    val g = graph(raw)
     // state tables read with their footer schemas: no schema job
     val cur = Pipeline.currentTable(spark, state, "contacts").get
     val hist = Pipeline.historyTable(spark, state, "contacts").get
@@ -121,9 +115,62 @@ class ReportAskSpec extends AnyFunSuite {
         assert(rows.sorted == ask(thirdKeys).collect().map(_.toString).toSeq.sorted, name)
     } finally spark.conf.set(key, budget)
   }
+
+  test("top companies plans the BELONGS_TO part alone: no union, deals and companies only") {
+    import org.apache.spark.sql.catalyst.plans.logical.Union
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val budget = spark.conf.get(key)
+    spark.conf.set(key, "-1") // the ask keeps its distributed plan
+    try {
+      val plan = RQ.topCompaniesByDealValue(graph(dirs._1), 10).queryExecution.optimizedPlan
+      assert(plan.collect { case u: Union => u }.isEmpty, plan.toString)
+      val files = plan.collectLeaves().map {
+        case LogicalRelation(r: HadoopFsRelation, _, _, _, _) =>
+          r.location.rootPaths.map(_.getName).mkString(",")
+        case other => other.nodeName
+      }.toSet
+      assert(files == Set("deals.json", "companies.json"), plan.toString)
+    } finally spark.conf.set(key, budget)
+  }
+
+  test("answering contact_owner on the driver never starts Spark's ICU case-mapping helper") {
+    // a JVM of its own, so no earlier test has loaded the class; the
+    // same JVM's distributed `lower` afterwards shows the log sees it
+    val javaBin = s"${System.getProperty("java.home")}/bin/java"
+    val opens = java.lang.management.ManagementFactory.getRuntimeMXBean.getInputArguments
+      .toArray.map(_.toString).filter(_.startsWith("--add-opens"))
+    val cmd = Seq(javaBin, "-Xmx512m", "-Xlog:class+init=info") ++ opens ++
+      Seq("-cp", System.getProperty("java.class.path"), "graft.IcuColdCheck", dirs._1)
+    val out = new StringBuilder
+    val code = scala.sys.process.Process(cmd).!(scala.sys.process.ProcessLogger(
+      l => out.append(l).append('\n'), _ => ()))
+    val log = out.toString
+    assert(code == 0, log)
+    val helper = "Initializing 'org/apache/spark/sql/catalyst/util/CollationAwareUTF8String'"
+    val answered = log.indexOf("answered: [Alice,A,alice@company1.com,john.doe@example.com")
+    assert(answered >= 0, log.linesIterator.filter(_.contains("answered")).mkString("\n"))
+    assert(log.indexOf("Initializing 'org/apache/spark/unsafe/types/UTF8String'") >= 0)
+    val init = log.indexOf(helper)
+    assert(init > answered, s"the helper was initialized before the answer (at $init)")
+    assert(init < log.indexOf("distributed lower done"))
+  }
 }
 
 object ReportAskSpec {
+  /** The CRM graph over the raw JSON files under `raw`, as the `Report`
+    * CLI builds it. */
+  def graph(raw: String): graft.query.GraphTables = {
+    val spark = SparkSession.active
+    def json(n: String, s: org.apache.spark.sql.types.StructType) =
+      spark.read.schema(s).json(s"$raw/$n.json")
+    Pipeline.transformAll(json("users", CrmSchema.users),
+      json("contacts", CrmSchema.envelope), json("companies", CrmSchema.envelope),
+      json("deals", CrmSchema.envelope), json("engagements", CrmSchema.envelope),
+      json("email_events", CrmSchema.emailEvents),
+      json("form_submissions", CrmSchema.formSubmissions))
+  }
+
   /** The keys one pass of the mix asks about. */
   private final case class Keys(email: String, owner: String, top: Int, days: Int,
       entity: String, changes: Int, relEntity: (String, String), node: String, hops: Int,
@@ -134,4 +181,22 @@ object ReportAskSpec {
   private val otherKeys = Keys("bob@company2.com", "id:user_2", 5, 30, "c2", 5,
     ("HUBSPOT_Contact", "c1"), "c2", 1, 5)
   private val thirdKeys = otherKeys.copy(node = "c3", hops = 3, k = 3)
+}
+
+/** Run by [[ReportAskSpec]] in a JVM of its own, logging class
+  * initialization: answers `contact_owner` over the raw files under
+  * `args(0)` on the driver, then evaluates a `lower` in a Spark job. */
+object IcuColdCheck {
+  def main(args: Array[String]): Unit = {
+    val spark = SparkSession.builder().master("local[1]").appName("icu-cold")
+      .config("spark.ui.enabled", "false").getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    val rows = OQ.contactOwner(ReportAskSpec.graph(args(0)), "alice@company1.com").collect()
+    println(s"answered: ${rows.mkString(";")}")
+    System.out.flush()
+    spark.range(1).select(lower(concat(lit("A"), col("id").cast("string")))).collect()
+    println("distributed lower done")
+    System.out.flush()
+    spark.stop()
+  }
 }

@@ -151,6 +151,26 @@ class SessionRegistrySpec extends AnyFunSuite {
       bytes = 40, buildSeconds = r.stats(sc).buildSeconds))
   }
 
+  test("a listing of nested directories is the fingerprint of a listFiles walk") {
+    import spark.implicits._
+    val root = tmp("graft-registry-listing")
+    (1 to 12).map(i => (i % 3, i % 2, s"v$i")).toDF("a", "b", "s")
+      .write.partitionBy("a", "b").parquet(s"$root/t")
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$root/t/empty/deeper"))
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$root/top.txt"), "x".getBytes)
+    def walk(p: String) = {
+      val path = new org.apache.hadoop.fs.Path(p)
+      val it = path.getFileSystem(sc.hadoopConfiguration).listFiles(path, true)
+      SessionRegistry.fingerprint(Iterator.continually(it).takeWhile(_.hasNext)
+        .map(_.next(): org.apache.hadoop.fs.FileStatus).toSeq)
+    }
+    val listed = SessionRegistry.listing(spark, Seq(root))
+    assert(listed.size > 6, listed)
+    assert(listed == walk(root))
+    assert(SessionRegistry.listing(spark, Seq(s"$root/top.txt")) == walk(s"$root/top.txt"))
+    assert(SessionRegistry.listing(spark, Seq(s"$root/t", s"$root/none")) == walk(s"$root/t"))
+  }
+
   test("stopping the context drops that context's entries") {
     val javaBin = s"${System.getProperty("java.home")}/bin/java"
     val opens = java.lang.management.ManagementFactory.getRuntimeMXBean.getInputArguments

@@ -86,15 +86,12 @@ class TransformSpec extends AnyFunSuite {
   }
 
   test("edges: email-keyed PERFORMED / SUBMITTED_BY resolve via broadcast join") {
-    val performed = EdgeBuilder.performed(opens, "HUBSPOT_EmailOpenEvent")
-      .unionByName(EdgeBuilder.performed(clicks, "HUBSPOT_EmailClickEvent"))
-    val submitted = EdgeBuilder.submittedBy(forms)
-    val all = performed.unionByName(submitted)
-    val resolved = EdgeBuilder.resolveEmailEdges(all, contacts)
-    val p = resolved.filter(col("rel_type") === "PERFORMED")
+    val emails = EdgeBuilder.contactEmails(contacts)
+    val p = EdgeBuilder.resolveEmailEdges(EdgeBuilder.performed(opens, "HUBSPOT_EmailOpenEvent")
+      .unionByName(EdgeBuilder.performed(clicks, "HUBSPOT_EmailClickEvent")), emails, "src_id")
     assert(p.count() == 2)
     assert(p.filter(col("src_id") === "c1").count() == 2) // both alice events
-    val s = resolved.filter(col("rel_type") === "SUBMITTED_BY")
+    val s = EdgeBuilder.resolveEmailEdges(EdgeBuilder.submittedBy(forms), emails, "dst_id")
     assert(s.count() == 2)
     assert(s.filter(col("dst_id") === "c2").count() == 1) // bob's form, via values
   }
@@ -106,17 +103,67 @@ class TransformSpec extends AnyFunSuite {
     // be byte-identical to the hinted path.
     val performed = EdgeBuilder.performed(opens, "HUBSPOT_EmailOpenEvent")
       .unionByName(EdgeBuilder.performed(clicks, "HUBSPOT_EmailClickEvent"))
-    val all = performed.unionByName(EdgeBuilder.submittedBy(forms))
     val key = "spark.sql.autoBroadcastJoinThreshold"
     val prev = spark.conf.get(key)
     try {
       spark.conf.set(key, "1")
-      val resolved = EdgeBuilder.resolveEmailEdges(all, contacts)
-      assert(!resolved.queryExecution.analyzed.toString.contains("ResolvedHint"))
-      assert(resolved.filter(col("rel_type") === "PERFORMED").count() == 2)
-      assert(resolved.filter(col("rel_type") === "SUBMITTED_BY" &&
-        col("dst_id") === "c2").count() == 1)
+      val emails = EdgeBuilder.contactEmails(contacts)
+      val p = EdgeBuilder.resolveEmailEdges(performed, emails, "src_id")
+      val s = EdgeBuilder.resolveEmailEdges(EdgeBuilder.submittedBy(forms), emails, "dst_id")
+      assert(!p.queryExecution.analyzed.toString.contains("ResolvedHint"))
+      assert(!s.queryExecution.analyzed.toString.contains("ResolvedHint"))
+      assert(p.count() == 2)
+      assert(s.filter(col("dst_id") === "c2").count() == 1)
     } finally spark.conf.set(key, prev)
+  }
+
+  test("edges: the typed parts hold the rows of the one resolved union, type by type") {
+    import graft.query.{GraphTables, ReportQueries => RQ}
+    val (cr, dr, er) = (CrmFixture.contactsRaw(spark), CrmFixture.dealsRaw(spark),
+      CrmFixture.engagementsRaw(spark))
+    val g = Pipeline.transformAll(CrmFixture.usersRaw(spark), cr,
+      CrmFixture.companiesRaw(spark), dr, er, CrmFixture.emailEventsRaw(spark),
+      CrmFixture.formsRaw(spark))
+    // the table as the transform built it before the typed parts: the
+    // union of all 15 builders, email-keyed edges resolved in one join
+    val all = Seq(EdgeBuilder.worksAt(cr), EdgeBuilder.associatedWith(cr, dr),
+      EdgeBuilder.belongsTo(dr), EdgeBuilder.ownedBy(g.contacts, "HUBSPOT_Contact"),
+      EdgeBuilder.ownedBy(g.companies, "HUBSPOT_Company"),
+      EdgeBuilder.ownedBy(g.deals, "HUBSPOT_Deal"),
+      EdgeBuilder.involves(er).unionByName(EdgeBuilder.relatedTo(er)),
+      EdgeBuilder.performed(g.opens, "HUBSPOT_EmailOpenEvent"),
+      EdgeBuilder.performed(g.clicks, "HUBSPOT_EmailClickEvent"),
+      EdgeBuilder.forCampaign(g.opens, "HUBSPOT_EmailOpenEvent"),
+      EdgeBuilder.forCampaign(g.clicks, "HUBSPOT_EmailClickEvent"),
+      EdgeBuilder.clickedUrl(g.clicks), EdgeBuilder.submittedBy(g.forms),
+      EdgeBuilder.onPage(g.forms), EdgeBuilder.visited(g.contacts)).reduce(_.unionByName(_))
+    val dim = g.contacts.filter(col("email").isNotNull)
+      .groupBy(col("email").as("c_email")).agg(min("hubspot_id").as("c_id"))
+    val keyed = all.filter(col("src_email").isNotNull)
+      .join(dim, col("src_email") === col("c_email"), "inner")
+    val union = keyed.filter(col("rel_type") === "PERFORMED").withColumn("src_id", col("c_id"))
+      .unionByName(keyed.filter(col("rel_type") === "SUBMITTED_BY")
+        .withColumn("dst_id", col("c_id")))
+      .select(all.columns.map(col): _*)
+      .unionByName(all.filter(col("src_email").isNull))
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).toSeq.sorted
+    assert(g.edges.columns.toSeq == union.columns.toSeq)
+    assert(rows(g.edges) == rows(union))
+    val types = union.select("rel_type").distinct().collect().map(_.getString(0)).toSeq
+    assert(types.size == 12)
+    for (t <- types) {
+      assert(rows(g.edgesOf(t)) == rows(g.edges.filter(col("rel_type") === t)), t)
+      assert(g.edgesOf(t) eq g.edgesOf(t), s"$t is built once")
+    }
+    assert(rows(g.edgesOf("NO_SUCH_TYPE")).isEmpty)
+    // tables over one whole edge frame read a type as a filter of it
+    val whole = GraphTables(g.users, g.contacts, g.companies, g.deals, g.activities,
+      g.campaigns, g.webPages, g.opens, g.clicks, g.forms, union)
+    assert(whole.edges eq union)
+    for (t <- types)
+      assert(rows(whole.edgesOf(t)) == rows(union.filter(col("rel_type") === t)), t)
+    assert(rows(RQ.contactsWithoutCompany(whole)) == rows(RQ.contactsWithoutCompany(g)))
+    assert(rows(RQ.topCompaniesByDealValue(whole, 5)) == rows(RQ.topCompaniesByDealValue(g, 5)))
   }
 
   test("edge validation keeps only edges with both endpoints present") {
